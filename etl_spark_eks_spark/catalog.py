@@ -2,8 +2,11 @@
 
 The reference's "catalog" is a Glue database + crawler + a fixed-schema
 external table over an S3 parquet prefix (reference: addons.tf:285-365).
-Spark-native equivalent: ``spark.read.parquet`` per table + temp views,
-so both the DataFrame API and ``spark.sql`` see the same names — the
+The crawler infers each table's schema once and every query reuses it.
+Spark-native equivalent: each table's schema is resolved once per file
+fingerprint (:func:`table_schema`), and every read is
+``spark.read.schema(s).parquet(path)``, which starts no Spark job; temp
+views give the DataFrame API and ``spark.sql`` the same names — the
 same names DuckDB pre-registers for the oracle.
 
 Scale note: at 100 TB these would be real catalog tables (partitioned,
@@ -18,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_spark_eks_spark.sources.parquet_io import fixture_fingerprint
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -39,24 +44,66 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan (SURVEY §2 A1): schema from footers, multi-file capable.
+# Session confs that change the type Spark infers for a fixture column
+# (the timestamp columns). Their values are part of the schema memo's
+# key, so a session that sets one differently gets its own inference,
+# never another session's types.
+_TYPE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark 4 refuses to
-    read natively; we read it as int64 nanos (legacy conf) and truncate
-    to microseconds with integer DIV — bit-identical to DuckDB's own
-    ns->µs truncation, so oracle comparisons stay exact. (Float division
-    would lose precision: 2024 epoch-nanos ≈ 1.7e18 > 2^53.)
+# (path, file fingerprint, type confs) -> inferred schema. Only the
+# StructType is kept, never a DataFrame: a shared DataFrame repeats its
+# attribute ids across self-joins, which makes join columns ambiguous.
+# Two callers racing on one key both infer the same schema; either
+# write is correct.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The table's parquet schema, inferred from its footers on the first
+    read and remembered per (path, file fingerprint, type-changing session
+    confs). Inference is one Spark job; a remembered schema costs none.
+    A table rewritten in place changes its fingerprint and is inferred
+    again."""
+    path = table_path(sf_dir, name)
+    key = (
+        path,
+        fixture_fingerprint(sf_dir, name),
+        tuple(spark.conf.get(k) for k in _TYPE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's raw parquet scan, columns as stored, read with the
+    remembered schema (no inference job)."""
+    return spark.read.schema(table_schema(spark, sf_dir, name)).parquet(
+        table_path(sf_dir, name)
+    )
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Parquet scan (SURVEY §2 A1): schema from footers, resolved once per
+    file fingerprint, multi-file capable.
+
+    ``events.ts`` may be parquet TIMESTAMP(NANOS), which Spark 4 refuses
+    to read natively; the engine conf reads it as int64 nanos
+    (``nanosAsLong``) and we truncate to microseconds with integer DIV —
+    bit-identical to DuckDB's own ns->µs truncation, so oracle
+    comparisons stay exact. (Float division would lose precision: 2024
+    epoch-nanos ≈ 1.7e18 > 2^53.)
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    df = scan_table(spark, sf_dir, name)
+    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
 
 
 def widen(df: DataFrame, partitions: int | None = None) -> DataFrame:
@@ -111,7 +158,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     Mirrors the reference's crawler-populated Glue database: after this,
     ``spark.sql("SELECT ... FROM lineitem ...")`` works like Athena over
-    the crawled table (reference: addons.tf:285-297).
+    the crawled table (reference: addons.tf:285-297). Like the crawler,
+    this infers each table's schema once; later :func:`load_table` calls
+    reuse it.
     """
     out: dict[str, DataFrame] = {}
     for name in TABLES:

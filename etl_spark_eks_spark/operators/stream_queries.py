@@ -1059,7 +1059,7 @@ def q_b138_incremental_backlog(spark, sf_dir):
     import os
     import shutil
 
-    from etl_spark_eks_spark.catalog import table_path
+    from etl_spark_eks_spark.catalog import scan_table
     from etl_spark_eks_spark.streaming.stream_ops import (
         normalize_event_time,
     )
@@ -1070,8 +1070,7 @@ def q_b138_incremental_backlog(spark, sf_dir):
     sink = fresh_scratch("q_b138", tag, "sink")
     ckpt = fresh_scratch("q_b138", tag, "ckpt")
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(table_path(sf_dir, "events"))
+    raw = scan_table(spark, sf_dir, "events")
     raw.repartition(4).write.parquet(stage)
     files = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
     os.makedirs(land, exist_ok=True)
@@ -1155,7 +1154,7 @@ def q_b143_multiplexed_stream_union(spark, sf_dir):
     keeps the state store empty at any number of prefixes."""
     import os
 
-    from etl_spark_eks_spark.catalog import table_path
+    from etl_spark_eks_spark.catalog import scan_table
     from etl_spark_eks_spark.streaming.stream_ops import (
         normalize_event_time,
     )
@@ -1166,14 +1165,12 @@ def q_b143_multiplexed_stream_union(spark, sf_dir):
     sink = fresh_scratch("q_b143", tag, "sink")
     ckpt = fresh_scratch("q_b143", tag, "ckpt")
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(table_path(sf_dir, "events"))
+    raw = scan_table(spark, sf_dir, "events")
     raw.where(F.col("user_id") % 2 == 0).write.parquet(west)
     raw.where(F.col("user_id") % 2 != 0).write.parquet(east)
-    schema = spark.read.parquet(west).schema
 
     def prefix_stream(path: str, region: str):
-        s = spark.readStream.schema(schema).parquet(path)
+        s = spark.readStream.schema(raw.schema).parquet(path)
         return normalize_event_time(s).select(
             "event_id",
             "event_type",

@@ -43,6 +43,10 @@ ENGINE_CONF: dict[str, str] = {
     ),
     # Parquet: keep footer-based schema + vectorized reader defaults.
     "spark.sql.parquet.compression.codec": "snappy",
+    # Spark 4 refuses to read parquet TIMESTAMP(NANOS); read it as int64
+    # nanos instead (catalog.load_table and the event streams truncate
+    # to microseconds). Set once here, so no query changes session conf.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Deterministic float formatting across runs.
     "spark.sql.legacy.allowUntypedScalaUDF": "false",
     # Streaming micro-batch: keep state store files local & small in tests.

@@ -2,7 +2,6 @@
 :mod:`etl_spark_eks_spark.functions.json_ops`)."""
 
 from etl_spark_eks_spark.sources.parquet_io import (  # noqa: F401
-    read_parquet,
     scratch_path,
     write_parquet,
 )

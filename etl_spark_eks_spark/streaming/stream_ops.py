@@ -15,21 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark_eks_spark.catalog import table_path
-
-# File-stream sources need an explicit schema, obtained via a batch read
-# of the fixture's parquet footer. That footer read is a (tiny) Spark job
-# per call — 16 streaming queries × reps paid it once each per bench run,
-# a pure fixed cost. The fixture schema is immutable within a process, so
-# cache per (sf_dir): at cluster scale this is the once-per-driver schema
-# resolution a production stream does at submit time.
-_SCHEMA_CACHE: dict = {}
-
-
-def _events_schema(spark: SparkSession, path: str):
-    if path not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[path]
+from etl_spark_eks_spark.catalog import scan_table, table_path, table_schema
 
 
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -60,13 +46,13 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file-source stream.
 
-    Streaming sources need an explicit schema; we take it from the batch
-    reader (which also handles the TIMESTAMP(NANOS) -> int64 legacy read)
-    and normalize ``ts`` to TIMESTAMP (watermark requirement).
+    Streaming sources need an explicit schema; we take the catalog's
+    remembered one (which also reflects the TIMESTAMP(NANOS) -> int64
+    legacy read) and normalize ``ts`` to TIMESTAMP (watermark
+    requirement).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, "events")
-    raw_schema = _events_schema(spark, path)
+    raw_schema = table_schema(spark, sf_dir, "events")
     # File-stream sources need a DIRECTORY of arriving files; the fixture
     # is a single file, so stage a symlink into a scratch input dir
     # (mirrors the reference's S3 landing prefix the crawler watches).
@@ -105,9 +91,7 @@ def events_stream_batched(
     the per-batch telemetry as ntile(4)."""
     from etl_spark_eks_spark.sources.parquet_io import scratch_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    raw_schema = _events_schema(spark, path)
+    raw_schema = table_schema(spark, sf_dir, "events")
     tag = sf_dir.strip("/").replace("/", "_")
     indir = scratch_path(
         "stream_in_multi", tag, f"events_n{n_files}", "_"
@@ -120,7 +104,7 @@ def events_stream_batched(
 
     fp = fixture_fingerprint(sf_dir, "events")
     if not is_staged(indir, fp):
-        spark.read.parquet(path).repartition(n_files).write.mode(
+        scan_table(spark, sf_dir, "events").repartition(n_files).write.mode(
             "overwrite"
         ).parquet(indir)
         mark_staged(indir, fp)
@@ -150,9 +134,7 @@ def events_stream_time_ordered(
     approximately in event order; this staging reproduces that."""
     import time
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    raw_schema = _events_schema(spark, path)
+    raw_schema = table_schema(spark, sf_dir, "events")
     tag = sf_dir.strip("/").replace("/", "_")
     from etl_spark_eks_spark.sources.parquet_io import scratch_path
 
@@ -177,7 +159,7 @@ def events_stream_time_ordered(
         # stream normalizes after the source like every other variant.
         # The global ntile window is test staging at fixture scale, not
         # an operator.
-        ev = spark.read.parquet(path).withColumn(
+        ev = scan_table(spark, sf_dir, "events").withColumn(
             "__q",
             F.ntile(n_files).over(Window.orderBy("ts", "event_id")),
         )

@@ -16,6 +16,10 @@ if str(REPO) not in sys.path:
 # Small-and-fast for unit/oracle tests; bench.py uses the full profile.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
+# The engine's 48g driver-heap default is sized for a large host. Under
+# it the test JVM's heap kept growing past 14 GB over one suite run and
+# was killed on a 15 GiB machine; the test inputs need far less.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -1183,3 +1183,124 @@ def test_c27_probes_read_index_not_text(spark, sf_dir):
     assert n_sha <= 14, f"corpus text re-hashed outside the index: {n_sha}"
     assert n_tok <= 14, f"corpus text re-tokenized outside the index: {n_tok}"
     assert "CartesianProduct" not in plan
+
+
+def _jobs_in_group(spark, group: str, body) -> int:
+    """Number of Spark jobs ``body()`` starts, counted under a job group.
+    Job events reach the status store asynchronously but in order, so a
+    control job run afterwards in its own group is awaited first: once
+    it shows, every job the body started shows too."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        body()
+        sc.setJobGroup(group + "-control", group)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-control"):
+        assert time.monotonic() < deadline, "control job never registered"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_repeat_load_table_starts_no_job(spark, sf_dir):
+    """The catalog infers each table's schema once (like the reference's
+    crawler-declared Glue schema): after ``register_views``, a
+    ``load_table`` of every table reads with the remembered schema and
+    starts no Spark job, while an inferring read starts one."""
+    from etl_spark_eks_spark.catalog import (
+        TABLES,
+        load_table,
+        register_views,
+        table_path,
+    )
+
+    register_views(spark, sf_dir)
+    n = _jobs_in_group(
+        spark,
+        "repeat-load-table",
+        lambda: [load_table(spark, sf_dir, t).schema for t in TABLES],
+    )
+    assert n == 0, f"{n} Spark jobs from {len(TABLES)} repeat load_table calls"
+    n_infer = _jobs_in_group(
+        spark,
+        "inferring-read",
+        lambda: spark.read.parquet(table_path(sf_dir, "orders")).schema,
+    )
+    assert n_infer >= 1
+
+
+def test_self_join_of_loaded_tables_is_unambiguous(spark, sf_dir):
+    """Only the schema is remembered, never a DataFrame: two loads of one
+    table carry distinct attribute ids, so a self-join resolves."""
+    from etl_spark_eks_spark.catalog import load_table
+
+    a = load_table(spark, sf_dir, "orders")
+    b = load_table(spark, sf_dir, "orders")
+    joined = a.join(b, a["o_orderkey"] == b["o_orderkey"]).select(
+        a["o_orderkey"], b["o_totalprice"]
+    )
+    assert joined.count() == a.count() > 0
+
+
+def test_remembered_schema_rows_equal_inferring_read(spark, sf_dir, monkeypatch):
+    """q_b165 (TPC-H q5, six table reads) returns the same rows whether
+    its tables are read with the remembered schema or inferred afresh."""
+    from compare import assert_results_equal
+
+    from etl_spark_eks_spark import catalog
+
+    q = registry.QUERIES["q_b165_tpch_q5"]
+    remembered = q(spark, sf_dir).toPandas()
+    monkeypatch.setattr(
+        catalog,
+        "scan_table",
+        lambda s, d, name: s.read.parquet(catalog.table_path(d, name)),
+    )
+    inferred = q(spark, sf_dir).toPandas()
+    assert len(remembered) > 0
+    assert_results_equal(remembered, inferred, "q_b165_tpch_q5")
+
+
+def test_schema_memo_invalidates_on_rewrite_and_conf(spark, sf_dir, tmp_path):
+    """A table rewritten in place (new fingerprint) and a session conf
+    that changes the inferred type both get a fresh inference, never a
+    stale schema."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from etl_spark_eks_spark.catalog import load_table, table_path
+
+    d = str(tmp_path)
+    path = table_path(d, "orders")
+    shutil.copy(table_path(sf_dir, "orders"), path)
+    assert "o_extra" not in load_table(spark, d, "orders").columns
+
+    t = pq.read_table(path)
+    t = t.append_column("o_extra", pa.array(range(t.num_rows), pa.int64()))
+    pq.write_table(t, path)
+    df = load_table(spark, d, "orders")
+    assert "o_extra" in df.columns
+    assert df.agg({"o_extra": "max"}).first()[0] == t.num_rows - 1
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(key)
+    ntz = load_table(spark, d, "orders").schema["o_orderdate"].dataType
+    assert isinstance(ntz, T.TimestampNTZType)
+    try:
+        spark.conf.set(key, "false")
+        ltz = load_table(spark, d, "orders").schema["o_orderdate"].dataType
+        assert isinstance(ltz, T.TimestampType)
+    finally:
+        spark.conf.set(key, before)
+    again = load_table(spark, d, "orders").schema["o_orderdate"].dataType
+    assert isinstance(again, T.TimestampNTZType)
