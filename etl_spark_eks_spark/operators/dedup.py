@@ -74,258 +74,313 @@ def jaccard_near_dedup(
     length_band: float = 0.2,
     shingle_k: int | None = None,
     strategy: str = "prefix",
-    n_buckets: int = 16,
 ) -> DataFrame:
-    """Exact-threshold set-similarity self-join: all pairs with Jaccard
-    >= ``threshold`` over tokens (default) or k-token shingles
+    """All pairs (doc_id_1 < doc_id_2, jaccard) with Jaccard >=
+    ``threshold`` over tokens (default) or k-token shingles
     (``shingle_k`` set — n-gram Jaccard, order-sensitive: scrambled
     text that shares vocabulary stops matching). Pairs are only
     compared within identical ``block_cols`` values and set sizes
     within ``length_band`` relative difference — both part of the
-    operator's contract, mirrored exactly in the SQL oracle. Both
-    strategies return the identical pair set; they differ only in how
-    candidates are generated.
+    operator's contract, mirrored exactly in the SQL oracle.
 
-    ``strategy="prefix"`` — **prefix-filter join** (PPJoin-family,
-    Chaudhuri et al. 2006): under any global total order on set
-    elements, two sets with Jaccard >= t MUST share at least one
-    element among each set's first ``n - ceil(t*n) + 1`` elements
-    (pigeonhole on the overlap lower bound ceil(t*n)). Sort each
-    hashed set once, explode only that prefix, self-join on the prefix
-    element, distinct the surviving id pairs, fetch the full sets
-    back, verify exact Jaccard. No false negatives. At sf0.1 shingle
-    sets this admits 53k candidates where the length-band blocks alone
-    hold 757k (14x less pairwise work), and the gap widens with corpus
-    size: block sizes grow linearly with N (quadratic pairs) while a
-    prefix bucket only holds docs truly sharing that element. The
-    ceil() subtracts 1e-9 so fp can only lengthen the prefix (superset
-    of candidates), never shorten it (false negatives).
-
-    ``strategy="adaptive"`` — **the C113 playbook** (round-8 verdict:
-    the fix that took that key 26.7 s -> 4.8 s): measure one 1-row
-    statistic — the max per-block vocabulary bit index — and pick the
-    exact path it licenses. Vocabulary fits ``64 * W`` bits (W <=
-    ``_mask_max_words()``, default 8 words = 512 bits; this fixture:
-    31 tokens/lang -> one word) -> BITMASK-SET pairs: each doc folds
-    to W 64-bit integers, i = sum_w bit_count(a_w & b_w), and the
-    pairwise stage is a broadcast hash join whose per-pair verify is
-    2W integer instructions instead of an array intersection (the
-    round-13 multi-word rung — dense-but-bounded vocabularies used to
-    fall off this path at 64 bits and degrade to ~all-pairs prefix
-    candidates). Otherwise -> the exact prefix filter below, which is
-    what an open-vocabulary corpus at 100 TB takes (selective there
-    by Zipf). Both branches have
-    recall EXACTLY 1 — C8's MinHash banding can NOT serve as the
-    candidate source for an oracle-hash-matched operator (recall < 1
-    at any finite (bands, rows); C118's planner quantifies the miss
-    rate), and on this 31-bit token space banding is also *less*
-    selective than the length gate: a 4-5-bit band chunk of a
-    23-of-31-bit mask collides for ~20% of random doc pairs, which is
-    MORE candidate pairs than the blocked length-band join admits.
-    The adaptive gate is the scale story, not a fixture hack: tiny
-    closed vocabularies (enum-like fields, language codes, byte
-    alphabets) are exactly when masks win, and wide vocabularies are
-    exactly when prefixes prune.
-
-    ``strategy="allpairs"`` — **triangle bucket join**: every doc gets
-    a stable hash bucket i in [0, B); the left side fans out to
-    {(i, j) : j >= i}, the right to {(i, j) : i <= j}, so each
-    unordered bucket pair joins exactly once and parallelism is
-    B(B+1)/2 keys per block instead of 1 (a plain block-key self-join
-    would collapse to one task per language). Every same-block pair
-    within the length band pays one intersect.
-
-    Choosing: prefix wins when elements are SELECTIVE (shingles,
-    rare-ish vocabulary) — its filter discards most block pairs before
-    any intersect. It degenerates when every element is frequent: on
-    this corpus's token sets (~23 tokens/doc drawn from a dense shared
-    vocabulary, hottest prefix bucket = 78% of docs) prefix candidates
-    ≈ block pairs, so the explode+distinct overhead buys nothing and
-    allpairs is 2x faster. Shingle sets are selective by construction
-    (3-gram hits are phrasing-specific; hottest bucket 24 of 5000
-    docs); q_c16 uses prefix, q_c2 uses allpairs. Document-frequency
-    prefix ordering (classic PPJoin) was measured and does NOT rescue
-    the dense case — with a uniformly dense vocabulary ALL elements
-    are frequent, so df-ordering just reorders equals.
-
-    Tokens are xxhash64-hashed to longs BEFORE the pairwise stage:
-    ``array_intersect`` on primitive array<long> is ~2x the throughput
-    of array<string> (specialized hash set, no per-element object), and
-    the pairwise rows shrink from ~full text to 8 bytes/token. Set
-    sizes — hence Jaccard values — are preserved up to a 2^-64
-    collision, so the exact SQL oracle still matches.
+    Tokenizes or shingles each doc into a sorted xxhash64 set, then
+    runs ``set_similarity_pairs`` with the caller's ``strategy`` (see
+    there for the rungs and when each wins). Tokens are hashed BEFORE
+    the pairwise stage: ``array_intersect`` on primitive array<long> is
+    ~2x the throughput of array<string>, and the pairwise rows shrink
+    from ~full text to 8 bytes/token. Set sizes — hence Jaccard values
+    — are preserved up to a 2^-64 collision, so the exact SQL oracle
+    still matches.
     """
-    # Fan-out width (round 12): the adaptive strategy's mask path does
+    # Fan-out width (round 12): the adaptive strategy's mask rung does
     # only integer-codegen work per row after tokenization, so its
-    # fixture fan-out derives from the scan size (adaptive_width, the
-    # _assign_width pattern) instead of full session width — measured
-    # ~0.7 s off q_c18 at sf0.1. The prefix/allpairs strategies keep
-    # the full widen: their per-pair array_intersect verify is
-    # interpreted, which is exactly the regime widen() exists for.
-    # (The adaptive->prefix fallback inherits the narrow width; it
-    # only fires on wide-vocab corpora, where at scale the scan
-    # already carries the partitions and widen is a no-op.)
+    # fixture fan-out derives from the scan size (adaptive_width)
+    # instead of full session width — measured ~0.7 s off q_c18 at
+    # sf0.1. The prefix/allpairs rungs keep the full widen: their
+    # per-pair array_intersect verify is interpreted, which is exactly
+    # the regime widen() exists for.
     wdf = (
         widen(df, adaptive_width(df)) if strategy == "adaptive"
         else widen(df)
     )
+    pairs = set_similarity_pairs(
+        text_signatures(wdf, text_col, id_col, block_cols, shingle_k),
+        threshold=threshold,
+        block_cols=block_cols,
+        length_band=length_band,
+        strategy=strategy,
+    )
+    return pairs.select(
+        F.col("id_1").alias("doc_id_1"),
+        F.col("id_2").alias("doc_id_2"),
+        (
+            F.col("i").cast("double")
+            / (F.col("n_1") + F.col("n_2") - F.col("i"))
+        ).alias("jaccard"),
+    )
+
+
+def text_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_cols=(),
+    shingle_k: int | None = None,
+) -> DataFrame:
+    """The kernel's signature frame ``(doc_id, *block_cols, toks)``:
+    each doc's sorted distinct xxhash64 token set, or its k-token
+    shingle set when ``shingle_k`` is given."""
     if shingle_k is None:
-        sets = F.array_distinct(
-            F.transform(tokenize(F.col(text_col)), lambda t: F.xxhash64(t))
-        )
-        toks = wdf.select(
-            F.col(id_col).alias("doc_id"),
-            *[F.col(c) for c in block_cols],
-            F.array_sort(sets).alias("toks"),
-        )
+        sets = token_hashes(tokenize(F.col(text_col)))
     else:
         # Two projections on purpose: the ordered token-hash array must
         # be a NAMED column before shingle_hashes element_at's into it
         # (the q_c8 plan rule — CollapseProject leaves the expensive
         # alias alone, an inline expression gets re-expanded k times).
-        th = wdf.select(
-            F.col(id_col).alias("doc_id"),
-            *[F.col(c) for c in block_cols],
+        df = df.select(
+            id_col,
+            *block_cols,
             ordered_token_hashes(tokenize(F.col(text_col))).alias("th"),
         )
-        toks = th.select(
-            "doc_id",
-            *block_cols,
-            F.array_sort(
-                F.array_distinct(shingle_hashes("th", shingle_k))
-            ).alias("toks"),
-        )
-    if strategy == "adaptive":
-        # The mask path never touches the sorted ARRAY form — it folds a
-        # long-form (doc, token-hash) explode straight into bit masks,
-        # so the array_sort + array persist below would be pure
-        # overhead; build the explode directly (array_distinct is still
-        # free correctness margin — bit_or is idempotent, and count(*)
-        # over the distinct explode is the per-block df).
-        tok_long = toks.select(
-            "doc_id", *block_cols, F.explode("toks").alias("tok")
-        )
-        fit = _block_bitmask_table(tok_long, block_cols)
-        if fit is not None:
-            masked, n_words = fit
-            return _bitmask_exact_pairs(
-                masked, block_cols, threshold, length_band, n_words
-            )
-        # Fallback boundary (round 12): the adaptive entry narrowed the
-        # fan-out for the mask path's codegen work, but the prefix
-        # machinery below is INTERPRETED (per-pair array_intersect) —
-        # re-widen the signature table to full session width before it
-        # (a cheap repartition of ids + hashed sets; the 10x probe
-        # measured the narrow fallback superlinear without this).
-        toks = widen(toks)
-        strategy = "prefix"
-    # The signature table feeds multiple consumers (prefix explode +
-    # two array fetch-backs, or the triangle join's two sides) whose
-    # pruned schemas differ, so exchange reuse can never fire and each
-    # consumer would re-run the whole tokenize+hash+sort pipeline
-    # (measured 6.5x total runtime at sf0.1). Persist it: ids + hashed
-    # sets only — 5-6 orders of magnitude smaller than the text,
-    # MEMORY_AND_DISK so executors spill rather than OOM. This is also
-    # the production shape: at 100 TB the signature table is what you'd
-    # materialize (or write out) before any pairwise stage.
-    toks = toks.withColumn("n_toks", F.size("toks")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if strategy == "allpairs":
-        return _allpairs_triangle_join(
-            toks, block_cols, threshold, length_band, n_buckets
-        )
-    if strategy != "prefix":
-        raise ValueError(f"unknown strategy: {strategy!r}")
-
-    prefix_len = (
-        F.col("n_toks")
-        - F.ceil(F.lit(threshold) * F.col("n_toks") - 1e-9)
-        + 1
-    ).cast("int")
-    pref = toks.select(
-        "doc_id",
+        sets = F.array_distinct(shingle_hashes("th", shingle_k))
+    return df.select(
+        F.col(id_col).alias("doc_id"),
         *block_cols,
-        "n_toks",
-        F.explode(F.slice("toks", F.lit(1), prefix_len)).alias("p"),
+        F.array_sort(sets).alias("toks"),
     )
-    a, b = pref.alias("a"), pref.alias("b")
-    cond = (
-        (F.col("a.p") == F.col("b.p"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (
-            F.abs(F.col("a.n_toks") - F.col("b.n_toks"))
-            <= length_band * F.greatest(F.col("a.n_toks"), F.col("b.n_toks"))
+
+
+# Width cap of the mask rung in 64-bit words: vocabularies up to 512
+# distinct tokens per block keep the codegen bitmask verify; wider
+# ones take the prefix rung, which is selective exactly there.
+_MASK_WORDS = 8
+_TRIANGLE_BUCKETS = 16
+
+
+def set_similarity_pairs(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    threshold: float,
+    block_cols=(),
+    length_band: float | None = None,
+    measure: str = "jaccard",
+    strategy: str = "adaptive",
+) -> DataFrame:
+    """The exact set-similarity pair kernel behind every near-dup
+    caller. Inputs are signature frames ``(doc_id, *block_cols, toks)``
+    with ``toks`` a SORTED array of DISTINCT xxhash64 values. Returns
+    ``(id_1, id_2, i, n_1, n_2)`` — intersection and set sizes — for
+    every pair that passes the threshold, from which callers derive
+    Jaccard, containment or integer bands:
+
+    - self-join Jaccard (``right=None``): unordered pairs, id_1 < id_2;
+    - bipartite Jaccard (``right`` given): id_1 from ``left``, id_2
+      from ``right``;
+    - ``measure="containment"``: directed pairs id_1 != id_2 with
+      |S_1 ∩ S_2| >= t·|S_1| (self-join, prefix rung only).
+
+    Pairs share every ``block_cols`` value and, when ``length_band`` is
+    set, have set sizes within that relative difference. The threshold
+    is evaluated in multiplied form — J >= t <=> i·(1+t) >= t·(n_1+n_2),
+    containment i >= t·n_1 — so the intersect is built once per pair.
+    The 1e-6 slack makes fp rounding inclusive-only: attainable values
+    are ratios of set sizes, so the nearest value distinct from t = p/q
+    differs by >= 1/(q·(n_1+n_2)), orders of magnitude above the slack
+    for q <= 100 and sets < 10^4 elements. Within that domain this IS
+    the exact predicate (the DuckDB oracles agree).
+
+    Every rung has recall EXACTLY 1 (C8's MinHash banding cannot serve
+    an oracle-matched operator); they differ in how candidates arise,
+    and each wins on some input, so the caller picks:
+
+    - ``"allpairs"`` — triangle bucket join: every doc gets a stable
+      hash bucket b in [0, B); the left side fans out to {(b, j) : j >=
+      b}, the right to {(i, b) : i <= b}, so each unordered bucket pair
+      joins exactly once with B(B+1)/2 keys of parallelism per block (a
+      plain block-key self-join collapses to one task per language).
+      Wins when every element is frequent: on this corpus's token sets
+      (dense shared vocabulary, hottest prefix bucket = 78% of docs)
+      prefix candidates ≈ block pairs.
+    - ``"prefix"`` — prefix filter (Chaudhuri et al. 2006; PPJoin):
+      under any fixed total order (here hash order), a pair with
+      i >= t·n_1 shares an element among the first n_1 - ceil(t·n_1)
+      + 1 of S_1 (pigeonhole). Jaccard explodes that prefix on both
+      sides (J >= t forces i >= t·max(n)); containment explodes it on
+      the probe side only and the index side in full (no length
+      symmetry to prune with). Candidate id pairs are deduplicated,
+      their arrays fetched back and verified. Wins when elements are
+      selective (shingles: hottest bucket 24 of 5000 docs). The ceil()
+      subtracts 1e-9 so fp can only lengthen the prefix.
+    - ``"adaptive"`` — measure one statistic, the max per-block
+      vocabulary bit index (``_block_bitmask_table``). When it fits
+      ``64 * _MASK_WORDS`` bits, each doc folds to W 64-bit words and
+      the verify is i = sum_w bit_count(a_w & b_w) inside whole-stage
+      codegen against a doc-count-sized broadcast — no shuffle reaches
+      the pair stage. Otherwise the prefix rung, re-widened to full
+      session width (its verify is interpreted). Tiny closed
+      vocabularies are exactly when masks win, and wide vocabularies
+      exactly when prefixes prune (Continuously Adaptive Similarity
+      Search, SIGMOD 2020).
+
+    Caching: the signature table feeds several consumers whose pruned
+    schemas differ (so exchange reuse never fires and each would re-run
+    the tokenize pipeline — measured 6.5x at sf0.1). The returned plan
+    reads ``localCheckpoint``-ed tables only — the mask fold or, on the
+    array rungs, the signature table — and the gate's own persists are
+    released before returning, so the pair plan stays lazy and no
+    CacheManager entry outlives the call. A checkpoint is eager only
+    when it reads such a persist: on q_c16 at sf0.1 (local[4], 4-vCPU
+    VM) the lazy signature checkpoint measured a 1.21 s median against
+    1.61 s for a lazy persist, faster in 10 of 10 interleaved reps.
+    """
+    if measure not in ("jaccard", "containment"):
+        raise ValueError(f"unknown measure: {measure!r}")
+    if strategy not in ("adaptive", "prefix", "allpairs"):
+        raise ValueError(f"unknown strategy: {strategy!r}")
+    if measure == "containment" and (
+        right is not None or strategy != "prefix"
+    ):
+        raise ValueError(
+            "containment is a directed self-join on the prefix rung"
         )
-    )
+    if right is not None and strategy == "allpairs":
+        raise ValueError("the all-pairs rung is a self-join")
+    block_cols = list(block_cols)
+    cols = ["doc_id", *block_cols, "toks"]
+    sig = left.select(*cols, F.lit(0).alias("side"))
+    if right is not None:
+        sig = sig.unionByName(right.select(*cols, F.lit(1).alias("side")))
+    # n is projected, never filtered on, before materialization: a
+    # filter on it would be pushed below the projection and re-run the
+    # caller's interpreted signature pipeline per row (measured 1.4 ->
+    # 18.5 s at sf0.1). Empty sets explode to nothing and never pair.
+    sig = sig.withColumn("n", F.size("toks"))
+
+    # Pair predicates on aliases a (probe, id_1) and b (build, id_2):
+    # the caller's contract (blocks, length band) and the pair order.
+    cond = F.lit(True)
     for c in block_cols:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    if length_band is not None:
+        cond = cond & (
+            F.abs(F.col("a.n") - F.col("b.n"))
+            <= length_band * F.greatest(F.col("a.n"), F.col("b.n"))
+        )
+    order = F.lit(True)
+    if measure == "containment":
+        order = F.col("a.doc_id") != F.col("b.doc_id")
+    elif right is None:
+        order = F.col("a.doc_id") < F.col("b.doc_id")
+
+    def passes(i, n_1, n_2):
+        if measure == "containment":
+            return i.cast("double") >= threshold * n_1 - 1e-6
+        return i.cast("double") * (1.0 + threshold) >= (
+            threshold * (n_1 + n_2).cast("double") - 1e-6
+        )
+
+    def sides(df):
+        if right is None:
+            return df, df
+        return df.filter(F.col("side") == 0), df.filter(F.col("side") == 1)
+
+    cached = None
+    try:
+        if strategy == "adaptive":
+            cached = sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+            fit = _block_bitmask_table(sig, block_cols)
+            if fit is not None:
+                masked, n_words = fit
+                a, b = sides(masked)
+                i = _mask_intersection(n_words)
+                return a.alias("a").join(
+                    F.broadcast(b.alias("b")),
+                    cond & order & passes(i, F.col("a.n"), F.col("b.n")),
+                ).select(
+                    F.col("a.doc_id").alias("id_1"),
+                    F.col("b.doc_id").alias("id_2"),
+                    i.alias("i"),
+                    F.col("a.n").alias("n_1"),
+                    F.col("b.n").alias("n_2"),
+                )
+            sig = widen(sig)
+        # Lazy unless it reads the gate's persist, which is released
+        # below: the first job of the caller's action materializes it.
+        sig = sig.localCheckpoint(eager=cached is not None)
+    finally:
+        if cached is not None:
+            cached.unpersist()
+    if strategy == "allpairs":
+        return _allpairs_triangle_join(sig, cond, order, passes)
+    return _prefix_pairs(
+        *sides(sig), block_cols, cond & order, passes, threshold, measure
+    )
+
+
+def _prefix_pairs(left, right, block_cols, cond, passes, threshold, measure):
+    """The prefix rung of ``set_similarity_pairs``: prefix-element
+    equi-join -> distinct candidate ids -> fetch both arrays back ->
+    exact verify."""
+    prefix_len = (
+        F.col("n") - F.ceil(F.lit(threshold) * F.col("n") - 1e-9) + 1
+    ).cast("int")
+
+    def exploded(df, full):
+        elems = F.slice("toks", F.lit(1), prefix_len)
+        return df.select(
+            "doc_id",
+            *block_cols,
+            "n",
+            F.explode(F.col("toks") if full else elems).alias("p"),
+        )
+
+    a = exploded(left, False).alias("a")
+    b = exploded(right, measure == "containment").alias("b")
     cand = (
-        a.join(b, cond)
+        a.join(b, (F.col("a.p") == F.col("b.p")) & cond)
         .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
+            F.col("a.doc_id").alias("id_1"), F.col("b.doc_id").alias("id_2")
         )
         .distinct()
     )
-
-    sa = toks.select(
-        F.col("doc_id").alias("doc_id_1"),
-        F.col("toks").alias("toks_1"),
-        F.col("n_toks").alias("n_1"),
+    sa = left.select(
+        F.col("doc_id").alias("id_1"),
+        F.col("toks").alias("t_1"),
+        F.col("n").alias("n_1"),
     )
-    sb = toks.select(
-        F.col("doc_id").alias("doc_id_2"),
-        F.col("toks").alias("toks_2"),
-        F.col("n_toks").alias("n_2"),
+    sb = right.select(
+        F.col("doc_id").alias("id_2"),
+        F.col("toks").alias("t_2"),
+        F.col("n").alias("n_2"),
     )
-    pairs = cand.join(sa, "doc_id_1").join(sb, "doc_id_2")
-    inter = F.size(F.array_intersect("toks_1", "toks_2"))
-    s = F.col("n_1") + F.col("n_2")
-    # Threshold predicate in multiplied form: J >= t <=>
-    # inter*(1+t) >= t*(n1+n2). It references the intersect expression
-    # ONCE (the division form costs two intersect builds per pair, and
-    # the intersect is the entire verify cost). The 1e-6 slack makes fp
-    # rounding inclusive-only: attainable Jaccard values are ratios of
-    # set sizes, so the nearest value distinct from t differs by
-    # >= 1/(q*(n1+n2)) for t = p/q — orders of magnitude above both the
-    # slack and double rounding for q <= 100 and sets < 10^4 tokens.
-    # Within that domain this IS the exact predicate (the DuckDB
-    # oracles agree), so no post-filter.
-    bound = inter.cast("double") * (1.0 + threshold) >= (
-        threshold * s.cast("double") - 1e-6
-    )
-    union = s - inter
-    return pairs.filter(bound).select(
-        "doc_id_1",
-        "doc_id_2",
-        (inter.cast("double") / union).alias("jaccard"),
+    i = F.size(F.array_intersect("t_1", "t_2"))
+    return (
+        cand.join(sa, "id_1")
+        .join(sb, "id_2")
+        .filter(passes(i, F.col("n_1"), F.col("n_2")))
+        .select("id_1", "id_2", _once(i).alias("i"), "n_1", "n_2")
     )
 
 
-def _allpairs_triangle_join(
-    toks: DataFrame,
-    block_cols: list[str],
-    threshold: float,
-    length_band: float,
-    n_buckets: int,
-) -> DataFrame:
-    """All same-block pairs via the triangle bucket fan-out (see
-    ``jaccard_near_dedup``): bucket i joins bucket j >= i exactly once,
-    restoring parallelism that a plain block-key self-join loses."""
-    toks = toks.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
+def _allpairs_triangle_join(sig, cond, order, passes):
+    """The all-pairs rung of ``set_similarity_pairs``: bucket i joins
+    bucket j >= i exactly once, restoring the parallelism a plain
+    block-key self-join loses."""
+    nb = _TRIANGLE_BUCKETS
+    sig = sig.withColumn(
+        "bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(nb)).cast("int")
     )
-    left = toks.withColumn(
+    left = sig.withColumn(
         "pair",
         F.explode(
             F.transform(
-                F.sequence(F.col("bucket"), F.lit(n_buckets - 1)),
+                F.sequence(F.col("bucket"), F.lit(nb - 1)),
                 lambda j: F.struct(F.col("bucket").alias("i"), j.alias("j")),
             )
         ),
     )
-    right = toks.withColumn(
+    right = sig.withColumn(
         "pair",
         F.explode(
             F.transform(
@@ -334,174 +389,98 @@ def _allpairs_triangle_join(
             )
         ),
     )
-    a, b = left.alias("a"), right.alias("b")
-    cond = (F.col("a.pair") == F.col("b.pair")) & (
-        # same-bucket key (i==i): order by id to avoid self/dup pairs;
-        # cross-bucket keys join disjoint doc sets, any id order occurs.
-        (F.col("a.doc_id") < F.col("b.doc_id"))
-        | (F.col("a.bucket") != F.col("b.bucket"))
-    ) & (
-        F.abs(F.col("a.n_toks") - F.col("b.n_toks"))
-        <= length_band * F.greatest(F.col("a.n_toks"), F.col("b.n_toks"))
-    )
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    s = F.col("a.n_toks") + F.col("b.n_toks")
-    # Same multiplied-form threshold predicate as the prefix branch —
-    # one intersect per rejected pair, fp slack inclusive-only.
-    bound = inter.cast("double") * (1.0 + threshold) >= (
-        threshold * s.cast("double") - 1e-6
-    )
-    cond = cond & bound
-    union = s - inter
-    return a.join(b, cond).select(
-        F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id_1"),
-        F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id_2"),
-        (inter.cast("double") / union).alias("jaccard"),
+    # Only the same-bucket key needs the id order: cross-bucket keys
+    # join disjoint doc sets, so either order occurs there and is
+    # normalized below.
+    cond = cond & (order | (F.col("a.bucket") != F.col("b.bucket")))
+    i = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
+    a_first = F.col("a.doc_id") < F.col("b.doc_id")
+    return left.alias("a").join(
+        right.alias("b"),
+        (F.col("a.pair") == F.col("b.pair"))
+        & cond
+        & passes(i, F.col("a.n"), F.col("b.n")),
+    ).select(
+        F.least("a.doc_id", "b.doc_id").alias("id_1"),
+        F.greatest("a.doc_id", "b.doc_id").alias("id_2"),
+        _once(i).alias("i"),
+        F.when(a_first, F.col("a.n")).otherwise(F.col("b.n")).alias("n_1"),
+        F.when(a_first, F.col("b.n")).otherwise(F.col("a.n")).alias("n_2"),
     )
 
 
-def _mask_max_words() -> int:
-    """Width cap (in 64-bit words) for the dense set-mask rung
-    (round 13, verdict task 1): vocabularies up to ``64 * W`` distinct
-    tokens per block keep the codegen bitmask verify (W ANDs + W
-    popcounts per pair); wider vocabularies fall back to the exact
-    prefix filter, which is selective exactly there (genuinely open
-    vocabularies prune by Zipf, where a dense mask would cost
-    O(vocab/64) per pair AND stop fitting a broadcast row). Default 8
-    words = 512 bits — a mask still smaller than the sorted hash
-    array it replaces for typical ~23-token sets; the env knob is a
-    deployment override, not a fixture tune."""
-    import os as _os
-
-    return max(1, int(_os.environ.get("SPARK_GRAFT_MASK_WORDS", "8")))
+def _once(expr: Column) -> Column:
+    """``expr`` spelled twice on purpose, as least(expr, expr): a
+    repeated expression makes whole-stage codegen's subexpression
+    elimination evaluate it once in a method of its own. Projected
+    inline, the array intersect of the verify measured 0.3-0.6 s
+    slower on q_c2 at sf0.1 (local[4], 4-vCPU VM)."""
+    return F.least(expr, expr)
 
 
-def _mask_word_cols(n_words: int, bit_col: str = "bit") -> list:
+def _mask_word_cols(n_words: int) -> list:
     """The per-word ``bit_or`` fold columns m0..m{W-1}: token with bit
-    index b sets bit (b mod 64) of word (b div 64). Single-word keeps
-    the exact legacy expression (shift over the raw index)."""
-    if n_words == 1:
-        return [F.bit_or(F.expr(f"shiftleft(1L, {bit_col})")).alias("m0")]
+    index b sets bit (b mod 64) of word (b div 64)."""
     return [
         F.bit_or(
             F.when(
-                F.col(bit_col).between(64 * w, 64 * w + 63),
-                F.expr(f"shiftleft(1L, {bit_col} - {64 * w})"),
+                F.col("bit").between(64 * w, 64 * w + 63),
+                F.expr(f"shiftleft(1L, bit - {64 * w})"),
             ).otherwise(F.lit(0).cast("long"))
         ).alias(f"m{w}")
         for w in range(n_words)
     ]
 
 
-def _mask_popcount(n_words: int, side: str | None = None):
-    """``bit_count`` summed over the mask words (set size / overlap)."""
-    pre = f"{side}." if side else ""
-    out = F.bit_count(F.col(f"{pre}m0"))
-    for w in range(1, n_words):
-        out = out + F.bit_count(F.col(f"{pre}m{w}"))
-    return out
-
-
 def _mask_intersection(n_words: int):
     """i = sum_w bit_count(a.m_w & b.m_w) — the W-word overlap count."""
-    out = F.bit_count(F.col("a.m0").bitwiseAND(F.col("b.m0")))
-    for w in range(1, n_words):
-        out = out + F.bit_count(
-            F.col(f"a.m{w}").bitwiseAND(F.col(f"b.m{w}"))
-        )
+    out = F.lit(0).cast("long")
+    for w in range(n_words):
+        out = out + F.bit_count(F.col(f"a.m{w}").bitwiseAND(F.col(f"b.m{w}")))
     return out
 
 
-def _block_bitmask_table(tok: DataFrame, block_cols: list[str]):
-    """Fold each doc's hashed token set into a W-word (W <=
-    ``_mask_max_words()``) bitmask, or None when any block's
-    vocabulary exceeds ``64 * W`` distinct tokens.
+def _block_bitmask_table(sig: DataFrame, block_cols: list[str]):
+    """The adaptive gate: fold each doc of the signature frame ``sig``
+    ``(doc_id, side, *block_cols, toks, n)`` into W-word bitmasks
+    ``(doc_id, side, *block_cols, n, m0..m{W-1})`` and return
+    ``(masked, W)``, or None when any block's vocabulary exceeds
+    ``64 * _MASK_WORDS`` distinct tokens (or the input is empty).
 
-    The C113 playbook, generalized for ``jaccard_near_dedup``: a
-    per-block vocabulary table assigns each token a rarest-first bit
-    index (``row_number`` over (df, tok) — a window over the VOCAB
-    table, |blocks|·|vocab| rows, never the corpus). ``tok`` is the
-    long form (doc_id, *block_cols, tok) with per-doc-DISTINCT token
-    hashes. ``None`` (vocabulary too wide, or an empty corpus — max()
-    is NULL) tells the caller to fall back to the exact prefix filter,
-    which is the path a real open-vocabulary corpus takes at scale.
-
-    Round 13 (verdict task 1 — the dense-vocab scale-killer): the
-    single-long mask grew a MULTI-WORD rung. The gate reads the max
-    bit index FIRST (the same single 1-row agg job over the persisted
-    vocab table as before — shiftleft wraps silently at >= 64, so no
-    mask is ever planned before the width is known), then builds the
-    fold at exactly ceil((vmax+1)/64) words. Returns (masked_df,
-    n_words). Persisting the fold matters because the probe side AND
-    the broadcast build both read it; materialization stays LAZY —
-    the fold runs inside the consumer's first action. Callers that
-    narrow the shuffle width for an iterative loop must checkpoint
-    their pair join first so the fold materializes at full session
-    width (q_c18/q_c58 do; same caller contract
-    connected_components documents)."""
-    bit_tbl = (
-        tok.groupBy(*block_cols, "tok")
-        .agg(F.count("*").alias("df"))
+    A per-block vocabulary table — |blocks|·|vocab| rows, never the
+    corpus — numbers each token with a window ``row_number``. The gate
+    reads its max bit index FIRST (shiftleft wraps silently at >= 64,
+    so no mask is planned before the width is known), then folds at
+    exactly ceil((vmax+1)/64) words. The fold is checkpointed eagerly:
+    the probe side and the broadcast build both read it, and the
+    vocabulary persist is released before returning."""
+    tok = sig.select(
+        "doc_id", "side", *block_cols, "n", F.explode("toks").alias("tok")
+    )
+    bits = (
+        tok.select(*block_cols, "tok")
+        .distinct()
         .withColumn(
             "bit",
-            F.row_number().over(
-                Window.partitionBy(*block_cols).orderBy("df", "tok")
-            )
+            F.row_number().over(Window.partitionBy(*block_cols).orderBy("tok"))
             - 1,
         )
-        .select(*block_cols, "tok", "bit")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    vmax = bit_tbl.agg(F.max("bit").alias("m")).first()["m"]
-    if vmax is None or vmax >= 64 * _mask_max_words():
-        bit_tbl.unpersist()
-        return None
-    n_words = vmax // 64 + 1
-    masked = (
-        tok.join(F.broadcast(bit_tbl), [*block_cols, "tok"])
-        .groupBy("doc_id", *block_cols)
-        .agg(*_mask_word_cols(n_words))
-        .withColumn("n_toks", _mask_popcount(n_words).cast("int"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return masked, n_words
-
-
-def _bitmask_exact_pairs(
-    masked: DataFrame,
-    block_cols: list[str],
-    threshold: float,
-    length_band: float,
-    n_words: int = 1,
-) -> DataFrame:
-    """Exact Jaccard >= ``threshold`` pairs when every doc's set is a
-    W-word bitmask: i = sum_w bit_count(m_w_a & m_w_b), u = n_a + n_b
-    - i — the per-pair verify drops from an array intersection to 2W
-    integer instructions inside whole-stage codegen, and the probe
-    side is a doc-count-sized broadcast (one row per doc, 8W-byte
-    mask), so NO shuffle reaches the pair stage. Same multiplied-form
-    threshold predicate as the prefix branch (inclusive-only fp
-    slack), so the pair set is bit-identical to allpairs/prefix."""
-    a, b = masked.alias("a"), F.broadcast(masked.alias("b"))
-    cond = (F.col("a.doc_id") < F.col("b.doc_id")) & (
-        F.abs(F.col("a.n_toks") - F.col("b.n_toks"))
-        <= length_band * F.greatest(F.col("a.n_toks"), F.col("b.n_toks"))
-    )
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    i = _mask_intersection(n_words).cast("long")
-    s = (F.col("a.n_toks") + F.col("b.n_toks")).cast("long")
-    bound = i.cast("double") * (1.0 + threshold) >= (
-        threshold * s.cast("double") - 1e-6
-    )
-    u = s - i
-    return a.join(b, cond & bound).select(
-        F.col("a.doc_id").alias("doc_id_1"),
-        F.col("b.doc_id").alias("doc_id_2"),
-        (i.cast("double") / u).alias("jaccard"),
-    )
+    try:
+        vmax = bits.agg(F.max("bit")).first()[0]
+        if vmax is None or vmax >= 64 * _MASK_WORDS:
+            return None
+        n_words = vmax // 64 + 1
+        masked = (
+            tok.join(F.broadcast(bits), [*block_cols, "tok"])
+            .groupBy("doc_id", "side", *block_cols, "n")
+            .agg(*_mask_word_cols(n_words))
+            .localCheckpoint(eager=True)
+        )
+        return masked, n_words
+    finally:
+        bits.unpersist()
 
 
 @query(
@@ -1230,12 +1209,12 @@ def q_c18_dedup_clusters(spark, sf_dir):
     cluster ids.
 
     Candidate generation is ``strategy="adaptive"`` (round-8 verdict
-    task 1): the C113 exact-path gate (64-bit set masks here, exact
-    prefix filter for open vocabularies) replaces the quadratic
-    allpairs triangle join that made this the bench's second-slowest
-    key, with a bit-identical pair set — the allpairs form survives
-    as the pytest recall cross-check
-    (tests/test_dedup.py::test_adaptive_pairs_match_allpairs)."""
+    task 1): the ``set_similarity_pairs`` gate (multi-word set masks
+    here, exact prefix filter for open vocabularies) replaces the
+    quadratic allpairs triangle join that made this the bench's
+    second-slowest key, with a bit-identical pair set — the allpairs
+    rung survives as the pytest recall cross-check
+    (tests/test_tier_c.py::test_adaptive_pairs_match_allpairs)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = jaccard_near_dedup(
         d, "text", "doc_id", ["lang"], 0.8, 0.2, strategy="adaptive"
@@ -1243,8 +1222,7 @@ def q_c18_dedup_clusters(spark, sf_dir):
     # Eager: connected_components reads the edge list up to three
     # times (fused round-0 agg, bridge remap, node universe) — one
     # checkpointed execution of the broadcast pair join feeds all
-    # three, and it materializes at full session parallelism before
-    # the CC loop narrows the shuffle width.
+    # three, before the CC loop narrows the shuffle width.
     edges = pairs.select("doc_id_1", "doc_id_2").localCheckpoint(eager=True)
     labels = connected_components(edges, "doc_id_1", "doc_id_2")
     out = d.select("doc_id").join(
@@ -1301,49 +1279,47 @@ def q_c27_incremental_dedup(spark, sf_dir):
     Since round 10 the demo IS the scale plan (r9 verdict task 4 —
     the previous form re-tokenized the corpus and lang-block
     broadcast-joined batch x corpus per ingest): the corpus text is
-    read ONCE into a persisted INDEX (sha-256, sorted token hashes,
-    set size), and both probes consume only index columns:
+    read ONCE into a checkpointed INDEX (sha-256, sorted token
+    hashes), and both probes consume only index columns:
 
     - EXACT rides C128's bitmap: a 128 KiB presence array broadcast
       as a map-side bit test, misses short-circuit as provably novel,
       hits exact-confirm against the index's (h, doc_id) columns with
       the candidates broadcast — the corpus never shuffles.
-    - NEAR rides the exact PREFIX-FILTER index (the
-      jaccard_near_dedup "prefix" machinery, bipartite): each side
-      explodes only the first n - ceil(0.8n) + 1 elements of its
-      sorted hash set, batch prefixes broadcast into the element
-      equi-join, and the CONTRACT predicates (same lang, set sizes
-      within 20%, exact Jaccard >= 0.8 on the indexed arrays) verify
-      each candidate. Recall is EXACTLY 1 by the pigeonhole argument
-      — no probabilistic-recall caveat needed for the hash oracle.
+    - NEAR is one bipartite ``set_similarity_pairs`` call (corpus x
+      batch, adaptive) under the CONTRACT predicates (same lang, set
+      sizes within 20%, exact Jaccard >= 0.8): when the per-lang
+      vocabulary fits the mask rung both sides fold to multi-word
+      masks and the broadcast batch verifies by summed bit_count
+      (round 13: 2.99 -> 2.06 s), otherwise the exact prefix filter.
+      Recall is EXACTLY 1 either way — no probabilistic-recall caveat
+      needed for the hash oracle.
 
     Why prefix and not C73's MinHash bands (the r9 verdict's literal
     suggestion), A/B-measured at sf0.1 min-of-6 idle: building 32
     minhashes per doc dominates — the banded form closed at 2.73 s
     vs this form's parity with the old 1.25 s rolling min, and on
     this fixture banding is also LESS selective than the length gate
-    (the jaccard_near_dedup strategy notes: a band chunk of a dense
+    (the set_similarity_pairs rung notes: a band chunk of a dense
     31-token vocabulary collides for ~20% of random pairs). C73
     remains the minhash-index rung for the open-vocabulary regime
     where signatures amortize across many probe batches.
 
     Scale: per ingest the corpus contributes index scans only — no
     tokenize, no sha, no text; candidate volume is bitmap-pruned
-    (exact) and prefix-pruned (near), never |batch| x |corpus|.
+    (exact) and mask- or prefix-pruned (near), never text-level
+    |batch| x |corpus|.
     Pinned in tests/test_plans.py::test_c27_probes_read_index_not_text."""
     d = load_table(spark, sf_dir, "documents")
-    # One persisted index pass over the fixture (widen: the fixture
-    # scans as one split; hashing+tokenizing must not serialize onto
-    # one core — no-op at real scale). Token hashes: set sizes (hence
-    # Jaccard) are preserved up to a 2^-64 collision, and
-    # array_intersect on primitive longs is ~2x string arrays (the
-    # jaccard_near_dedup argument — same oracle contract); sorted so
-    # the prefix filter's global order is the long order. In
-    # production the corpus slice of this table is the standing index
-    # built once per corpus version; only the batch slice is computed
-    # per ingest — here both share the pass because the fixture ships
-    # them in one file, and the probes below still touch nothing but
-    # index columns.
+    # One index pass over the fixture (widen: the fixture scans as one
+    # split; hashing+tokenizing must not serialize onto one core —
+    # no-op at real scale). Token hashes: set sizes (hence Jaccard) are
+    # preserved up to a 2^-64 collision (the jaccard_near_dedup
+    # argument — same oracle contract). In production the corpus slice
+    # of this table is the standing index built once per corpus
+    # version; only the batch slice is computed per ingest — here both
+    # share the pass because the fixture ships them in one file, and
+    # the probes below still touch nothing but index columns.
     toks = (
         widen(d)
         .select(
@@ -1351,15 +1327,13 @@ def q_c27_incremental_dedup(spark, sf_dir):
             "lang",
             F.sha2(F.col("text"), 256).alias("h"),
             F.array_sort(token_hashes(tokenize(F.col("text")))).alias(
-                "htoks"
+                "toks"
             ),
         )
-        .withColumn("n", F.size("htoks"))
-        # Eager localCheckpoint, not persist: three consumers (exact
-        # probe, prefix probe, verify fetch) read one materialization,
-        # and nothing lingers in the session cache after the query
-        # (ADVICE r10: the persist form leaked a cache entry per
-        # invocation across a 342-query session).
+        # Eager localCheckpoint, not persist: both probes read one
+        # materialization, and nothing lingers in the session cache
+        # after the query (ADVICE r10: the persist form leaked a cache
+        # entry per invocation across a 342-query session).
         .localCheckpoint(eager=True)
     )
     corpus = toks.filter(F.col("doc_id") % 10 != 7)
@@ -1376,104 +1350,14 @@ def q_c27_incremental_dedup(spark, sf_dir):
         .agg(F.min("doc_id").alias("ex_match"))
         .withColumnRenamed("b_doc", "b_id")
     )
-
-    # ---- near probe: adaptive, the C113/C18 playbook (round 13) ----
-    # The interpreted per-candidate array_intersect verify was this
-    # key's entire remaining floor (profiler: two ~2 s 32-task jobs on
-    # a 12-job query — candidate gen + verify). When the per-lang
-    # vocabulary fits the W-word mask rung (one cheap 1-row gate over
-    # the checkpointed index), both probe sides fold to masks and the
-    # verify becomes summed bit_count inside whole-stage codegen —
-    # i = |intersection| and n are the IDENTICAL integers (token
-    # hashes are array_distinct), so jac and the match set are
-    # value-identical to the prefix+intersect form, which remains the
-    # open-vocabulary fallback below (selective by Zipf exactly
-    # there). In production the masks live in the standing index the
-    # way htoks do.
-    fit = _block_bitmask_table(
-        toks.select("doc_id", "lang", F.explode("htoks").alias("tok")),
-        ["lang"],
+    # ---- near probe: corpus x batch, batch on the broadcast side ----
+    nr = (
+        set_similarity_pairs(
+            corpus, batch, threshold=0.8, block_cols=["lang"], length_band=0.2
+        )
+        .groupBy(F.col("id_2").alias("b_id"))
+        .agg(F.min("id_1").alias("nr_match"))
     )
-    if fit is not None:
-        masked, n_words = fit
-        a = masked.filter(F.col("doc_id") % 10 != 7).alias("a")
-        b = F.broadcast(
-            masked.filter(F.col("doc_id") % 10 == 7).alias("b")
-        )
-        inter = _mask_intersection(n_words).cast("int")
-        jac = inter.cast("double") / (
-            F.col("b.n_toks") + F.col("a.n_toks") - inter
-        )
-        nr = (
-            a.join(
-                b,
-                (F.col("b.lang") == F.col("a.lang"))
-                & (
-                    F.abs(F.col("b.n_toks") - F.col("a.n_toks"))
-                    <= 0.2
-                    * F.greatest(F.col("b.n_toks"), F.col("a.n_toks"))
-                )
-                & (jac >= 0.8),
-            )
-            .groupBy(F.col("b.doc_id").alias("b_id"))
-            .agg(F.min(F.col("a.doc_id")).alias("nr_match"))
-        )
-    else:
-        # exact prefix-filter equi-join + verification (unchanged)
-        prefix_len = (
-            F.col("n") - F.ceil(F.lit(0.8) * F.col("n") - 1e-9) + 1
-        )
-
-        def prefix_of(df, id_alias):
-            return df.select(
-                F.col("doc_id").alias(id_alias),
-                F.explode(
-                    F.slice("htoks", F.lit(1), prefix_len)
-                ).alias("p"),
-            )
-
-        # No .distinct(): a pair sharing several prefix elements
-        # repeats, but the MIN(c_id) rollup absorbs duplicates and
-        # dropping the dedup removes a full (b_id, c_id) exchange —
-        # each repeat pays one extra in-memory verify, bounded by the
-        # prefix length.
-        cand_nr = (
-            F.broadcast(prefix_of(batch, "b_id"))
-            .join(prefix_of(corpus, "c_id"), "p")
-            .select("b_id", "c_id")
-        )
-        b_side = F.broadcast(
-            batch.select(
-                F.col("doc_id").alias("b_id"),
-                F.col("lang").alias("b_lang"),
-                F.col("htoks").alias("b_htoks"),
-                F.col("n").alias("b_n"),
-            )
-        )
-        c_side = corpus.select(
-            F.col("doc_id").alias("c_id"),
-            F.col("lang").alias("c_lang"),
-            F.col("htoks").alias("c_htoks"),
-            F.col("n").alias("c_n"),
-        )
-        inter = F.size(F.array_intersect("b_htoks", "c_htoks"))
-        jac = inter.cast("double") / (
-            F.col("b_n") + F.col("c_n") - inter
-        )
-        nr = (
-            cand_nr.join(b_side, "b_id")
-            .join(c_side, "c_id")
-            .filter(
-                (F.col("b_lang") == F.col("c_lang"))
-                & (
-                    F.abs(F.col("b_n") - F.col("c_n"))
-                    <= 0.2 * F.greatest(F.col("b_n"), F.col("c_n"))
-                )
-                & (jac >= 0.8)
-            )
-            .groupBy("b_id")
-            .agg(F.min("c_id").alias("nr_match"))
-        )
     return (
         ex.join(nr, "b_id", "full")
         .select(
@@ -1756,8 +1640,9 @@ def q_c58_cluster_canonicals(spark, sf_dir):
     one expression, not the plan.
 
     Scale: clustering cost is C18's (``strategy="adaptive"`` exact
-    candidate paths since round 9 — 64-bit set masks / prefix filter,
-    bit-identical pair set, allpairs kept as the pytest cross-check,
+    candidate paths since round 9 — multi-word set masks / prefix
+    filter, bit-identical pair set, allpairs kept as the pytest
+    cross-check,
     then contracted label propagation); the re-rank adds one window
     over the label table partitioned by cluster_id — cluster-bounded
     work, WindowGroupLimit-eligible if only canonicals are kept."""
@@ -1843,8 +1728,9 @@ def q_c64_containment_neardup(spark, sf_dir):
     of the source's tokens, doc_id + 4,000,000 — fabricate-then-audit):
     every planted fragment MUST surface with containment 1.0.
 
-    Candidate generation is an asymmetric prefix filter, exact by the
-    same pigeonhole as C2's symmetric one: if containment >= t, at
+    Candidate generation is ``set_similarity_pairs``' asymmetric
+    (containment) prefix rung, exact by the same pigeonhole as C16's
+    symmetric one: if containment >= t, at
     most floor((1-t)·n_src) of src's shingles are absent from dst, so
     among src's first n_src − ceil(t·n_src) + 1 shingles (any FIXED
     order; hash order here) at least one hits dst. Probe side explodes
@@ -1883,87 +1769,24 @@ def q_c64_containment_neardup(spark, sf_dir):
     return containment_pairs(alldocs, 0.8)
 
 
-def containment_pairs(alldocs, t_thresh: float = 0.8, materialize: bool = True):
-    """Directed containment pairs (src, dst, containment>=t) over an
-    (doc_id, text) frame — C64's asymmetric prefix-filter machinery,
-    factored so compositions (C90's decision record) reuse the exact
-    candidate generation + verification instead of re-deriving it.
-    See q_c64_containment_neardup for the full design rationale.
-
-    The corpus-sized shingle-set frame is persisted ONLY for the
-    duration of this call: the verified pairs (bounded: near-dup
-    pairs, not the corpus) are materialized via an eager
-    localCheckpoint and the set cache is unpersisted before
-    returning, so back-to-back callers in one session (q_c64 then
-    q_c90) don't stack two corpus-sized caches.
-    ``materialize=False`` returns the LAZY plan with the persist
-    still held (caller must unpersist) — used by the plan test that
-    pins the three-consumer cache reuse."""
-    th = widen(alldocs).select(
-        "doc_id", ordered_token_hashes(tokenize("text")).alias("th")
+def containment_pairs(alldocs, t_thresh: float = 0.8):
+    """Directed containment pairs (src_doc, dst_doc, containment >= t)
+    over an (doc_id, text) frame: 5-token shingle hash sets into
+    ``set_similarity_pairs``' containment prefix rung, factored so
+    compositions (C90's decision record) reuse the exact candidate
+    generation + verification instead of re-deriving it. See
+    q_c64_containment_neardup for the design rationale."""
+    pairs = set_similarity_pairs(
+        text_signatures(widen(alldocs), "text", "doc_id", shingle_k=5),
+        threshold=t_thresh,
+        measure="containment",
+        strategy="prefix",
     )
-    sets = (
-        th.select(
-            "doc_id",
-            F.array_sort(F.array_distinct(shingle_hashes("th", 5))).alias(
-                "s"
-            ),
-        )
-        .withColumn("n", F.size("s"))
-        # NO .filter(n >= 1) here, deliberately: PushDownPredicates
-        # rewrites the predicate in terms of the full
-        # size(array_sort(array_distinct(shingle_hashes(...)))) tree
-        # below the projection, re-evaluating the interpreted lambda
-        # pipeline per row — measured 1.4 s -> 18.5 s at sf0.1 for
-        # that one filter (the q_c8 pathology class in predicate
-        # form). It is also unnecessary: a shingle-less doc explodes
-        # to zero probe/index rows, so it can never reach a candidate
-        # pair or the containment division.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    return pairs.select(
+        F.col("id_1").alias("src_doc"),
+        F.col("id_2").alias("dst_doc"),
+        (F.col("i").cast("double") / F.col("n_1")).alias("containment"),
     )
-    prefix_len = (
-        F.col("n") - F.ceil(F.lit(t_thresh) * F.col("n") - 1e-9) + 1
-    ).cast("int")
-    probe = sets.select(
-        F.col("doc_id").alias("src_doc"),
-        F.explode(F.slice("s", F.lit(1), prefix_len)).alias("p"),
-    )
-    index = sets.select(
-        F.col("doc_id").alias("dst_doc"), F.explode("s").alias("p")
-    )
-    cand = (
-        probe.join(index, "p")
-        .filter(F.col("src_doc") != F.col("dst_doc"))
-        .select("src_doc", "dst_doc")
-        .distinct()
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("src_doc"),
-        F.col("s").alias("s_src"),
-        F.col("n").alias("n_src"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("dst_doc"), F.col("s").alias("s_dst")
-    )
-    inter = F.size(F.array_intersect("s_src", "s_dst"))
-    verified = (
-        cand.join(sa, "src_doc")
-        .join(sb, "dst_doc")
-        .filter(
-            inter.cast("double") >= t_thresh * F.col("n_src") - 1e-6
-        )
-        .select(
-            "src_doc",
-            "dst_doc",
-            (inter.cast("double") / F.col("n_src")).alias("containment"),
-        )
-    )
-    if not materialize:
-        return verified  # caller owns sets' unpersist (plan tests)
-    out = verified.localCheckpoint(eager=True)
-    sets.unpersist()
-    return out
-
 
 
 @query(
@@ -3269,78 +3092,48 @@ def q_c113_threshold_sweep_curve(spark, sf_dir):
     Scale: the round-7 form (lang-blocked all-pairs with per-pair
     array_intersect on the token arrays) was the bench's worst tail
     (26.7 s official); it survives only as the pytest recall
-    cross-check. The registered query now ADAPTS on a measured
-    1-row statistic (max per-lang vocabulary, one tiny aggregate):
+    cross-check. The registered query is one adaptive
+    ``set_similarity_pairs`` call at J >= 0.5 with the 0.5 length band
+    (J >= 0.5 forces min >= max/2), which measures a 1-row statistic
+    (max per-lang vocabulary bit index, one tiny aggregate):
 
-    * vocabulary fits 64 * W bits (W <= _mask_max_words(), default 8
-      words; this fixture: 31 tokens/lang -> one word) -> BITMASK-SET
-      path: each doc's distinct-token set becomes W 64-bit integers
-      (bit index = rarest-first (df, tok) rank, a 155-row window);
-      i = sum_w bit_count(m_w_a & m_w_b), u = n_a + n_b - i — the
-      verify drops from array intersection to 2W integer
-      instructions per pair, and the probe side is a 5k-row
-      broadcast so NO shuffle reaches the pair stage. (Round 13:
-      the multi-word rung — dense-but-bounded vocabularies, e.g.
-      namespaced 10x replicas at 310 tokens/lang, used to fall off
-      at 64 bits into the degenerate-prefix regime.)
-    * otherwise -> EXACT PREFIX FILTERING (AllPairs/PPJoin,
-      Bayardo et al. WWW'07): per lang, tokens totally ordered
-      rarest-first by (df, tok); a doc of n distinct tokens emits
-      its first n DIV 2 + 1 under that order, and any J >= 0.5
-      pair provably shares an emitted token (if all shared tokens
-      sat in the last ceil(n/2)-1 positions then i < ceil(0.5·n)
-      <= the i forced by J >= 0.5 via u >= n). Subquadratic on
-      real Zipfian vocabularies because rare-first ordering keeps
-      hot tokens out of prefixes.
+    * vocabulary fits 64 * W bits (W <= 8 words; this fixture: 31
+      tokens/lang -> one word) -> BITMASK-SET rung: each doc's
+      distinct-token set becomes W 64-bit integers, i = sum_w
+      bit_count(m_w_a & m_w_b), u = n_a + n_b - i — the verify drops
+      from array intersection to 2W integer instructions per pair,
+      and the build side is a 5k-row broadcast so NO shuffle reaches
+      the pair stage. (Round 13: the multi-word rung — namespaced 10x
+      replicas at 310 tokens/lang used to fall off at 64 bits into
+      the degenerate-prefix regime, 160-219 s.)
+    * otherwise -> EXACT PREFIX FILTERING (AllPairs/PPJoin, Bayardo
+      et al. WWW'07): a doc of n distinct tokens emits its first
+      n - ceil(n/2) + 1 tokens in hash order, and any J >= 0.5 pair
+      provably shares an emitted token. Correctness holds under any
+      fixed total order, so the kernel's hash order serves; the
+      rarest-first order of the round-8 form only moved work between
+      equally frequent tokens on this dense vocabulary.
 
-    Both paths have recall EXACTLY 1 — required because the DuckDB
+    Both rungs have recall EXACTLY 1 — required because the DuckDB
     oracle counts every qualifying pair; C8's MinHash banding
     (recall < 1 at the 0.5 floor) would break the hash match.
     Cross-checks: tests/test_sampling.py::
-    test_c113_candidate_paths_agree runs all three forms."""
-    sized = _c113_sized_corpus(spark, sf_dir)
-    bit_tbl = _c113_bit_table(sized).persist(StorageLevel.MEMORY_AND_DISK)
-    # max assigned bit index decides the path BEFORE any mask is
-    # built — shiftleft wraps silently at >= 64, so the gate must
-    # read the vocabulary, not the masks.
-    vmax = bit_tbl.agg(F.max("bit").alias("m")).first()["m"]
-    masked = None
-    # vmax is NULL on an empty corpus (no rows survive the size(raw)>0
-    # filter): fall through to the prefix path, which degrades to an
-    # empty curve instead of a NoneType comparison crash.
-    # Round 13 (verdict task 1): the mask rung now serves vocabularies
-    # up to 64 * _mask_max_words() bits (multi-word masks, W ANDs +
-    # popcounts per pair) — the dense-but-bounded regime that used to
-    # degrade to ~all-pairs prefix candidates (10x probe: 160-219 s).
-    if vmax is not None and vmax < 64 * _mask_max_words():
-        n_words = vmax // 64 + 1
-        masked = _c113_doc_masks(sized, bit_tbl, n_words).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        out = _c113_fold_bands(
-            _c113_bitmask_pairs(sized, bit_tbl, masked, n_words)
-        )
-    else:
-        # Fallback boundary (round 12): re-widen the persisted corpus
-        # to full session width before the INTERPRETED prefix path —
-        # the adaptive narrow entry is sized for the bitmask path's
-        # codegen work only (see jaccard_near_dedup's identical note).
-        sized_w = widen(sized)
-        out = _c113_band_curve(sized_w, _c113_prefix_candidates(sized_w))
-    result = out.localCheckpoint(eager=True)
-    if masked is not None:
-        masked.unpersist()
-    bit_tbl.unpersist()
-    sized.unpersist()
-    return result
+    test_c113_candidate_paths_agree runs all three rungs."""
+    pairs = set_similarity_pairs(
+        _c113_sized_corpus(spark, sf_dir),
+        threshold=0.5,
+        block_cols=["lang"],
+        length_band=0.5,
+    )
+    return _c113_fold_bands(pairs)
 
 
 def _c113_sized_corpus(spark, sf_dir):
-    """C113's planted corpus as (doc_id, lang, toks, n), persisted.
+    """C113's planted corpus as a signature frame (doc_id, lang, toks).
 
     toks is the sorted distinct xxhash64 token-set; plants are the
     nested-set clones described in q_c113_threshold_sweep_curve."""
-    # adaptive_width (round 12): the bitmask path downstream is pure
+    # adaptive_width (round 12): the bitmask rung downstream is pure
     # integer codegen, so the planted fixture corpus does not need the
     # full 32-way fan-out — measured 5.7 -> 3.0 s warm on q_c113.
     d0 = load_table(spark, sf_dir, "documents")
@@ -3361,186 +3154,29 @@ def _c113_sized_corpus(spark, sf_dir):
                 expr.alias("raw"),
             )
         )
-    return (
-        corpus.filter(F.size("raw") > 0)
-        .select(
-            "doc_id",
-            "lang",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform("raw", lambda t: F.xxhash64(t))
-                )
-            ).alias("toks"),
-        )
-        .withColumn("n", F.size("toks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-
-def _c113_length_compatible():
-    """Shared candidate length gate: J >= 0.5 forces min >= max/2."""
-    return F.abs(F.col("a.n") - F.col("b.n")) <= 0.5 * F.greatest(
-        F.col("a.n"), F.col("b.n")
-    )
-
-
-def _c113_prefix_candidates(sized):
-    """Exact prefix-filter candidate ids (d1 < d2) for J >= 0.5.
-
-    Rare-first total order per lang: (df, tok) ascending, df = number
-    of corpus docs containing tok in that lang. Each doc emits its
-    first n DIV 2 + 1 ordered tokens; candidates are prefix-token
-    collisions passing the length gate. Deterministic (ties in df
-    break on the token hash) and recall-1 by the prefix lemma."""
-    tok = sized.select(
-        "doc_id", "lang", "n", F.explode("toks").alias("tok")
-    )
-    df_tbl = tok.groupBy("lang", "tok").agg(F.count("*").alias("df"))
-    prefix = (
-        tok.join(df_tbl, ["lang", "tok"])
-        .groupBy("doc_id", "lang", "n")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("df", "tok"))).alias(
-                "ordered"
-            )
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "n",
-            F.explode(
-                F.transform(
-                    F.slice("ordered", 1, F.expr("n div 2 + 1")),
-                    lambda s: s["tok"],
-                )
-            ).alias("tok"),
-        )
-    )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & _c113_length_compatible(),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-        )
-        .distinct()
-    )
-
-
-def _c113_bit_table(sized):
-    """Per-lang vocabulary with rarest-first bit index (df, tok rank).
-
-    <= |vocab| rows per lang; the max bit gates the bitmask path."""
-    from pyspark.sql.window import Window
-
-    return (
-        sized.select("doc_id", "lang", F.explode("toks").alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count("*").alias("df"))
-        .withColumn(
-            "bit",
-            F.row_number().over(
-                Window.partitionBy("lang").orderBy("df", "tok")
-            )
-            - 1,
-        )
-        .select("lang", "tok", "bit")
-    )
-
-
-def _c113_doc_masks(sized, bit_tbl, n_words: int = 1):
-    """Fold each doc's distinct-token set into a W-word bitmask."""
-    return (
-        sized.select("doc_id", "lang", F.explode("toks").alias("tok"))
-        .join(F.broadcast(bit_tbl), ["lang", "tok"])
-        .groupBy("doc_id", "lang")
-        .agg(*_mask_word_cols(n_words))
-        .withColumn("n", _mask_popcount(n_words).cast("int"))
-    )
-
-
-def _c113_bitmask_pairs(sized, bit_tbl, masked=None, n_words: int = 1):
-    """Exact (d1, d2, i, u) pairs via W-word set masks (vocab <= 64W).
-
-    Each doc folds to W longs (bit index from bit_tbl); the pair
-    stage is a broadcast hash join on lang with the full J >= 0.5
-    pigeonhole length gate, i via summed bit_count(m_w & m_w) — pure
-    codegen integer ops, no shuffle on the probe side and no arrays
-    at pair time. Pass a persisted `masked` (from _c113_doc_masks)
-    so the broadcast build does not recompute the fold."""
-    if masked is None:
-        masked = _c113_doc_masks(sized, bit_tbl, n_words)
-    a, b = masked.alias("a"), F.broadcast(masked.alias("b"))
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & _c113_length_compatible(),
-    )
-    i = _mask_intersection(n_words).cast("long")
-    return pairs.select(
-        F.col("a.doc_id").alias("d1"),
-        F.col("b.doc_id").alias("d2"),
-        i.alias("i"),
-        (F.col("a.n") + F.col("b.n") - i).alias("u"),
-    )
-
-
-def _c113_allpairs_candidates(sized):
-    """Round-7 DEMO path: lang-blocked all-pairs with the length gate.
-
-    Quadratic in the lang block — kept ONLY as the pytest recall
-    cross-check against _c113_prefix_candidates; the registered query
-    no longer runs it (round-7 verdict: 26.7 s bench tail at sf0.1)."""
-    a, b = sized.alias("a"), sized.alias("b")
-    return a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & _c113_length_compatible(),
-    ).select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-
-
-def _c113_band_curve(sized, cand_ids):
-    """Verify candidate id pairs exactly and fold into the band curve.
-
-    Integer-exact: i/u from array_intersect sizes, gate 2i >= u,
-    band = (10·i) DIV u — identical arithmetic to the DuckDB oracle."""
-    left = sized.select(
-        F.col("doc_id").alias("d1"),
-        F.col("toks").alias("ta"),
-        F.col("n").alias("na"),
-    )
-    right = sized.select(
-        F.col("doc_id").alias("d2"),
-        F.col("toks").alias("tb"),
-        F.col("n").alias("nb"),
-    )
-    i = F.size(F.array_intersect("ta", "tb"))
-    u = F.col("na") + F.col("nb") - i
-    return _c113_fold_bands(
-        cand_ids.join(left, "d1")
-        .join(right, "d2")
-        .select("d1", "d2", i.alias("i"), u.alias("u"))
+    return corpus.filter(F.size("raw") > 0).select(
+        "doc_id",
+        "lang",
+        F.array_sort(token_hashes("raw")).alias("toks"),
     )
 
 
 def _c113_fold_bands(pairs):
-    """(d1, d2, i, u) -> the band-tenths histogram (shared fold)."""
-    banded = pairs.filter(2 * F.col("i") >= F.col("u")).select(
-        "d1",
-        "d2",
-        F.expr("10 * i div u").cast("long").alias("band_tenths"),
+    """Kernel pairs (id_1, id_2, i, n_1, n_2) -> the band-tenths
+    histogram. Integer-exact: u = n_1 + n_2 - i, gate 2i >= u,
+    band = (10·i) DIV u — identical arithmetic to the DuckDB oracle."""
+    banded = (
+        pairs.withColumn("u", F.col("n_1") + F.col("n_2") - F.col("i"))
+        .filter(2 * F.col("i") >= F.col("u"))
+        .select(
+            "id_1",
+            "id_2",
+            F.expr("10 * i div u").cast("long").alias("band_tenths"),
+        )
     )
     return (
-        banded.select("band_tenths", F.col("d1").alias("d"))
-        .unionByName(banded.select("band_tenths", F.col("d2").alias("d")))
+        banded.select("band_tenths", F.col("id_1").alias("d"))
+        .unionByName(banded.select("band_tenths", F.col("id_2").alias("d")))
         .groupBy("band_tenths")
         .agg(
             (F.count("*") / 2).cast("long").alias("n_pairs"),

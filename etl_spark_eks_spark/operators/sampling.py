@@ -2443,7 +2443,7 @@ def _eval_proximity_tables(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
     # Three consumers (bench join side, candidate side, bench totals)
     # of one expensive shingle pipeline -> persist for the call; the
     # report below is bench-sized, so materializing it eagerly and
-    # releasing the cache costs nothing (containment_pairs' pattern).
+    # releasing the cache costs nothing.
     sh = (
         widen(corpus)
         .select(

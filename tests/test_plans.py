@@ -81,10 +81,10 @@ def test_minhash_no_duplicated_signature_evaluation(spark, sf_dir):
 
 def test_prefix_jaccard_no_duplicated_signature_evaluation(spark, sf_dir):
     """Same guard as q_c8 for the prefix-filter Jaccard join (q_c16):
-    the persisted signature table must appear as cache scans, with the
-    tokenize pipeline only in the cache-build subtree — not re-inlined
-    per consumer (prefix explode + two fetch-backs would mean 3 full
-    recomputes, measured 6.5x)."""
+    the materialized signature table (the kernel's localCheckpoint)
+    must appear as checkpointed-RDD scans, with the tokenize pipeline
+    not re-inlined per consumer (prefix explode + two fetch-backs
+    would mean 3 full recomputes, measured 6.5x)."""
     df = registry.QUERIES["q_c16_ngram_jaccard"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_tokenize = plan.count("split(text")
@@ -95,7 +95,7 @@ def test_prefix_jaccard_no_duplicated_signature_evaluation(spark, sf_dir):
     # 700 KB plan string; a low teens count stays an order below it.
     assert n_tokenize <= 12, f"signature expression duplicated: {n_tokenize} copies"
     assert len(plan) < 100_000, f"plan blew up to {len(plan)} chars"
-    assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
+    assert "ExistingRDD" in plan
 
 
 def test_bucketed_join_no_shuffle(spark, sf_dir):
@@ -477,24 +477,26 @@ def test_scd2_single_user_exchange(spark, sf_dir):
 
 
 def test_containment_persists_signature_table(spark, sf_dir):
-    """C64: probe, index, and both fetch-back sides must read the
-    persisted shingle-set table (InMemoryTableScan), not re-run the
-    tokenize+hash pipeline per consumer (the measured 6.5x q_c16
-    failure mode). The query path materializes eagerly and unpersists
-    (r7 leak fix), so the lazy plan is inspected via
-    materialize=False; the query path's returned plan must be the
-    opaque checkpointed scan (proof the cache cannot leak past the
-    call)."""
+    """C64: probe, index, and both fetch-back sides must read ONE
+    materialized shingle-set table, not re-run the tokenize+hash
+    pipeline per consumer (the measured 6.5x q_c16 failure mode). The
+    kernel checkpoints the table, so the returned plan scans the
+    checkpointed RDD and renders the tokenize pipeline at most once
+    (the q_c8/q_c27 counting technique: per-consumer re-tokenization
+    would show four or more copies), and no cache entry outlives the
+    call (the r7 leak)."""
     from etl_spark_eks_spark.operators.dedup import containment_pairs
-    from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    lazy = containment_pairs(docs, 0.8, materialize=False)
-    plan = plan_of(lazy, "simple")
-    assert plan.count("InMemoryTableScan") >= 3
-    spark.catalog.clearCache()  # release the test-held persist
+    spark.catalog.clearCache()
+    df = containment_pairs(docs, 0.8)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan[:2000]
+    n_tok = plan.count("split(text")
+    assert n_tok <= 1, f"shingle pipeline re-run per consumer: {n_tok}"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     df = registry.QUERIES["q_c64_containment_neardup"](spark, sf_dir)
     assert "ExistingRDD" in plan_of(df, "simple")
 

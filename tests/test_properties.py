@@ -1824,45 +1824,79 @@ doc_texts = st.lists(
 )
 
 
-@given(texts=doc_texts, threshold=st.sampled_from([0.3, 0.6, 0.8]))
+@given(
+    texts=doc_texts,
+    others=doc_texts,
+    threshold=st.sampled_from([0.3, 0.6, 0.8]),
+)
 @_settings
 def test_jaccard_near_dedup_matches_python_bruteforce(
-    spark, texts, threshold
+    spark, texts, others, threshold
 ):
-    """All three candidate strategies of jaccard_near_dedup fuzzed
-    against a pure-Python brute force on RANDOM documents (the existing
-    strategy tests only cross-compare strategies on the fixture): pair
-    set, order normalization (doc_id_1 < doc_id_2), and the Jaccard
-    value itself must match for arbitrary token overlap structure,
-    inside the same 20% length band."""
-    from etl_spark_eks_spark.operators.dedup import jaccard_near_dedup
+    """The set_similarity_pairs kernel behind jaccard_near_dedup (and
+    every other near-dup caller) fuzzed against a pure-Python brute
+    force on RANDOM documents, for every supported (measure, form,
+    rung): self-join Jaccard on the mask (adaptive), prefix and
+    all-pairs rungs; bipartite Jaccard (texts x others) on the mask and
+    prefix rungs; directed containment on the prefix rung. The pair
+    set, the pair orientation, and the exact (i, n_1, n_2) integers
+    must match inside the same 20% length band (Jaccard) for arbitrary
+    token overlap structure, and no call may leave a CacheManager
+    entry behind."""
+    from fractions import Fraction
 
-    rows = [(i, t, "xx") for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    from etl_spark_eks_spark.operators.dedup import (
+        set_similarity_pairs,
+        text_signatures,
+    )
 
-    sets = {i: frozenset(t.split()) for i, t in enumerate(texts)}
-    expect = set()
-    for a in sets:
-        for b in sets:
-            if a >= b:
-                continue
-            na, nb = len(sets[a]), len(sets[b])
-            if abs(na - nb) > 0.2 * max(na, nb):
-                continue
-            inter = len(sets[a] & sets[b])
-            j = inter / (na + nb - inter)
-            if j >= threshold:
-                expect.add((a, b, round(j, 9)))
+    t = Fraction(threshold).limit_denominator(100)
 
-    for strategy in ("prefix", "allpairs", "adaptive"):
-        got = {
-            (r["doc_id_1"], r["doc_id_2"], round(r["jaccard"], 9))
-            for r in jaccard_near_dedup(
-                df, "text", "doc_id", ["lang"], threshold, 0.2,
-                strategy=strategy,
-            ).collect()
+    def sigs(docs, base):
+        rows = [(base + i, d, "xx") for i, d in enumerate(docs)]
+        df = spark.createDataFrame(
+            rows, "doc_id long, text string, lang string"
+        )
+        sets = {base + i: frozenset(d.split()) for i, d in enumerate(docs)}
+        return text_signatures(df, "text", "doc_id", ["lang"]), sets
+
+    left, ls = sigs(texts, 0)
+    right, rs = sigs(others, 100)
+
+    def brute(a_sets, b_sets, keep):
+        return {
+            (a, b, len(sa & sb), len(sa), len(sb))
+            for a, sa in a_sets.items()
+            for b, sb in b_sets.items()
+            if keep(a, b, len(sa & sb), len(sa), len(sb))
         }
-        assert got == expect, (strategy, got ^ expect)
+
+    def jaccard(a, b, i, na, nb):
+        in_band = abs(na - nb) <= Fraction(1, 5) * max(na, nb)
+        return in_band and i >= t * (na + nb - i)
+
+    self_jac = brute(ls, ls, lambda a, b, *r: a < b and jaccard(a, b, *r))
+    bip_jac = brute(ls, rs, jaccard)
+    contained = brute(ls, ls, lambda a, b, i, na, nb: a != b and i >= t * na)
+    jac_kw = {
+        "threshold": threshold, "block_cols": ["lang"], "length_band": 0.2
+    }
+    contain_kw = {
+        "threshold": threshold, "measure": "containment", "strategy": "prefix"
+    }
+    cases = [
+        (self_jac, (left,), dict(jac_kw, strategy=s))
+        for s in ("adaptive", "prefix", "allpairs")
+    ] + [
+        (bip_jac, (left, right), dict(jac_kw, strategy=s))
+        for s in ("adaptive", "prefix")
+    ] + [(contained, (left,), contain_kw)]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for expect, frames, kw in cases:
+        got = {tuple(r) for r in set_similarity_pairs(*frames, **kw).collect()}
+        assert got == expect, (len(frames), kw, got ^ expect)
+        assert cache.isEmpty(), (len(frames), kw)
 
 
 payloads = st.lists(

@@ -440,37 +440,34 @@ def test_c112_planted_copies_are_contaminated(spark, sf_dir):
 
 
 def test_c113_candidate_paths_agree(spark, sf_dir):
-    """All three C113 forms — bitmask-set (registered on this
-    fixture's 31-token vocab), exact prefix filtering (the
-    large-vocab path), and the round-7 blocked all-pairs — must
-    produce the identical band curve (recall 1 each; any lost pair
-    would under-count a band and break the DuckDB oracle's hash)."""
+    """All three kernel rungs on C113's planted corpus — bitmask-set
+    (``adaptive``, registered on this fixture's 31-token vocab), exact
+    prefix filtering (the large-vocab rung), and the round-7 blocked
+    all-pairs — must fold the identical band curve (recall 1 each; any
+    lost pair would under-count a band and break the DuckDB oracle's
+    hash)."""
     from etl_spark_eks_spark.operators.dedup import (
-        _c113_allpairs_candidates,
-        _c113_band_curve,
-        _c113_bit_table,
-        _c113_bitmask_pairs,
         _c113_fold_bands,
-        _c113_prefix_candidates,
         _c113_sized_corpus,
+        set_similarity_pairs,
     )
 
     sized = _c113_sized_corpus(spark, sf_dir)
-    try:
-        bit_tbl = _c113_bit_table(sized)
-        bitmask = _c113_fold_bands(
-            _c113_bitmask_pairs(sized, bit_tbl)
-        ).collect()
-        prefix = _c113_band_curve(
-            sized, _c113_prefix_candidates(sized)
-        ).collect()
-        allpairs = _c113_band_curve(
-            sized, _c113_allpairs_candidates(sized)
-        ).collect()
-    finally:
-        sized.unpersist()
-    assert [tuple(r) for r in bitmask] == [tuple(r) for r in allpairs]
-    assert [tuple(r) for r in prefix] == [tuple(r) for r in allpairs]
+    curves = {
+        strategy: [
+            tuple(r)
+            for r in _c113_fold_bands(
+                set_similarity_pairs(
+                    sized, threshold=0.5, block_cols=["lang"],
+                    length_band=0.5, strategy=strategy,
+                )
+            ).collect()
+        ]
+        for strategy in ("adaptive", "prefix", "allpairs")
+    }
+    assert curves["adaptive"] == curves["allpairs"]
+    assert curves["prefix"] == curves["allpairs"]
+    assert curves["allpairs"], "planted clones should fill bands"
 
 
 def test_c113_planted_clones_land_in_expected_bands(spark, sf_dir):

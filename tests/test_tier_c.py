@@ -351,28 +351,32 @@ def test_connected_components_chain_clique_singleton(spark):
     assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
 
 
+def _kernel_pairs(sig, **kw):
+    """Sorted (id_1, id_2, i, n_1, n_2) rows of one kernel call."""
+    from etl_spark_eks_spark.operators.dedup import set_similarity_pairs
+
+    return sorted(tuple(r) for r in set_similarity_pairs(sig, **kw).collect())
+
+
 def test_jaccard_strategies_identical_pairs(spark, sf_dir):
-    """C2/C16: the prefix-filter join and the triangle all-pairs join
-    are different CANDIDATE generators around the same exact predicate
-    — they must return the identical pair set (the prefix filter has
-    no false negatives by the pigeonhole argument; this is the
-    executable form of that proof)."""
-    from etl_spark_eks_spark.operators.dedup import jaccard_near_dedup
+    """C2/C16: the kernel's prefix-filter rung and triangle all-pairs
+    rung are different CANDIDATE generators around the same exact
+    predicate — they must return the identical pair set (the prefix
+    filter has no false negatives by the pigeonhole argument; this is
+    the executable form of that proof)."""
+    from etl_spark_eks_spark.operators.dedup import text_signatures
 
     d = load_table(spark, sf_dir, "documents")
     for shingle_k in (None, 3):
+        sig = text_signatures(d, "text", "doc_id", ["lang"], shingle_k)
         got = {}
-        # "adaptive" takes the 64-bit mask path for token sets (31-token
+        # "adaptive" takes the mask rung for token sets (31-token
         # per-lang vocab) and the prefix fallback for shingles (wide
         # vocab) — both legs of the gate are exercised here.
         for strategy in ("prefix", "allpairs", "adaptive"):
-            rows = jaccard_near_dedup(
-                d, "text", "doc_id", ["lang"], 0.6, 0.2,
-                shingle_k=shingle_k, strategy=strategy,
-            ).collect()
-            got[strategy] = sorted(
-                (r["doc_id_1"], r["doc_id_2"], round(r["jaccard"], 9))
-                for r in rows
+            got[strategy] = _kernel_pairs(
+                sig, threshold=0.6, block_cols=["lang"], length_band=0.2,
+                strategy=strategy,
             )
         assert got["prefix"] == got["allpairs"], (
             f"strategy mismatch for shingle_k={shingle_k}"
@@ -385,26 +389,36 @@ def test_jaccard_strategies_identical_pairs(spark, sf_dir):
 
 def test_adaptive_pairs_match_allpairs(spark, sf_dir):
     """C18/C58 recall cross-check (round-8 verdict task 1): the
-    registered queries source candidates from ``strategy="adaptive"``
-    (the C113 exact-path gate — 64-bit set masks when the per-block
-    vocabulary fits, exact prefix filter otherwise); the retired
-    quadratic allpairs form survives here as the executable proof that
-    the adaptive pair set is bit-identical at the exact J >= 0.8 /
-    20%-length-band contract the oracle checks."""
-    from etl_spark_eks_spark.operators.dedup import jaccard_near_dedup
+    registered queries source candidates from the kernel's
+    ``strategy="adaptive"`` gate (multi-word set masks when the
+    per-block vocabulary fits, exact prefix filter otherwise); the
+    retired quadratic all-pairs rung survives here as the executable
+    proof that the adaptive pair set is bit-identical at the exact
+    J >= 0.8 / 20%-length-band contract the oracle checks."""
+    from etl_spark_eks_spark.operators.dedup import text_signatures
 
     d = load_table(spark, sf_dir, "documents")
-    got = {}
-    for strategy in ("adaptive", "allpairs"):
-        rows = jaccard_near_dedup(
-            d, "text", "doc_id", ["lang"], 0.8, 0.2, strategy=strategy
-        ).collect()
-        got[strategy] = sorted(
-            (r["doc_id_1"], r["doc_id_2"], round(r["jaccard"], 9))
-            for r in rows
+    sig = text_signatures(d, "text", "doc_id", ["lang"])
+    got = {
+        strategy: _kernel_pairs(
+            sig, threshold=0.8, block_cols=["lang"], length_band=0.2,
+            strategy=strategy,
         )
+        for strategy in ("adaptive", "allpairs")
+    }
     assert got["adaptive"] == got["allpairs"]
     assert got["adaptive"], "fixture should produce J>=0.8 pairs"
+
+
+def _mask_words(sig, block_cols):
+    """W of the kernel's mask rung for ``sig``, or None (prefix)."""
+    from etl_spark_eks_spark.operators.dedup import _block_bitmask_table
+
+    fit = _block_bitmask_table(
+        sig.withColumn("side", F.lit(0)).withColumn("n", F.size("toks")),
+        block_cols,
+    )
+    return None if fit is None else fit[1]
 
 
 def test_adaptive_multiword_mask_matches_allpairs(spark):
@@ -413,10 +427,7 @@ def test_adaptive_multiword_mask_matches_allpairs(spark):
     (the regime that used to fall off the bitmask path into the
     degenerate prefix filter) must take a W>=2-word mask and return
     the identical pair set as the quadratic allpairs reference."""
-    from etl_spark_eks_spark.operators.dedup import (
-        _block_bitmask_table,
-        jaccard_near_dedup,
-    )
+    from etl_spark_eks_spark.operators.dedup import text_signatures
 
     # 150 distinct tokens per lang (>64, <=512): W should be 3.
     # Docs draw 30-token windows over the vocab ring; every 5th doc
@@ -432,50 +443,30 @@ def test_adaptive_multiword_mask_matches_allpairs(spark):
             clone[0], clone[1], clone[2] = vocab[lo], vocab[lo], vocab[lo]
             rows.append((d + 1000, "xx", " ".join(clone)))
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    sig = text_signatures(df, "text", "doc_id", ["lang"])
 
     # the gate really picks a multi-word mask (not the prefix fallback)
-    tok_long = df.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.array_distinct(
-                F.transform(tokenize("text"), lambda t: F.xxhash64(t))
-            )
-        ).alias("tok"),
-    )
-    fit = _block_bitmask_table(tok_long, ["lang"])
-    assert fit is not None, "150-token vocab must fit the multi-word rung"
-    masked, n_words = fit
-    try:
-        assert n_words == 3, n_words
-    finally:
-        masked.unpersist()
+    assert _mask_words(sig, ["lang"]) == 3
 
-    got = {}
-    for strategy in ("adaptive", "allpairs"):
-        pair_rows = jaccard_near_dedup(
-            df, "text", "doc_id", ["lang"], 0.6, 0.2, strategy=strategy
-        ).collect()
-        got[strategy] = sorted(
-            (r["doc_id_1"], r["doc_id_2"], round(r["jaccard"], 9))
-            for r in pair_rows
+    got = {
+        strategy: _kernel_pairs(
+            sig, threshold=0.6, block_cols=["lang"], length_band=0.2,
+            strategy=strategy,
         )
+        for strategy in ("adaptive", "allpairs")
+    }
     assert got["adaptive"] == got["allpairs"]
     assert got["adaptive"], "planted clones should produce J>=0.6 pairs"
 
 
 def test_c113_multiword_mask_band_curve_matches(spark):
-    """Round 13: q_c113's dedicated mask path with a >64-token
-    vocabulary (W=2 words) must fold the identical band curve as the
-    blocked all-pairs reference."""
-    from pyspark.storagelevel import StorageLevel
-
+    """Round 13: q_c113's mask rung with a >64-token vocabulary (W=2
+    words) must fold the identical band curve as the blocked all-pairs
+    reference, and so must the prefix rung."""
+    from etl_spark_eks_spark.functions.text import token_hashes
     from etl_spark_eks_spark.operators.dedup import (
-        _c113_allpairs_candidates,
-        _c113_band_curve,
-        _c113_bit_table,
-        _c113_bitmask_pairs,
         _c113_fold_bands,
+        set_similarity_pairs,
     )
 
     vocab = [f"v{i:03d}" for i in range(100)]
@@ -487,36 +478,27 @@ def test_c113_multiword_mask_band_curve_matches(spark):
         if d % 4 == 0:  # nested truncation -> mid bands
             rows.append((d + 500, "yy", " ".join(toks[:14])))
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    sized = (
-        df.select(
-            "doc_id",
-            "lang",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform(tokenize("text"), lambda t: F.xxhash64(t))
-                )
-            ).alias("toks"),
-        )
-        .withColumn("n", F.size("toks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sig = df.select(
+        "doc_id",
+        "lang",
+        F.array_sort(token_hashes(tokenize("text"))).alias("toks"),
     )
-    try:
-        bit_tbl = _c113_bit_table(sized)
-        vmax = bit_tbl.agg(F.max("bit").alias("m")).first()["m"]
-        assert vmax is not None and 64 <= vmax < 128, vmax
-        n_words = vmax // 64 + 1
-        mask_curve = _c113_fold_bands(
-            _c113_bitmask_pairs(sized, bit_tbl, n_words=n_words)
-        ).collect()
-        allpairs_curve = _c113_band_curve(
-            sized, _c113_allpairs_candidates(sized)
-        ).collect()
-    finally:
-        sized.unpersist()
-    assert [tuple(r) for r in mask_curve] == [
-        tuple(r) for r in allpairs_curve
-    ]
-    assert mask_curve, "planted truncations should fill bands"
+    assert _mask_words(sig, ["lang"]) == 2
+    curves = {
+        strategy: [
+            tuple(r)
+            for r in _c113_fold_bands(
+                set_similarity_pairs(
+                    sig, threshold=0.5, block_cols=["lang"],
+                    length_band=0.5, strategy=strategy,
+                )
+            ).collect()
+        ]
+        for strategy in ("adaptive", "prefix", "allpairs")
+    }
+    assert curves["adaptive"] == curves["allpairs"]
+    assert curves["prefix"] == curves["allpairs"]
+    assert curves["adaptive"], "planted truncations should fill bands"
 
 
 def test_pq_recall_vs_bruteforce(spark, sf_dir):

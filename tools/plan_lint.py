@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Plan lint: walk EVERY registered query's physical plan and flag the
 three 100 TB anti-patterns mechanically, instead of auditing plans
-anecdotally:
+anecdotally, plus one session-hygiene check:
 
   1. cartesian   — CartesianProduct / BroadcastNestedLoopJoin (a join
                    that compares every pair; at scale this is the
@@ -10,6 +10,9 @@ anecdotally:
                    plan (the 10-100x slow path vs Arrow batches)
   3. single_part — an Exchange SinglePartition feeding work that is
                    not by-construction tiny (serial-task cliff)
+  4. cache_residue — building the query (from a cleared cache) leaves
+                   an entry in the session's CacheManager, which the
+                   next query in a long-lived session inherits
 
 Each hit is either in the query's documented allowlist (the docstring
 owns the justification) or a lint FAILURE. tests/test_plans.py runs
@@ -142,6 +145,22 @@ ALLOW_SINGLE_PART = {
     "q_c43_embedding_winsorize", "q_c76_epoch_upsample",
     "q_c7_tfidf",
 }
+# Queries whose returned plan reads a persisted table, so building
+# them leaves a CacheManager entry (unpersisting before the caller's
+# action would silently re-run the cached subtree per consumer).
+ALLOW_CACHE_RESIDUE = {
+    "q_b117_cached_multi_action",  # the cache IS the demo: two aggregations read one cached projection
+    "q_c8_minhash_bands",          # banded MinHash signature table read by both sides of the band self-join
+    "q_c9_simhash_neardup",        # banded simhash table read by both sides of the band self-join
+    "q_c18_dedup_clusters",        # connected_components' per-round moves tables, read by the lazy label chain
+    "q_c58_cluster_canonicals",    # same connected_components moves tables as q_c18
+    "q_c127_semdedup",             # same connected_components moves tables as q_c18
+    "q_c73_signature_probe_neardup",  # corpus signature index (token hashes + bands) read by the band probe and the verify
+    "q_c92_perplexity_buckets",    # per-doc table read by the bucket build, the n_l broadcast and the rank join
+    "q_c101_source_divergence_matrix",  # contracted vocab tables read by the driver pulls and the final join
+    "q_c102_substring_span_surgery",  # span table read by the two rewrite joins and the anti-join
+    "q_m4_media_phash_neardup",    # banded phash table read by both sides of the band self-join
+}
 # Streaming queries run real streams inside the builder; their plans are
 # micro-batch internals, not batch plans — lint the batch surface only.
 SKIP = {
@@ -170,14 +189,18 @@ def lint(only=None) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
     spark = get_spark(app_name="plan-lint")
     spark.sparkContext.setLogLevel("ERROR")
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
     keys = [k for k in registry.QUERIES if k not in SKIP]
     if only:
         keys = [k for k in keys if k in only]
     violations: dict[str, list[str]] = {}
     used: dict[str, set[str]] = {
-        "cartesian": set(), "py_row": set(), "single_part": set()
+        "cartesian": set(), "py_row": set(), "single_part": set(),
+        "cache_residue": set(),
     }
     for k in keys:
+        spark.catalog.clearCache()
         df = registry.QUERIES[k](spark, SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
@@ -203,6 +226,11 @@ def lint(only=None) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
                 used["single_part"].add(k)
             else:
                 hits.append("single_part")
+        if not cache.isEmpty():
+            if k in ALLOW_CACHE_RESIDUE:
+                used["cache_residue"].add(k)
+            else:
+                hits.append("cache_residue")
         if hits:
             violations[k] = hits
     linted = set(keys)
@@ -211,6 +239,7 @@ def lint(only=None) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
         ("cartesian", ALLOW_CARTESIAN),
         ("py_row", ALLOW_PY_ROW),
         ("single_part", ALLOW_SINGLE_PART),
+        ("cache_residue", ALLOW_CACHE_RESIDUE),
     ):
         for k in sorted((allow & linted) - used[pattern]):
             dead.setdefault(k, []).append(pattern)
