@@ -331,7 +331,7 @@ def portable_minhash_bands_np(
     ``mapInPandas`` instead of 32 interpreted per-seed array
     transforms + 16 md5 band expressions per row.
 
-    BIT-IDENTITY argument (the _km_assign_np clause structure):
+    BIT-IDENTITY argument (the similarity._assign_np clause structure):
     (1) the 32-bit token hash is ``int(md5(token_utf8)[:8], 16)`` —
     hashlib md5 over the token's UTF-8 bytes is the same digest the
     JVM computes, and the 8-hex-char prefix parse matches

@@ -394,8 +394,8 @@ def portable_perceptual_hashes_np(
     df: DataFrame, binary_col: str, id_col: str
 ) -> DataFrame:
     """Arrow-batched twin of :func:`portable_perceptual_hashes`
-    (round 12, optimization — the `_km_assign_np` pattern applied to
-    the portable phash): same output contract — (doc_id, phash_hi,
+    (round 12, optimization — similarity's `_assign_np` pattern
+    applied to the portable phash): same output contract — (doc_id, phash_hi,
     phash_lo), 2 x 60-bit majority-vote signatures over one md5 per
     aligned little-endian 4-byte word — but computed with hashlib +
     numpy inside ``mapInPandas`` instead of the declarative
@@ -409,7 +409,7 @@ def portable_perceptual_hashes_np(
     node; the payload still never shuffles (only 16 hash bytes come
     out, same as before).
 
-    BIT-IDENTITY argument (the _km_assign_np clause structure):
+    BIT-IDENTITY argument (the similarity._assign_np clause structure):
     (1) the word value is the little-endian uint32 of each aligned
     4-byte group — ``np.frombuffer('<u4')`` == the hex-pair
     byte(0) + byte(1)*256 + ... fold; (2) md5 of the word's decimal

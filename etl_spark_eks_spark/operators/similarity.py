@@ -16,6 +16,9 @@ the scale path, embedding column stats.
 
 from __future__ import annotations
 
+from collections import namedtuple
+from decimal import Decimal, localcontext
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -24,6 +27,7 @@ from pyspark.storagelevel import StorageLevel
 
 from etl_spark_eks_spark.catalog import load_table, widen
 from etl_spark_eks_spark.functions.exact import dsum
+from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.functions.vector import cosine_similarity, dot, l2_norm
 from etl_spark_eks_spark.registry import query
 
@@ -681,7 +685,7 @@ def _km_assign_decl(base: DataFrame, cmat, vcol: str) -> DataFrame:
     evaluate: per (row, cluster) the exact fixed-order d2 fold
     (`_pq_d2`), argmin via min_by with ties to the smaller cluster.
     Returns (vec_id, cluster, <vcol>, d2). Kept as the documented twin
-    of :func:`_km_assign_np` (bit-identity pinned in
+    of :func:`_assign_np` (bit-identity pinned in
     tests/test_tier_c.py::test_km_assign_np_bit_identical); the hot
     paths run the Arrow-batched form."""
     spark = base.sparkSession
@@ -786,78 +790,204 @@ def _km_assign_batch(x: "np.ndarray", cvs: "np.ndarray", prefilter=None):
     return keep_c[sel], acc[sel]
 
 
-def _km_assign_np(
-    base: DataFrame, cmat, vcol: str, vtype: str, carry: str | None = None
+def _assign_np(
+    points: DataFrame,
+    book: dict,
+    vcol: str,
+    vtype: str,
+    group: str | None = None,
+    carry: str | None = None,
 ) -> DataFrame:
-    """Arrow-batched twin of :func:`_km_assign_decl` (round 12 — the
-    `_pq_assign_np` pattern applied to the FULL-vector Lloyd stage):
-    nearest-centroid squared-L2 assignment with ties to the smaller
-    cluster, returning (vec_id, cluster, <vcol>, d2), but the
-    per-(row, cluster) d2 fold runs as a numpy j-ascending float64
-    accumulation inside ``mapInPandas`` instead of k interpreted
-    64-element Catalyst lambda folds per input row — and each input
-    row emits its winner directly, so the declarative form's k-times
-    row blow-up AND its groupBy(vec_id) corpus shuffle per Lloyd round
-    both disappear.
+    """Arrow-batched nearest-centroid assignment, the one assigner of
+    the k-means / PQ / IVF-quantizer family: squared L2 with ties to
+    the smaller code, returning (vec_id, [group], <vcol>, [carry],
+    code, d2). ``book`` maps each cell to its centroid: the cell is the
+    code for full vectors, or ``(group value, code)`` when ``group``
+    names a column (PQ's subspace) whose rows each assign against their
+    own group's codes. Per Arrow batch and group the work is one
+    :func:`_km_assign_batch` call, and each input row emits its winner
+    directly: no k-times row blow-up and no groupBy(vec_id) shuffle.
+    ``carry`` passes one int column through unchanged (the previous
+    round's code, see :func:`lloyd`).
 
-    BIT-IDENTITY argument (what keeps q_c30/q_c44/q_c127/q_c140/
-    q_c145's hash oracles unchanged — the same four clauses accepted
-    for `_pq_assign_np`): (1) the declarative fold computes
+    BIT-IDENTITY with the declarative twins :func:`_km_assign_decl` and
+    :func:`_pq_assign` (what keeps the Lloyd-family hash oracles
+    unchanged): (1) the declarative fold computes
     ``acc := acc + (double(v[j]) - cv[j])^2`` left-to-right over
-    j = 1..dim in IEEE float64; here ``acc += dj * dj`` iterates the
-    identical ascending j with float64 numpy arrays — the same
-    operation sequence per element, so every d2 is the same double.
-    (2) float32 -> float64 casts are exact; Arrow transfers are
-    lossless in both directions. (3) centroid doubles are used
-    driver-side EXACTLY as the declarative arm would embed them in
-    its LocalRelation (round 0: float() of float32 embedding values,
-    exact; later rounds: the dsum-decimal mean doubles s/n — Python
-    float division of the collected double s by int n, the identical
-    IEEE division the oracle's ``m.s / m.n`` performs). (4) ties
-    resolve identically: clusters are laid out ascending and
-    ``np.argmin`` returns the FIRST minimal index — Spark's
-    ``min(struct(d2, cluster))`` with equal d2 doubles picks the same
-    smaller cluster. Asserted column-for-column against
-    :func:`_km_assign_decl` on both centroid generations in
-    tests/test_tier_c.py::test_km_assign_np_bit_identical.
+    ascending j in IEEE float64, and ``_km_assign_batch``'s plain arm
+    runs ``acc += dj * dj`` over the same j, so every d2 is the same
+    double (its k >= 64 prefilter arm is proven identical in its own
+    docstring); (2) float32 -> float64 casts are exact and Arrow
+    transfers are lossless both ways; (3) centroid doubles are used
+    exactly as the declarative arm embeds them (round 0: float() of
+    float32 values; later rounds: the dsum-decimal means s/n, the same
+    IEEE division as the oracles' ``m.s / m.n``); (4) codes are laid
+    out ascending and ``np.argmin`` returns the first minimum, so equal
+    d2 doubles pick the smaller code, as Spark's ``min(struct(d2,
+    code))`` does. Pinned column-for-column against both twins on two
+    centroid generations in
+    tests/test_tier_c.py::test_km_assign_np_bit_identical and
+    ::test_pq_assign_np_bit_identical.
 
-    Scale: centroids are a k x dim driver-side closure (model-sized,
-    never corpus-sized); corpus rows stream through Arrow batches
-    with no per-row Python loop and no shuffle — at 1000 executors
-    each task assigns its own partition and the only per-round
-    synchronization left is the k*dim-row re-centering aggregate.
-    Per batch the work runs through :func:`_km_assign_batch`, which
-    at k >= 64 (C127's k = n/65 regime) swaps the dense n*k*dim
-    fold for a BLAS prefilter + exact-fold-on-survivors pass that is
-    PROVABLY bit-identical (see its docstring) — the corpus-quadratic
-    assignment cost the 100x probe exposed is paid by one dgemm
-    instead of 64 interpreted broadcast ops.
-
-    ``carry`` (round 12, optimization): passes one input column (the
-    previous round's cluster) through unchanged, so a convergence
-    trace fed from the previous assignment's output computes n_moved
-    without a per-round vec_id shuffle join — see `_pq_assign_np`."""
-    cvs = np.array(
-        [[float(x) for x in row] for row in cmat], dtype=np.float64
-    )
-    cols = ["vec_id", "cluster", vcol, "d2"] + ([carry] if carry else [])
+    Scale: the book is a k x dim driver-side closure (model-sized,
+    never corpus-sized); corpus rows stream through Arrow batches with
+    no per-row Python loop and no shuffle."""
+    by_group: dict = {}
+    for cell in sorted(book):
+        g, code = cell if group else (None, cell)
+        by_group.setdefault(g, []).append((code, book[cell]))
+    mats = {
+        g: (
+            np.array([c for c, _ in v]),
+            np.array([cv for _, cv in v], dtype=np.float64),
+        )
+        for g, v in by_group.items()
+    }
+    cols = [("vec_id", "long")] + ([(group, "long")] if group else [])
+    cols += [(vcol, vtype)] + ([(carry, "int")] if carry else [])
+    keep = [c for c, _ in cols]
 
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             x = np.stack(pdf[vcol].to_numpy()).astype(np.float64)
-            best, d2 = _km_assign_batch(x, cvs)
-            out = pdf[["vec_id", vcol] + ([carry] if carry else [])].copy()
-            out["cluster"] = best.astype(np.int32)
+            code = np.empty(len(pdf), dtype=np.int32)
+            d2 = np.empty(len(pdf))
+            parts = (
+                pdf.groupby(group).indices.items()
+                if group
+                else [(None, slice(None))]
+            )
+            for g, idx in parts:
+                codes, cvs = mats[g]
+                best, d2[idx] = _km_assign_batch(x[idx], cvs)
+                code[idx] = codes[best]
+            out = pdf[keep].copy()
+            out["code"] = code
             out["d2"] = d2
-            yield out[cols]
+            yield out
 
-    return base.mapInPandas(
-        assign,
-        f"vec_id long, cluster int, {vcol} {vtype}, d2 double"
-        + (f", {carry} int" if carry else ""),
+    out_cols = cols + [("code", "int"), ("d2", "double")]
+    return points.mapInPandas(
+        assign, ", ".join(f"{c} {t}" for c, t in out_cols)
     )
+
+
+LloydRound = namedtuple(
+    "LloydRound",
+    "round n_moved distortion rel_improvement n_nonempty max_cell_n"
+    " converged",
+)
+
+
+def lloyd(
+    points: DataFrame,
+    book: dict,
+    *,
+    vcol: str,
+    max_rounds: int,
+    eps: float | None = None,
+    group: str | None = None,
+):
+    """Lloyd's algorithm over ``points`` (vec_id, [group], <vcol>) from
+    the seed ``book`` (``{code: centroid}``, or ``{(group value, code):
+    centroid}`` for per-group codebooks such as PQ's subspaces) — the
+    one driver behind every k-means / PQ / IVF-quantizer query (q_c30,
+    q_c44, q_c127, q_c134, q_c137, q_c140, q_c142, q_c145). Returns
+    ``(assigned, book, trace)``: the last round's assignment
+    (vec_id, [group], <vcol>, [prev], code, d2), the book re-centered
+    on it, and one :class:`LloydRound` per executed round.
+
+    One round:
+
+    1. ASSIGN with :func:`_assign_np` over the previous round's output,
+       the previous code riding along as ``prev``, lazily
+       localCheckpoint-ed: the round's aggregate, the next round and
+       the caller all read it, and the checkpoint materializes inside
+       the aggregate instead of paying a job of its own.
+    2. AGGREGATE ONCE: posexplode(<vcol>) + groupBy(cell, pos) gives
+       every (cell, pos) its member count and the exact dsum of the
+       component (DECIMAL(38,6): the same double in any partial-
+       aggregation order and in DuckDB), and on the pos == 0 rows the
+       cell's DECIMAL(38,6) d2 partial and moved count. That is one
+       corpus pass per round: one shuffle-map job plus the fetch of
+       the k*dim result rows.
+    3. FOLD ON THE DRIVER: centroids s / n (the IEEE division of the
+       oracles' ``m.s / m.n``; empty cells keep their old centroid);
+       the distortion as the exact Decimal sum of the partials,
+       converted once with float() — the same correctly rounded double
+       as CAST(SUM(CAST(d2 AS DECIMAL(38,6))) AS DOUBLE) in Spark and
+       DuckDB; n_moved, occupied cells, the largest cell; the relative
+       improvement over the previous round. With ``eps`` the loop stops
+       after the first round improving by less than ``eps``, otherwise
+       after ``max_rounds``.
+
+    Driver state is the k x dim book, never corpus-sized, and each
+    round's plan starts from a checkpoint and literal centroids, so
+    the plan does not grow with a data-dependent round count."""
+    vtype = points.schema[vcol].dataType.simpleString()
+    keys = ["vec_id"] + ([group] if group else []) + [vcol]
+    cell = ([group] if group else []) + ["code"]
+    cur = widen(points, _assign_width(points)).select(*keys)
+    first = F.col("pos") == 0
+    trace: list[LloydRound] = []
+    for r in range(max_rounds):
+        assigned = _assign_np(
+            cur, book, vcol, vtype, group, carry="prev" if r else None
+        ).localCheckpoint(eager=False)
+        moved = F.col("code") != F.col("prev") if r else F.lit(False)
+        stats = (
+            assigned.select(
+                *cell,
+                "d2",
+                moved.cast("long").alias("mv"),
+                F.posexplode(vcol).alias("pos", "v"),
+            )
+            .groupBy(*cell, "pos")
+            .agg(
+                F.count("*").alias("n"),
+                dsum(F.col("v").cast("double")).alias("s"),
+                F.sum(F.when(first, F.col("d2").cast("decimal(38,6)"))).alias(
+                    "d"
+                ),
+                F.sum(F.when(first, F.col("mv"))).alias("m"),
+            )
+            .collect()
+        )
+        book = {c: list(cv) for c, cv in book.items()}
+        for x in stats:
+            c = (x[group], x["code"]) if group else x["code"]
+            book[c][x["pos"]] = x["s"] / x["n"]
+        heads = [x for x in stats if x["pos"] == 0]
+        with localcontext(prec=80):  # exact: no partial is rounded
+            distortion = float(sum((x["d"] for x in heads), Decimal(0)))
+        prev = trace[-1].distortion if trace else None
+        rel = None if prev is None else (prev - distortion) / prev
+        converged = eps is not None and rel is not None and rel < eps
+        trace.append(
+            LloydRound(
+                r,
+                sum(x["m"] for x in heads),
+                distortion,
+                rel,
+                len(heads),
+                max(x["n"] for x in heads),
+                converged,
+            )
+        )
+        if converged:
+            break
+        cur = assigned.select(*keys, F.col("code").alias("prev"))
+    return assigned, book, trace
+
+
+def _seed_book(corpus: DataFrame, k: int) -> dict:
+    """{code: centroid} seeded with the first ``k`` vectors by id — the
+    deterministic policy of every full-vector quantizer here (IVF, PQ
+    and k-means alike)."""
+    rows = corpus.orderBy("vec_id").limit(k).select("embedding").collect()
+    return {c: [float(x) for x in r["embedding"]] for c, r in enumerate(rows)}
 
 
 def kmeans_lloyd_with_centroids(
@@ -865,70 +995,26 @@ def kmeans_lloyd_with_centroids(
 ):
     """Lloyd's k-means over the embedding column — the clustering pass a
     curation pipeline runs for topic balancing / diversity sampling.
+    Returns the last round's (vec_id, cluster) assignment and the k x
+    dim centroid matrix re-centered on it.
 
     Init is the first ``k`` vectors by id (deterministic; same policy as
-    the IVF/PQ quantizers). Each iteration: (1) ASSIGN — nearest
-    centroid by squared L2 with ties to the smaller cluster, run as the
-    Arrow-batched `_km_assign_np` (round 12), which is BIT-identical to
-    the declarative fold-d2 + min_by expression the DuckDB oracle
-    evaluates (`_km_assign_decl`; identity argument in the helper's
-    docstring, pinned by test_km_assign_np_bit_identical) while paying
-    neither the k-times row blow-up nor the per-round groupBy(vec_id)
-    corpus shuffle; (2) UPDATE — posexplode + groupBy(cluster, dim)
-    with COUNT + dsum (exact DECIMAL(38,6) accumulation — C134/C137's
-    re-centering discipline, which is what makes the round
-    DETERMINISTIC: a double avg would vary with partial-agg order) and
-    c = s/n, then k x dim rows collect to the driver to become the next
-    round's centroids. The driver-side loop is the right shape for an
-    iterative fixpoint (same argument as C18's connected components):
-    per-round driver state is k x dim doubles, never corpus-sized, and
-    each round's plan starts fresh from literal centroids so there is
-    no plan growth to checkpoint away. Empty clusters keep their
-    previous centroid.
-
-    Round 11 (was a numpy pandas-UDF argmin): every value is the one
-    the DuckDB oracle evaluates — fold-order d2, exact decimal means,
-    double division — so assignments are bit-identical cross-engine and
-    q_c30/q_c44/q_c127 carry full hash oracles. Round 12 restores the
-    numpy execution under that unchanged contract."""
-    sample = corpus.orderBy("vec_id").limit(k).select("embedding").collect()
-    cmat = [[float(x) for x in r["embedding"]] for r in sample]
-    wide = widen(corpus, _assign_width(corpus)).select("vec_id", "embedding")
-
-    assigned = None
-    for _ in range(iters):
-        # localCheckpoint (the C140/C145 loop discipline): each
-        # round's assignment has TWO consumers — this round's
-        # re-centering aggregate and (for the last round) the
-        # caller's downstream plan. Uncached, every consumer re-runs
-        # the n x k x dim assignment pass, which is exactly the cost
-        # that dominates at corpus scale under C127's k = n/65 policy
-        # (measured: one pass at the 100x probe is minutes; the pin
-        # cuts the query's assign passes from 3 to iters). Lazy
-        # (round 12): the re-centering collect below is always the
-        # round's first action, so the checkpoint materializes inside
-        # it instead of paying a dedicated job per round — short-
-        # lived, the q_c127 pattern, no session-lifetime cache
-        # residue. 1 job/round instead of 2; identical assignments.
-        assigned = (
-            _km_assign_np(wide, cmat, "embedding", "array<float>")
-            .drop("d2")
-            .localCheckpoint(eager=False)
-        )
-        means = (
-            assigned.select(
-                "cluster", F.posexplode("embedding").alias("pos", "v")
-            )
-            .select("cluster", "pos", F.col("v").cast("double").alias("v"))
-            .groupBy("cluster", "pos")
-            .agg(F.count("*").alias("n"), dsum("v").alias("s"))
-            .collect()
-        )
-        nxt = [list(row) for row in cmat]
-        for r in means:
-            nxt[r["cluster"]][r["pos"]] = r["s"] / r["n"]
-        cmat = nxt
-    return assigned.select("vec_id", "cluster"), np.array(cmat)
+    the IVF/PQ quantizers); ``iters`` fixed rounds of :func:`lloyd`, no
+    gate. Every value is the one the DuckDB oracle evaluates —
+    fold-order d2 with ties to the smaller cluster, exact decimal
+    means, double division — so assignments are bit-identical across
+    engines and q_c30/q_c44/q_c127 carry full hash oracles."""
+    book = _seed_book(corpus, k)
+    assigned, book, _ = lloyd(
+        corpus.select("vec_id", "embedding"),
+        book,
+        vcol="embedding",
+        max_rounds=iters,
+    )
+    return (
+        assigned.select("vec_id", F.col("code").alias("cluster")),
+        np.array([book[c] for c in range(len(book))]),
+    )
 
 
 def _kmeans_cte_sql(
@@ -1013,8 +1099,7 @@ def q_c30_kmeans(spark, sf_dir):
     Oracle (round 11, was rows-only): kmeans_lloyd computes the
     exact-arithmetic Lloyd (fold-order d2 + DECIMAL re-centering, the
     C134/C137 recipe), so the DuckDB unrolled-round mirror reproduces
-    every assignment bit for bit; round 12 executes the assignment as
-    the Arrow-batched `_km_assign_np` under that unchanged contract."""
+    every assignment bit for bit."""
     emb = load_table(spark, sf_dir, "embeddings")
     return kmeans_lloyd(emb, k=8, iters=3)
 
@@ -2139,8 +2224,7 @@ def q_c127_semdedup(spark, sf_dir):
     is corpus x (tiny components table). Cluster assignment is the
     exact-arithmetic Lloyd (round 11 — declarative-fold-contract
     values, which is what makes the whole operator hash-oracled end
-    to end; round 12 — executed Arrow-batched via `_km_assign_np`,
-    one shuffle-free pass per round).
+    to end; run by :func:`lloyd`, one corpus pass per round).
     Probe-measured at 10x/30x replicas (SCALE.md round 9): the k
     policy is what keeps the gram stage near-linear."""
     from etl_spark_eks_spark.operators.dedup import connected_components
@@ -2287,24 +2371,20 @@ def q_c134_pq_codebook_refine(spark, sf_dir):
     sub-vector assigns to its nearest centroid (squared L2, ties to
     the smaller code id) and each (sub-space, code) cell re-centers on
     the mean of its members; empty cells keep their old centroid (the
-    LEFT JOIN path — same empty-cluster policy as kmeans_lloyd).
+    oracle's LEFT JOIN path; every lloyd caller has the same policy).
     Output: the refined codebook AS DATA, one row per (subspace,
     code, dim) with old/new centroid and the cell's population —
     joinable back into C21 the way C118's parameter table feeds C8.
 
-    The first PURE-Catalyst, hash-oracled Lloyd round in the repo
-    (round 11 then retrofitted its recipe onto C30/C44/C127 and the
-    ANN cohort, so the whole ladder is now oracle-checked): assignment is
-    a 128-row codebook BROADCAST join (the corpus never shuffles for
-    it — the 16x candidate fan-out collapses back to one row per
-    (vec, subspace) by a map-side-combined min_by partial BEFORE the
-    exchange, so the shuffle carries assignments, not candidates), and
-    the re-centering sums accumulate in DECIMAL(38,6) (functions/
-    exact.py dsum: exact + associative, so Spark's partial tree and
-    DuckDB's sequential fold agree bit-for-bit; means are therefore
-    means of 6dp-quantized components — the documented price of a
-    deterministic cross-engine oracle, ~5e-7 per component). Output
-    centroids ship UNROUNDED: every double here is bit-identical
+    The first hash-oracled Lloyd round in the repo (round 11 then
+    carried its recipe onto C30/C44/C127 and the ANN cohort, so the
+    whole ladder is oracle-checked): one :func:`lloyd` round grouped by
+    subspace, the re-centering sums accumulating in DECIMAL(38,6)
+    (functions/exact.py dsum: exact + associative, so Spark's partial
+    tree and DuckDB's sequential fold agree bit-for-bit; means are
+    therefore means of 6dp-quantized components — the documented price
+    of a deterministic cross-engine oracle, ~5e-7 per component).
+    Output centroids ship UNROUNDED: every double here is bit-identical
     across engines by construction (exact decimal sum -> double,
     divided by an exact integer), and a 6dp edge round would CREATE
     the only possible divergence — the 6dp-decimal numerator puts
@@ -2316,94 +2396,28 @@ def q_c134_pq_codebook_refine(spark, sf_dir):
     straddle engines. Codebook rows are vec_id < 16 — identical
     filter on both sides, no orderBy/limit nondeterminism.
 
-    Scale: one broadcast join + two keyed aggregations; the
-    (subspace, code, dim) key space is m*k*sub = 1,024 rows whatever
-    the corpus size. Iterating to convergence is this operator in the
-    C30 driver loop (k x dim state per round); distortion tracking is
-    the same d2 fold aggregated per cell."""
+    Scale: one Arrow-batched assignment pass + one aggregate over the
+    (subspace, code, dim) key space of m*k*sub = 1,024 rows whatever
+    the corpus size, then a member count per cell. Iterating to
+    convergence is C142 (the same driver with a gate)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    subspaces = F.sequence(F.lit(0), F.lit(_PQ_M - 1))
-
-    def explode_sub(df):
-        return df.select(
-            "vec_id",
-            F.posexplode(
-                F.transform(
-                    subspaces,
-                    lambda i: F.slice("embedding", i * _PQ_SUB + 1, _PQ_SUB),
-                )
-            ).alias("subspace_i", "sv"),
-        ).select(
-            "vec_id",
-            F.col("subspace_i").cast("long").alias("subspace"),
-            "sv",
-        )
-
-    sub = explode_sub(widen(emb))
-    cb = explode_sub(emb.filter(F.col("vec_id") < _PQ_CODES)).select(
-        F.col("vec_id").alias("code"), "subspace", F.col("sv").alias("cv")
+    old = _pq_seed(emb)
+    assigned, new, _ = lloyd(
+        _pq_subspaces(emb), old, vcol="sv", max_rounds=1, group="subspace"
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("sv"),
-            F.col("cv"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    asg = (
-        sub.join(F.broadcast(cb), "subspace")
-        .select("vec_id", "subspace", "code", "sv", d2.alias("d2"))
-        .groupBy("vec_id", "subspace")
-        .agg(
-            F.min_by(
-                F.struct("code", "sv"), F.struct("d2", "code")
-            ).alias("best")
-        )
-        .select("subspace", F.col("best.code").alias("code"),
-                F.col("best.sv").alias("sv"))
-    )
-    dims = (
-        asg.select(
-            "subspace", "code", F.posexplode("sv").alias("j", "v")
-        )
-        .select(
-            "subspace",
-            "code",
-            (F.col("j") + 1).cast("long").alias("dim"),
-            F.col("v").cast("double").alias("v"),
-        )
-        .groupBy("subspace", "code", "dim")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            dsum("v").alias("s"),
-        )
-    )
-    old = cb.select(
-        "subspace",
-        "code",
-        F.posexplode("cv").alias("j", "cvv"),
-    ).select(
-        "subspace",
-        "code",
-        (F.col("j") + 1).cast("long").alias("dim"),
-        F.col("cvv").cast("double").alias("old_c"),
-    )
-    return (
-        old.join(dims, ["subspace", "code", "dim"], "left")
-        .select(
-            "subspace",
-            "code",
-            "dim",
-            F.col("old_c").alias("old_centroid"),
-            F.coalesce(F.col("s") / F.col("n"), F.col("old_c")).alias(
-                "new_centroid"
-            ),
-            F.coalesce(F.col("n"), F.lit(0)).alias("n_assigned"),
-        )
-        .orderBy("subspace", "code", "dim")
+    n = {
+        (r["subspace"], r["code"]): r["count"]
+        for r in assigned.groupBy("subspace", "code").count().collect()
+    }
+    return values_df(
+        spark,
+        [
+            (s, c, j + 1, o, new[(s, c)][j], n.get((s, c), 0))
+            for (s, c), cv in sorted(old.items())
+            for j, o in enumerate(cv)
+        ],
+        "subspace bigint, code bigint, dim bigint, old_centroid double,"
+        " new_centroid double, n_assigned bigint",
     )
 
 
@@ -2467,109 +2481,22 @@ def _pq_assign(sub, cb):
     )
 
 
-def _pq_collect_books(cb) -> dict:
-    """Collect a (code, subspace, cv) codebook DataFrame into the
-    driver dict {subspace: [(code, [float..])]} that `_pq_assign_np`
-    broadcasts through its closure — the k-row pull class."""
-    books: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in cb.collect():
-        books.setdefault(r["subspace"], []).append(
-            (r["code"], [float(x) for x in r["cv"]])
-        )
-    return books
-
-
-def _pq_assign_np(sub, cb, carry=None):
-    """Arrow-batched twin of :func:`_pq_assign` (round 12, r11 verdict
-    task 2): same output contract — (vec_id, subspace, code, sv, d2)
-    with nearest-centroid squared-L2 assignment, ties to the smaller
-    code — but the per-(row, code) d2 fold runs as a numpy
-    j-ascending accumulation inside ``mapInPandas`` instead of 16
-    interpreted Catalyst lambda folds per input row, removing the
-    per-round cost class that made q_c142 the repo's steepest scale
-    slope (0.40 at 30x; see SCALE.md).
-
-    BIT-IDENTITY argument (what lets q_c142 keep its hash oracle
-    unchanged): the declarative fold computes
-    ``acc := acc + (double(sv[j]) - double(cv[j]))^2`` left-to-right
-    over j = 1..8 in IEEE float64; here ``acc += dj * dj`` iterates
-    the same ascending j with float64 numpy arrays — the identical
-    operation sequence per element, so every d2 is the same double.
-    float32 -> float64 casts are exact; Arrow transfers both
-    directions are lossless; codebook rows arrive exactly (round-0
-    float sub-vectors cast, later rounds are the DECIMAL-mean doubles
-    _pq_recenter emits). Ties resolve identically: codes are laid out
-    ascending and ``np.argmin`` returns the FIRST minimal index —
-    Spark's ``min(struct(d2, code))`` with equal d2 doubles picks the
-    same smaller code. Asserted column-for-column against _pq_assign
-    in tests/test_tier_c.py::test_pq_assign_np_bit_identical.
-
-    Scale: the codebook is a 128-row driver pull per round (the same
-    k-row class as the trace's 1-row distortion pulls — bounded by
-    codes x subspaces, never the corpus); corpus rows stream through
-    Arrow batches with no per-row Python, no 16x row blow-up before
-    the min_by collapse, and no shuffle (the groupBy(vec_id,
-    subspace) of the declarative form disappears — each input row
-    yields its winner directly).
-
-    ``carry`` (round 12, optimization): name of an input column to
-    pass through unchanged (the previous round's code). Feeding round
-    r's assignment from round r-1's OUTPUT (same (vec_id, subspace,
-    sv) rows — sv passes through assignment untouched) with the old
-    code carried lets the convergence trace compute n_moved as a
-    narrow SUM(code != prev) in the same aggregate as the distortion,
-    removing the per-round (vec_id, subspace) shuffle join the trace
-    otherwise pays (guide §2.4; measured +2.5 s/query at sf0.1 when
-    the join was merely *combined* with the distortion agg instead of
-    removed).
-
-    ``cb`` may be a codebook DataFrame (collected here — a 128-row
-    driver pull) or an already-collected dict as returned by
-    :func:`_pq_collect_books` (round 13: q_c142 re-centers ON THE
-    DRIVER from the same per-cell partials its trace aggregate
-    collects, so no codebook DataFrame exists between rounds)."""
-    books = cb if isinstance(cb, dict) else _pq_collect_books(cb)
-    mats = {
-        s: (
-            np.array([c for c, _ in sorted(v)], dtype=np.int64),
-            np.array([cv for _, cv in sorted(v)], dtype=np.float64),
-        )
-        for s, v in books.items()
+def _pq_seed(emb: DataFrame) -> dict:
+    """{(subspace, code): sub-vector}: every subspace's codebook seeded
+    with the sub-vectors of the vec_ids below ``_PQ_CODES`` (code =
+    vec_id), the seed every PQ oracle pins."""
+    rows = (
+        emb.filter(F.col("vec_id") < _PQ_CODES)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    return {
+        (s, r["vec_id"]): [
+            float(x) for x in r["embedding"][s * _PQ_SUB : (s + 1) * _PQ_SUB]
+        ]
+        for r in rows
+        for s in range(_PQ_M)
     }
-    cols = ["vec_id", "subspace", "code", "sv", "d2"] + (
-        [carry] if carry else []
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            svmat = np.stack(pdf["sv"].to_numpy()).astype(np.float64)
-            code_out = np.empty(n, dtype=np.int64)
-            d2_out = np.empty(n, dtype=np.float64)
-            for s, idx in pdf.groupby("subspace").indices.items():
-                codes, cvs = mats[int(s)]
-                x = svmat[idx]
-                acc = np.zeros((len(idx), len(codes)))
-                for j in range(x.shape[1]):
-                    dj = x[:, j][:, None] - cvs[None, :, j]
-                    acc += dj * dj
-                best = np.argmin(acc, axis=1)
-                code_out[idx] = codes[best]
-                d2_out[idx] = acc[np.arange(len(idx)), best]
-            out = pdf[
-                ["vec_id", "subspace", "sv"] + ([carry] if carry else [])
-            ].copy()
-            out["code"] = code_out
-            out["d2"] = d2_out
-            yield out[cols]
-
-    return sub.mapInPandas(
-        assign,
-        "vec_id long, subspace long, code long, sv array<float>, d2 double"
-        + (f", {carry} long" if carry else ""),
-    )
 
 
 def _pq_recenter(asg, cb_prev):
@@ -2729,16 +2656,14 @@ def _pq_recenter(asg, cb_prev):
     """,
 )
 def q_c137_pq_distortion_trajectory(spark, sf_dir):
-    """C137 (extension): the PQ TRAINING TRAJECTORY — C134 unrolled
-    for two Lloyd rounds entirely in Catalyst (no driver loop, no
-    collect: round r's codebook is a DATAFRAME derived from round
-    r-1's assignments, broadcast back for the next assignment), with
-    the three numbers a quantizer-training run is judged by read off
-    per round: total distortion (sum of winning squared distances),
-    assignments moved vs the previous round, and occupied cells.
-    Lloyd guarantees distortion is non-increasing and n_moved -> 0 at
-    convergence; the trajectory says whether the C21 codebooks are
-    one round or many from converged — asserted monotone in tests.
+    """C137 (extension): the PQ TRAINING TRAJECTORY — C134 run for
+    three assignment rounds (two re-centerings), with the three numbers
+    a quantizer-training run is judged by read off per round: total
+    distortion (sum of winning squared distances), assignments moved
+    vs the previous round, and occupied cells. Lloyd guarantees
+    distortion is non-increasing and n_moved -> 0 at convergence; the
+    trajectory says whether the C21 codebooks are one round or many
+    from converged — asserted monotone in tests.
 
     Numerics: C134's discipline end to end — d2 is the fixed-order
     fold, re-centering sums and the distortion totals accumulate in
@@ -2747,71 +2672,22 @@ def q_c137_pq_distortion_trajectory(spark, sf_dir):
     tie-grid lesson). Round-1+ centroids are doubles on BOTH sides,
     so the float->double cast applies only to the corpus sub-vectors.
 
-    Scale: per round, one 128-row broadcast join + the map-side
-    min_by collapse (C134's shape) + a 1,024-key re-centering;
-    assignment tables persist because round r+1's codebook AND the
-    n_moved comparison both consume them. The unroll depth is the
-    fixture knob — production iterates the same stage in the C30
-    driver loop with a convergence predicate on n_moved."""
+    Scale: three :func:`lloyd` rounds grouped by subspace, no gate —
+    per round one Arrow-batched assignment pass and one aggregate
+    that yields the trace numbers and the next codebook together.
+    C142 is the same driver with a convergence gate."""
     emb = load_table(spark, sf_dir, "embeddings")
-    sub = _pq_subspaces(widen(emb))
-    cb0 = _pq_subspaces(emb.filter(F.col("vec_id") < _PQ_CODES)).select(
-        F.col("vec_id").alias("code"), "subspace", F.col("sv").alias("cv")
+    _, _, trace = lloyd(
+        _pq_subspaces(emb),
+        _pq_seed(emb),
+        vcol="sv",
+        max_rounds=3,
+        group="subspace",
     )
-    # localCheckpoints, not persists: each assignment table has
-    # two consumers (next round's codebook + the n_moved comparison)
-    # and must not leave session-lifetime cache entries behind
-    # (ADVICE r10; the q_c127 pattern). Lazy (eager=False) since
-    # round 12 for consistency with the gate family; A/B at sf0.1
-    # measured parity with eager (4.0-4.9 s both ways, min-of-5 warm)
-    # because each declarative assignment embeds shuffles whose AQE
-    # stages materialize at checkpoint-call time either way — the
-    # interpreted _pq_d2 folds, which this query KEEPS on purpose as
-    # C134's cost-comparison exhibit, dominate. Identical rows.
-    a0 = _pq_assign(sub, cb0).localCheckpoint(eager=False)
-    cb1 = _pq_recenter(a0, cb0)
-    a1 = _pq_assign(sub, cb1).localCheckpoint(eager=False)
-    cb2 = _pq_recenter(a1, cb1)
-    a2 = _pq_assign(sub, cb2).localCheckpoint(eager=False)
-
-    def row(r, asg, prev):
-        dist = asg.agg(
-            dsum("d2").alias("distortion"),
-            F.count_distinct("subspace", "code")
-            .cast("bigint")
-            .alias("n_nonempty"),
-        )
-        if prev is None:
-            moved = None
-        else:
-            moved = (
-                asg.select("vec_id", "subspace", F.col("code").alias("ca"))
-                .join(
-                    prev.select(
-                        "vec_id", "subspace", F.col("code").alias("cb")
-                    ),
-                    ["vec_id", "subspace"],
-                )
-                .where(F.col("ca") != F.col("cb"))
-                .agg(F.count("*").cast("bigint").alias("n_moved"))
-            )
-        base = dist if moved is None else moved.crossJoin(dist)
-        return base.select(
-            F.lit(r).cast("bigint").alias("round"),
-            (
-                F.lit(0).cast("bigint")
-                if moved is None
-                else F.col("n_moved")
-            ).alias("n_moved"),
-            "distortion",
-            "n_nonempty",
-        )
-
-    return (
-        row(0, a0, None)
-        .unionByName(row(1, a1, a0))
-        .unionByName(row(2, a2, a1))
-        .orderBy("round")
+    return values_df(
+        spark,
+        [(t.round, t.n_moved, t.distortion, t.n_nonempty) for t in trace],
+        "round bigint, n_moved bigint, distortion double, n_nonempty bigint",
     )
 
 
@@ -2893,81 +2769,25 @@ def q_c140_lloyd_convergence_gate(spark, sf_dir):
     improvement ratios divide the identical doubles, so every emitted
     row hash-matches.
 
-    Scale: per round one Arrow-batched assignment pass (`_km_assign_np`
-    — no shuffle, centroids a k x dim closure; bit-identical to the
-    declarative fold the oracle runs, see its docstring) + a k*dim-row
-    re-centering collect (driver state is k x dim doubles, the C30
-    argument); assignments are localCheckpoint-ed
-    because each is read three times (trace agg, re-centering,
-    next round's assignment) — short-lived, the q_c127
-    pattern, no session-lifetime cache residue.
-
-    Round 12 (optimization, guide §2.4 + §2): the per-round vec_id
-    shuffle join that computed n_moved is REMOVED — round r >= 1
-    assigns over round r-1's checkpointed OUTPUT with the previous
-    cluster carried through (`_km_assign_np(carry=...)`; e passes
-    through assignment untouched), so distortion and n_moved are ONE
-    narrow no-shuffle aggregate; checkpoints are lazy (materialize
-    inside that aggregate); and the fixture fan-out is scale-adaptive
-    (`_assign_width`) instead of full session width. Measured at
-    sf0.1: 3.75 s / 25 jobs -> ~2.0 s; identical rows."""
+    Scale: :func:`lloyd` with ``eps`` — per round one Arrow-batched
+    assignment pass (no shuffle, centroids a k x dim closure) and one
+    aggregate that yields the trace numbers and the next centroids
+    together; driver state is k x dim doubles (the C30 argument)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    base = widen(emb, _assign_width(emb)).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    _, _, trace = lloyd(
+        emb.select("vec_id", "embedding"),
+        _seed_book(emb, _C140_K),
+        vcol="embedding",
+        max_rounds=_C140_MAX_ROUNDS + 1,
+        eps=_C140_EPS,
     )
-    sample = emb.orderBy("vec_id").limit(_C140_K).select("embedding").collect()
-    cmat = [[float(x) for x in r["embedding"]] for r in sample]
-
-    rows = []
-    prev_distortion = None
-    cur = base
-    for r in range(_C140_MAX_ROUNDS + 1):
-        if r == 0:
-            assigned = _km_assign_np(
-                cur, cmat, "e", "array<double>"
-            ).localCheckpoint(eager=False)
-            distortion = (
-                assigned.agg(dsum("d2").alias("d")).collect()[0]["d"]
-            )
-            n_moved, rel = 0, None
-        else:
-            assigned = _km_assign_np(
-                cur.select(
-                    "vec_id", "e", F.col("cluster").alias("prev_cluster")
-                ),
-                cmat,
-                "e",
-                "array<double>",
-                carry="prev_cluster",
-            ).localCheckpoint(eager=False)
-            st = assigned.agg(
-                dsum("d2").alias("d"),
-                F.sum(
-                    (F.col("cluster") != F.col("prev_cluster")).cast("long")
-                ).alias("m"),
-            ).collect()[0]
-            distortion, n_moved = st["d"], st["m"]
-            rel = (prev_distortion - distortion) / prev_distortion
-        converged = rel is not None and rel < _C140_EPS
-        rows.append((r, n_moved, distortion, rel, converged))
-        if converged or r == _C140_MAX_ROUNDS:
-            break
-        means = (
-            assigned.select(
-                "cluster", F.posexplode("e").alias("pos", "v")
-            )
-            .groupBy("cluster", "pos")
-            .agg(F.count("*").alias("n"), dsum("v").alias("s"))
-            .collect()
-        )
-        nxt = [list(row) for row in cmat]
-        for m in means:
-            nxt[m["cluster"]][m["pos"]] = m["s"] / m["n"]
-        cmat = nxt
-        cur, prev_distortion = assigned, distortion
-    return spark.createDataFrame(
-        rows,
-        "round long, n_moved long, distortion double,"
+    return values_df(
+        spark,
+        [
+            (t.round, t.n_moved, t.distortion, t.rel_improvement, t.converged)
+            for t in trace
+        ],
+        "round bigint, n_moved bigint, distortion double,"
         " rel_improvement double, converged boolean",
     )
 
@@ -3104,142 +2924,30 @@ def q_c142_pq_convergence_gate(spark, sf_dir):
     emitted double is an exact DECIMAL fold or a division of identical
     doubles.
 
-    Scale: per round ONE Arrow-batched assignment pass
-    (_pq_assign_np, round 12 — numpy j-ascending d2 accumulation
-    that is bit-identical to the declarative fold, so the oracle is
-    unchanged; replaces the 16-interpreted-folds-per-row plan that
-    made this the repo's steepest 30x slope, 0.40 — re-measured
-    after the change in SCALE.md) + a 1,024-key re-centering; the
-    128-row codebook is a per-round driver pull (the same k-row
-    class as the 1-row distortion pulls). Assignments localCheckpoint
-    because three consumers read each (trace agg, re-centering,
-    next round's assignment), and the checkpoint bounds plan growth
-    across data-dependent round counts — the same driver-state
-    argument as C140 with k x dim replaced by the fixed 1,024-row
-    codebook.
-
-    Round 12 (optimization, guide §2.4): the per-round (vec_id,
-    subspace) shuffle JOIN that computed n_moved is REMOVED — round
-    r >= 1 assigns over round r-1's checkpointed OUTPUT (identical
-    (vec_id, subspace, sv) rows; sv passes through assignment
-    untouched) with the old code carried through, so n_moved is a
-    narrow SUM(code != prev_code) in the SAME no-shuffle aggregate as
-    the distortion (dsum is exact DECIMAL, associative — identical
-    double). localCheckpoints are lazy (eager=False): each
-    materializes inside the round's first action (the trace agg for
-    assignments, the next 128-row codebook collect for re-centerings)
-    instead of paying a dedicated job. Measured at sf0.1: 5.93 s /
-    41 jobs -> ~3.0 s, identical rows, same oracle hash (verified
-    sf0.01 + sf0.1). A join-based merge of the two aggregates was
-    measured FIRST and rejected: +2.5 s — the join cost more than the
-    barrier it saved.
-
-    Round 13 (guide §2.4, verdict task 6): the residual per-round
-    re-centering exchange is gone too — ONE GROUPING SETS ((subspace,
-    code), ()) aggregate per round returns the trace totals AND the
-    128 per-cell (count, per-dim exact-DECIMAL sum) partials that
-    _pq_recenter used to shuffle for; the codebook division happens
-    on the driver (the identical IEEE double division over identical
-    doubles — s_j is the same DECIMAL(38,6) fold cast double, n the
-    same member count — and empty cells keep the previous centroid),
-    so each round is ONE corpus-pass job and the codebook never
-    exists as a distributed table between rounds."""
+    Scale: :func:`lloyd` grouped by subspace, with ``eps`` — per round
+    ONE Arrow-batched assignment pass (bit-identical to the declarative
+    fold, so the oracle is unchanged; it replaced the
+    16-interpreted-folds-per-row plan that made this the repo's
+    steepest 30x slope, 0.40, see SCALE.md) and one aggregate over the
+    1,024 (subspace, code, dim) keys that yields the trace totals and
+    the next codebook together; the codebook is divided out on the
+    driver and never exists as a distributed table between rounds."""
     emb = load_table(spark, sf_dir, "embeddings")
-    sub = _pq_subspaces(
-        widen(emb, _assign_width(emb))
-    ).localCheckpoint(eager=False)
-    books = _pq_collect_books(
-        _pq_subspaces(emb.filter(F.col("vec_id") < _PQ_CODES)).select(
-            F.col("vec_id").alias("code"),
-            "subspace",
-            F.col("sv").alias("cv"),
-        )
+    _, _, trace = lloyd(
+        _pq_subspaces(emb),
+        _pq_seed(emb),
+        vcol="sv",
+        max_rounds=_C142_MAX_ROUNDS + 1,
+        eps=_C142_EPS,
+        group="subspace",
     )
-    # Round 13 (verdict task 6): the per-round posexplode + (subspace,
-    # code, dim) shuffle that re-centered the codebook is GONE — ONE
-    # GROUPING SETS ((subspace, code), ()) aggregate per round carries
-    # the trace totals (global row: exact-DECIMAL distortion, n_moved)
-    # AND the 128 per-cell re-centering partials (count + 8 per-dim
-    # DECIMAL sums, the same folds _pq_recenter computed), and the new
-    # codebook is divided out ON THE DRIVER (s_j / n in IEEE double —
-    # the identical division Spark ran; empty cells keep the previous
-    # centroid). Per round that is ONE corpus-pass job instead of the
-    # trace agg + the recenter materialization inside the next
-    # assignment's codebook collect.
-    dim_sums = [
-        dsum(F.element_at("sv", j).cast("double")).alias(f"s{j}")
-        for j in range(1, _PQ_SUB + 1)
-    ]
-    rows = []
-    prev_distortion = None
-    cur = sub
-    for r in range(_C142_MAX_ROUNDS + 1):
-        if r == 0:
-            assigned = _pq_assign_np(cur, books).localCheckpoint(
-                eager=False
-            )
-            moved = F.sum(F.lit(0).cast("long")).alias("m")
-        else:
-            assigned = _pq_assign_np(
-                cur.select(
-                    "vec_id",
-                    "subspace",
-                    "sv",
-                    F.col("code").alias("prev_code"),
-                ),
-                books,
-                carry="prev_code",
-            ).localCheckpoint(eager=False)
-            moved = F.sum(
-                (F.col("code") != F.col("prev_code")).cast("long")
-            ).alias("m")
-        stats = (
-            assigned.groupingSets(
-                [["subspace", "code"], []], "subspace", "code"
-            )
-            .agg(
-                F.grouping_id().alias("gid"),
-                F.count("*").alias("cnt"),
-                dsum("d2").alias("d"),
-                moved,
-                *dim_sums,
-            )
-            .collect()
-        )
-        tot = next(x for x in stats if x["gid"] == 3)
-        distortion = tot["d"]
-        n_moved = tot["m"] if r > 0 else 0
-        rel = (
-            None
-            if r == 0
-            else (prev_distortion - distortion) / prev_distortion
-        )
-        converged = rel is not None and rel < _C142_EPS
-        rows.append((r, n_moved, distortion, rel, converged))
-        if converged or r == _C142_MAX_ROUNDS:
-            break
-        cell = {
-            (x["subspace"], x["code"]): x for x in stats if x["gid"] == 0
-        }
-        books = {
-            s: [
-                (
-                    code,
-                    [
-                        cell[(s, code)][f"s{j}"] / cell[(s, code)]["cnt"]
-                        for j in range(1, _PQ_SUB + 1)
-                    ]
-                    if (s, code) in cell
-                    else old_cv,
-                )
-                for code, old_cv in entries
-            ]
-            for s, entries in books.items()
-        }
-        cur, prev_distortion = assigned, distortion
-    return spark.createDataFrame(
-        rows,
-        "round long, n_moved long, distortion double,"
+    return values_df(
+        spark,
+        [
+            (t.round, t.n_moved, t.distortion, t.rel_improvement, t.converged)
+            for t in trace
+        ],
+        "round bigint, n_moved bigint, distortion double,"
         " rel_improvement double, converged boolean",
     )
 
@@ -3331,107 +3039,27 @@ def q_c145_ivf_quantizer_gate(spark, sf_dir):
     occupancy columns are integer aggregates, and rel_improvement
     divides identical doubles (no rounding before the gate compare).
 
-    Scale: per round, one Arrow-batched assignment pass over the
-    corpus (`_km_assign_np`, the C30/C140 assignment — no shuffle,
-    16 x dim centroid closure, bit-identical to the declarative fold
-    the oracle runs), then ONE per-cell aggregate pass producing
-    member counts
-    AND per-cell DECIMAL distortion partials — the trace's distortion
-    total re-aggregates those 16 rows (decimal addition is
-    associative, so the two-level sum equals the flat fold
-    bit-for-bit) and the occupancy numbers are read from the same 16
-    rows: one extra k-row job per round, no second corpus pass.
-    Driver state is k x dim doubles (the C30 argument);
-    localCheckpoint bounds plan growth across the data-dependent
-    round count exactly as in C140/C142."""
+    Scale: :func:`lloyd` at k=16 with ``eps`` — per round one
+    Arrow-batched assignment pass over the corpus (no shuffle, 16 x dim
+    centroid closure) and one aggregate whose pos-0 rows carry each
+    cell's member count and DECIMAL distortion partial: the trace's
+    distortion re-adds those 16 partials exactly (decimal addition is
+    associative, so it equals the oracle's flat fold bit-for-bit) and
+    the occupancy numbers are read from the same rows. Driver state is
+    k x dim doubles (the C30 argument)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    base = widen(emb, _assign_width(emb)).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    _, _, trace = lloyd(
+        emb.select("vec_id", "embedding"),
+        _seed_book(emb, _C145_K),
+        vcol="embedding",
+        max_rounds=_C145_MAX_ROUNDS + 1,
+        eps=_C145_EPS,
     )
-    sample = (
-        emb.orderBy("vec_id").limit(_C145_K).select("embedding").collect()
-    )
-    cmat = [[float(x) for x in r["embedding"]] for r in sample]
-
-    rows = []
-    prev_distortion = None
-    cur = base
-    for r in range(_C145_MAX_ROUNDS + 1):
-        # Round 12 (optimization, the q_c140/q_c142 surgery): round
-        # r >= 1 assigns over round r-1's checkpointed OUTPUT with the
-        # previous cluster carried through, so the n_moved comparison
-        # rides the SAME per-cell pass as the occupancy/distortion
-        # stats with NO shuffle join (the moved count is a SUM of 0/1
-        # == the old filtered count); the checkpoint is lazy
-        # (materializes inside that pass); fixture fan-out is
-        # scale-adaptive (_assign_width). Identical rows.
-        if r == 0:
-            assigned = _km_assign_np(
-                cur, cmat, "e", "array<double>"
-            ).localCheckpoint(eager=False)
-            stats_in = assigned.withColumn("mv", F.lit(0).cast("long"))
-        else:
-            assigned = _km_assign_np(
-                cur.select(
-                    "vec_id", "e", F.col("cluster").alias("prev_cluster")
-                ),
-                cmat,
-                "e",
-                "array<double>",
-                carry="prev_cluster",
-            ).localCheckpoint(eager=False)
-            stats_in = assigned.select(
-                "cluster",
-                "d2",
-                (F.col("cluster") != F.col("prev_cluster"))
-                .cast("long")
-                .alias("mv"),
-            )
-        # one per-cell pass: member counts + DECIMAL distortion
-        # partials; the k-row re-aggregation below is exact because
-        # decimal addition is associative (matches the oracle's flat
-        # SUM(CAST(d2 AS DECIMAL(38,6))) bit-for-bit)
-        per_cell = stats_in.groupBy("cluster").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(F.col("d2").cast("decimal(38,6)")).alias("dpart"),
-            F.sum("mv").alias("mvpart"),
-        )
-        st = per_cell.agg(
-            F.sum("dpart").cast("double").alias("distortion"),
-            F.count("*").cast("bigint").alias("n_nonempty"),
-            F.max("n").cast("bigint").alias("max_cell_n"),
-            F.sum("mvpart").alias("n_moved"),
-        ).collect()[0]
-        distortion = st["distortion"]
-        if r == 0:
-            n_moved, rel = 0, None
-        else:
-            n_moved = st["n_moved"]
-            rel = (prev_distortion - distortion) / prev_distortion
-        converged = rel is not None and rel < _C145_EPS
-        rows.append(
-            (r, n_moved, distortion, rel,
-             st["n_nonempty"], st["max_cell_n"], converged)
-        )
-        if converged or r == _C145_MAX_ROUNDS:
-            break
-        means = (
-            assigned.select(
-                "cluster", F.posexplode("e").alias("pos", "v")
-            )
-            .groupBy("cluster", "pos")
-            .agg(F.count("*").alias("n"), dsum("v").alias("s"))
-            .collect()
-        )
-        nxt = [list(row) for row in cmat]
-        for m in means:
-            nxt[m["cluster"]][m["pos"]] = m["s"] / m["n"]
-        cmat = nxt
-        cur, prev_distortion = assigned, distortion
-    return spark.createDataFrame(
-        rows,
-        "round long, n_moved long, distortion double,"
-        " rel_improvement double, n_nonempty long, max_cell_n long,"
+    return values_df(
+        spark,
+        trace,
+        "round bigint, n_moved bigint, distortion double,"
+        " rel_improvement double, n_nonempty bigint, max_cell_n bigint,"
         " converged boolean",
     )
 

@@ -1926,21 +1926,20 @@ def test_c148_probe_plan_invariants(spark, sf_dir):
 
 
 def test_km_assign_np_bit_identical(spark, sf_dir):
-    """_km_assign_np (the round-12 Arrow-batched FULL-vector Lloyd
-    assignment behind q_c30/q_c44/q_c127/q_c140/q_c145) must be
-    BIT-identical to the declarative _km_assign_decl — same cluster,
-    same winning d2 double for every vector — against both centroid
-    generations (the round-0 float-seed matrix and a DECIMAL-
-    re-centered double matrix) and BOTH vector column types the call
-    sites use (array<float> 'embedding' in kmeans_lloyd, array<double>
-    'e' in the C140/C145 gated loops). This is what lets all five
-    queries keep their unchanged hash oracles."""
+    """_assign_np (the Arrow-batched assignment behind every Lloyd
+    round, here over FULL vectors as in q_c30/q_c44/q_c127/q_c140/
+    q_c145) must be BIT-identical to the declarative _km_assign_decl —
+    same cluster, same winning d2 double for every vector — against
+    both centroid generations (the round-0 float-seed matrix and a
+    DECIMAL-re-centered double matrix) and both vector column types
+    (array<float> and array<double>). This is what lets those queries
+    keep their unchanged hash oracles."""
     from pyspark.sql import functions as F
 
     from etl_spark_eks_spark.functions.exact import dsum
     from etl_spark_eks_spark.operators.similarity import (
+        _assign_np,
         _km_assign_decl,
-        _km_assign_np,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1962,35 +1961,36 @@ def test_km_assign_np_bit_identical(spark, sf_dir):
         )
         cmat = [[float(x) for x in r["embedding"]] for r in sample]
         for generation in ("float-seed", "recentered-double"):
+            book = dict(enumerate(cmat))
             ref = {
                 r["vec_id"]: (r["cluster"], r["d2"])
                 for r in _km_assign_decl(base, cmat, vcol).collect()
             }
             got = {
-                r["vec_id"]: (r["cluster"], r["d2"])
-                for r in _km_assign_np(base, cmat, vcol, vtype).collect()
+                r["vec_id"]: (r["code"], r["d2"])
+                for r in _assign_np(base, book, vcol, vtype).collect()
             }
             assert got == ref, (
                 f"divergence on the {generation} centroids ({vcol})"
             )
-            # re-center exactly as kmeans_lloyd does (posexplode +
-            # COUNT + dsum, c = s/n in Python float division) so the
-            # second generation exercises decimal-mean doubles
+            # re-center with posexplode + COUNT + dsum and c = s/n in
+            # Python float division, as lloyd does, so the second
+            # generation exercises decimal-mean doubles
             means = (
-                _km_assign_np(base, cmat, vcol, vtype)
-                .select("cluster", F.posexplode(vcol).alias("pos", "v"))
+                _assign_np(base, book, vcol, vtype)
+                .select("code", F.posexplode(vcol).alias("pos", "v"))
                 .select(
-                    "cluster",
+                    "code",
                     "pos",
                     F.col("v").cast("double").alias("v"),
                 )
-                .groupBy("cluster", "pos")
+                .groupBy("code", "pos")
                 .agg(F.count("*").alias("n"), dsum("v").alias("s"))
                 .collect()
             )
             nxt = [list(row) for row in cmat]
             for m in means:
-                nxt[m["cluster"]][m["pos"]] = m["s"] / m["n"]
+                nxt[m["code"]][m["pos"]] = m["s"] / m["n"]
             cmat = nxt
 
 
@@ -2052,18 +2052,18 @@ def test_km_assign_prefilter_bit_identical(spark, sf_dir):
 
 
 def test_pq_assign_np_bit_identical(spark, sf_dir):
-    """_pq_assign_np (q_c142's Arrow-batched assignment, r11 verdict
-    task 2) must be BIT-identical to the declarative _pq_assign —
+    """_assign_np grouped by subspace (q_c134/q_c137/q_c142's
+    assignment) must be BIT-identical to the declarative _pq_assign —
     same code, same winning d2 double for every (vec, subspace) —
     against both codebook generations: the round-0 float32 sub-vector
     codebook and a DECIMAL-re-centered double codebook. This is what
-    lets q_c142 keep its unchanged hash oracle."""
+    lets those queries keep their unchanged hash oracles."""
     from pyspark.sql import functions as F
 
     from etl_spark_eks_spark.operators.similarity import (
         _PQ_CODES,
+        _assign_np,
         _pq_assign,
-        _pq_assign_np,
         _pq_recenter,
         _pq_subspaces,
     )
@@ -2074,6 +2074,10 @@ def test_pq_assign_np_bit_identical(spark, sf_dir):
         F.col("vec_id").alias("code"), "subspace", F.col("sv").alias("cv")
     )
     for generation in ("float-seed", "recentered-double"):
+        book = {
+            (r["subspace"], r["code"]): [float(x) for x in r["cv"]]
+            for r in cb.collect()
+        }
         ref = {
             (r["vec_id"], r["subspace"]): (r["code"], r["d2"])
             for r in _pq_assign(sub, cb)
@@ -2082,7 +2086,9 @@ def test_pq_assign_np_bit_identical(spark, sf_dir):
         }
         got = {
             (r["vec_id"], r["subspace"]): (r["code"], r["d2"])
-            for r in _pq_assign_np(sub, cb)
+            for r in _assign_np(
+                sub, book, "sv", "array<float>", group="subspace"
+            )
             .select("vec_id", "subspace", "code", "d2")
             .collect()
         }
@@ -2093,63 +2099,89 @@ def test_pq_assign_np_bit_identical(spark, sf_dir):
 
 
 def test_c142_driver_recenter_bit_identical(spark, sf_dir):
-    """Round 13: q_c142's driver-side re-centering (grouping-sets
-    per-cell partials + IEEE division on the driver) must be
-    BIT-identical to the distributed _pq_recenter it replaced — every
-    centroid double equal, empty cells keeping the old centroid."""
+    """lloyd's driver-side re-centering (per-(cell, dim) partials +
+    IEEE division on the driver), as q_c142 runs it, must be
+    BIT-identical to the distributed _pq_recenter over the same
+    assignment — every centroid double equal, empty cells keeping the
+    old centroid."""
     from pyspark.sql import functions as F
 
-    from etl_spark_eks_spark.functions.exact import dsum
     from etl_spark_eks_spark.operators.similarity import (
         _PQ_CODES,
-        _PQ_SUB,
-        _pq_assign_np,
-        _pq_collect_books,
         _pq_recenter,
+        _pq_seed,
         _pq_subspaces,
+        lloyd,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sub = _pq_subspaces(emb).localCheckpoint(eager=True)
     cb = _pq_subspaces(emb.filter(F.col("vec_id") < _PQ_CODES)).select(
         F.col("vec_id").alias("code"), "subspace", F.col("sv").alias("cv")
     )
-    books = _pq_collect_books(cb)
-    assigned = _pq_assign_np(sub, books).localCheckpoint(eager=True)
-    ref = {
-        (s, c): tuple(cv)
-        for s, entries in _pq_collect_books(
-            _pq_recenter(assigned, cb)
-        ).items()
-        for c, cv in entries
-    }
-    dim_sums = [
-        dsum(F.element_at("sv", j).cast("double")).alias(f"s{j}")
-        for j in range(1, _PQ_SUB + 1)
-    ]
-    stats = (
-        assigned.groupingSets(
-            [["subspace", "code"], []], "subspace", "code"
-        )
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.count("*").alias("cnt"),
-            *dim_sums,
-        )
-        .collect()
+    assigned, book, _ = lloyd(
+        _pq_subspaces(emb),
+        _pq_seed(emb),
+        vcol="sv",
+        max_rounds=1,
+        group="subspace",
     )
-    cell = {(x["subspace"], x["code"]): x for x in stats if x["gid"] == 0}
-    got = {}
-    for s, entries in books.items():
-        for code, old_cv in entries:
-            if (s, code) in cell:
-                x = cell[(s, code)]
-                got[(s, code)] = tuple(
-                    x[f"s{j}"] / x["cnt"] for j in range(1, _PQ_SUB + 1)
-                )
-            else:
-                got[(s, code)] = tuple(old_cv)
-    assert got == ref
+    ref = {
+        (r["subspace"], r["code"]): list(r["cv"])
+        for r in _pq_recenter(assigned, cb).collect()
+    }
+    assert book == ref
+
+
+def test_lloyd_one_job_pair_per_round_and_exact_fold(spark, sf_dir):
+    """lloyd's round shape: each round is ONE corpus-pass aggregate
+    (under AQE its shuffle-map stage and its k*dim-row result fetch
+    are two Spark jobs), plus the one widening exchange of the input —
+    so max_rounds=R starts exactly 2R + 1 jobs, with no job for the
+    assignment checkpoint or the trace. The driver's Decimal fold of
+    the per-cell partials equals dsum("d2") over the same assignment;
+    with ``eps`` the loop stops at the first converged round; and the
+    CacheManager stays empty."""
+    from test_plans import _jobs_in_group
+
+    from etl_spark_eks_spark.functions.exact import dsum
+    from etl_spark_eks_spark.operators.similarity import (
+        _seed_book,
+        lloyd,
+    )
+
+    spark.catalog.clearCache()
+    emb = load_table(spark, sf_dir, "embeddings")
+    points = emb.select("vec_id", "embedding")
+    book = _seed_book(emb, 8)
+    for rounds in (1, 3):
+        out = {}
+
+        def run():
+            out["r"] = lloyd(
+                points, book, vcol="embedding", max_rounds=rounds
+            )
+
+        n = _jobs_in_group(spark, f"lloyd-{rounds}", run)
+        assert n == 2 * rounds + 1, f"{n} jobs for {rounds} rounds"
+        assigned, _, trace = out["r"]
+        assert [t.round for t in trace] == list(range(rounds))
+        assert trace[-1].distortion == (
+            assigned.agg(dsum("d2").alias("d")).collect()[0]["d"]
+        )
+        assert trace[0].n_moved == 0
+        assert not any(t.converged for t in trace)
+    _, _, full = out["r"]
+    # the gate stops at the first round whose improvement is below eps:
+    # choose eps just above round 2's improvement so round 2 converges
+    eps = full[2].rel_improvement * (1 + 1e-9)
+    assert full[1].rel_improvement >= eps
+    _, _, gated = lloyd(
+        points, book, vcol="embedding", max_rounds=5, eps=eps
+    )
+    assert [t.round for t in gated] == [0, 1, 2]
+    assert [t.converged for t in gated] == [False, False, True]
+    assert [t[:6] for t in gated] == [t[:6] for t in full]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_c146_handoff_consistent_with_parents(spark, sf_dir):

@@ -60,7 +60,6 @@ ALLOW_CARTESIAN = {
     "q_c144_containment_arrival_epochs",  # same 1-row max-id fold broadcast (C143's epoch class)
     "q_c147_contamination_arrival_epochs",  # same 1-row max-id fold broadcast (C143's epoch class)
     "q_c136_noise_corrected_prior",  # same 1-row moment-fold class as q_c132
-    "q_c137_pq_distortion_trajectory",  # 3x 1-row (distortion, moved) trajectory folds
     "q_c76_epoch_upsample",    # 1-row budget x language-count rate table (docstring: zero corpus shuffle)
     "q_c84_token_budget_waterfill",  # 1-row totals/fill x langs-sized allocation table
     "q_c40_temperature_mix",      # per-group rate table
@@ -99,7 +98,6 @@ ALLOW_SINGLE_PART = {
     "q_c105_quality_rate_confidence",  # 1-row corpus-rate fold broadcast back
     "q_c132_quality_prior_smoothing",  # 1-row (S, sum ppm, sum ppm^2) moment fold
     "q_c136_noise_corrected_prior",  # same 1-row moment fold + sum(1e12 DIV n)
-    "q_c137_pq_distortion_trajectory",  # 3x 1-row trajectory folds union
     "q_c107_exact_apportionment",   # remainder-rank window over the |strata| (20-row) quota table
     # bucket-/band-offset windows over n/bucket_size tables (plan-tested)
     "q_c24_pack_shards",

@@ -177,7 +177,7 @@ PROBE_QUERIES = (
     "q_c137_pq_distortion_trajectory",
     # round-12 (recovered session): the full Lloyd family joins the
     # standing list now that its assignment is the Arrow-batched
-    # _km_assign_np (q_c44 rides kmeans + a broadcast distance pass;
+    # _assign_np (q_c44 rides kmeans + a broadcast distance pass;
     # q_c140/q_c145/q_c142 are the convergence-gated trainers whose
     # per-round cost is exactly what the probe must watch).
     "q_c44_coreset_medoids",
