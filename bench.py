@@ -90,11 +90,14 @@ def main() -> int:
     # cost like the JVM warmup above — but in a one-JVM bench an
     # unwarmed (or evicted) pool lands inside the first pandas-UDF
     # query's timed window (r7 official: c17/b97/c38 at 3-7x their
-    # mins; re-measured 1.2-1.7x in isolation, see BASELINE.md).
+    # mins; re-measured 1.2-1.7x in isolation, see BASELINE.md). One
+    # partition per core starts one worker per core, which is the whole
+    # pool; a fixed count would oversubscribe a small host with tasks
+    # that start no further worker.
     import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
-    _warm = spark.range(64).repartition(32)
+    _warm = spark.range(64).repartition(spark.sparkContext.defaultParallelism)
     _pudf = F.pandas_udf(lambda s: s + 1, "long")
     _rudf = F.udf(lambda x: x + 1, "long")
     for col in (_pudf("id"), _rudf("id")):

@@ -5,8 +5,8 @@ Runs selected registered queries exactly like bench.py (same session
 profile, same noop-sink action, catalog cleared between queries), but
 AFTER each run pulls the Spark UI REST API to decompose wall time into
 the individual JOBS the query submitted — names, durations, task
-counts, shuffle bytes — and optionally writes `explain("formatted")`
-to plans/<tag>/<key>_<when>.txt.
+counts, task run seconds and the JVM CPU seconds within them — and
+optionally writes `explain("formatted")` to plans/<tag>/<key>_<when>.txt.
 
 This answers the question BENCH_DETAIL cannot: when a 4-second query
 is 12 sequential jobs of 0.3 s, the fix is job-count surgery, not
@@ -78,7 +78,7 @@ def main() -> int:
     # Same worker-pool warmup as bench.py so rep-0 numbers are comparable.
     from pyspark.sql import functions as F
 
-    _warm = spark.range(64).repartition(32)
+    _warm = spark.range(64).repartition(spark.sparkContext.defaultParallelism)
     for col in (
         F.pandas_udf(lambda s: s + 1, "long")("id"),
         F.udf(lambda x: x + 1, "long")("id"),
@@ -109,9 +109,33 @@ def main() -> int:
                 (plans_dir / f"{key}_{when}.txt").write_text(plan)
             job_rows = []
             if ui:
-                for j in _rest(f"{ui}/api/v1/applications/{app_id}/jobs"):
+                # Task time per stage, summed over its attempts:
+                # executorRunTime (ms) is the tasks' wall time,
+                # executorCpuTime (ns) only the JVM's share of it, so a
+                # Python stage's worker time shows as run_s - cpu_s. A
+                # reused shuffle stage keeps its id in later jobs, where
+                # it is skipped; it counts for the first job that lists it.
+                stage_time: dict[int, list[float]] = {}
+                for st in _rest(f"{ui}/api/v1/applications/{app_id}/stages"):
+                    acc = stage_time.setdefault(st["stageId"], [0.0, 0.0])
+                    acc[0] += st.get("executorRunTime", 0) / 1e3
+                    acc[1] += st.get("executorCpuTime", 0) / 1e9
+                jobs = sorted(
+                    _rest(f"{ui}/api/v1/applications/{app_id}/jobs"),
+                    key=lambda j: j["jobId"],
+                )
+                owner: dict[int, int] = {}
+                for j in jobs:
+                    for sid in j["stageIds"]:
+                        owner.setdefault(sid, j["jobId"])
+                for j in jobs:
                     if j["jobId"] in jobs_before or j["status"] == "RUNNING":
                         continue
+                    ran = [
+                        stage_time[sid]
+                        for sid in j["stageIds"]
+                        if owner[sid] == j["jobId"] and sid in stage_time
+                    ]
                     try:
                         from datetime import datetime
 
@@ -127,6 +151,8 @@ def main() -> int:
                             "job": j["jobId"],
                             "sec": dur,
                             "tasks": j.get("numTasks"),
+                            "run_s": round(sum(r for r, _ in ran), 3),
+                            "cpu_s": round(sum(c for _, c in ran), 3),
                             "desc": (j.get("description") or j.get("name", ""))[
                                 :100
                             ],
