@@ -19,7 +19,6 @@ from etl_spark_eks_spark.functions.text import (  # noqa: F401
     rolling_fingerprint,
     shingle_hashes,
     shingles,
-    simhash32,
     token_hashes,
     token_stats,
     tokenize,

@@ -193,16 +193,6 @@ def simhash32_from_hashes(token_hash_col: Column | str) -> Column:
     )
 
 
-def simhash32(tokens: Column | str) -> Column:
-    """32-bit SimHash over raw tokens. The inline ``transform`` is safe
-    here (unlike the old formulation that embedded ``xxhash64(token)``
-    inside all 32 bit-branches): it is the fold's input, evaluated once
-    per row, so each token is hashed exactly once."""
-    return simhash32_from_hashes(
-        F.transform(_c(tokens), lambda t: F.xxhash64(t))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Engine-portable hash family (round 11). The xxhash64 family above is the
 # fast path (JVM intrinsic over 8-byte primitives) but is not expressible in

@@ -25,9 +25,11 @@ from etl_spark_eks_spark.functions.text import (
     hamming64,
     minhash_band_hashes,
     ordered_token_hashes,
+    portable_minhash_bands_np,
+    portable_token_hashes,
     shingle_hashes,
     shingles,
-    simhash32,
+    simhash32_from_hashes,
     token_hashes,
     tokenize,
 )
@@ -601,82 +603,75 @@ def select_lsh_config(
     return _LSH_CONFIG_MEMO[key]
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_hashes: int = 32,
-    n_bands: int = 16,
-    family: str = "xxhash64",
+def band_pairs(
+    sigs: DataFrame,
+    probe: DataFrame | None = None,
+    *,
+    verify: tuple[str, Column, int] | None = None,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs: signature per row (shuffle-free),
-    explode to (band_idx, band_hash) keys, self-join per bucket.
+    """The LSH band-join kernel behind every banded near-dup caller
+    (MinHash q_c8 and q_c73, SimHash q_c9, perceptual hash q_m4).
+    Inputs are signature frames ``(doc_id, bands, *payload)``: ``bands``
+    is an array of band keys with the same positional meaning on every
+    row, and two docs are candidates when they hold an equal key at the
+    same position. Returns DISTINCT ``(id_1, id_2)`` pairs:
 
-    With n_hashes=32 / n_bands=16 (2 rows per band) the candidate
-    probability at Jaccard s is 1-(1-s^2)^16 — >0.9999 at s=0.8,
-    ~1-1e-9 at s=0.85. (16/8 proved too weak empirically: a 3.6-sigma-
-    low agreement draw on a fixture pair at exactly J=0.8 escaped it.)
-    Two hash families behind the same output contract:
-    ``xxhash64`` (default fast path — xxhash64(seed, xxhash64(token)),
-    seeded re-hash of an 8-byte primitive; see minhash_band_hashes for
-    why the bands are built directly from the token-hash column) and
-    ``portable`` (md5-derived (a*h+b) mod 2^31-1 — bit-identical in
-    DuckDB, the q_c8 oracle family; see functions/text.py).
+    - self-join (``probe=None``): unordered pairs, id_1 < id_2;
+    - bipartite (``probe`` given): id_1 from ``probe``, id_2 from
+      ``sigs``, with the probe side broadcast (batch-sized by contract).
+
+    ``verify=(name, expr, bound)`` keeps only pairs with
+    ``expr <= bound`` and adds ``expr`` as column ``name``. ``expr``
+    reads the payload columns of the two sides as ``a.<col>`` (id_1's
+    side) and ``b.<col>`` (id_2's side). It must be a pure function of
+    the pair, so every band a pair shares carries the same value and
+    filtering BEFORE distinct is exact — that shrinks the dedup shuffle
+    ~10x on q_c9 at sf0.1. Everything that decides recall stays with
+    the caller: hash family, band widths, and the band-entropy rule
+    (band bits well above 2·log2(n) per join domain).
+
+    Materialization: the self-join reads the exploded band table on
+    both sides, and their pruned plans differ enough that no exchange
+    reuse fires, so unmaterialized the signature pipeline (the dominant
+    cost) would run once per side. The table is ``localCheckpoint``-ed
+    lazily — the first job of the caller's action fills it — so the
+    returned plan stays lazy and no CacheManager entry outlives the
+    call. The bipartite join reads each side once and checkpoints
+    nothing; a caller that reads its signature table again (q_c73's
+    verify) checkpoints that table itself.
+
+    No explicit repartition: the band table is tiny relative to its
+    pair output (rows = docs x bands), so Spark broadcasts one side and
+    streams the other. A key repartition is actively harmful (AQE
+    coalesces the small exchange to ~1 partition, which then
+    serializes the multi-10M-row join output AND the distinct onto one
+    core; measured 7 s -> 45 s on q_c8 at sf0.1). At cluster scale AQE
+    picks a co-partitioned SMJ on the same keys by itself.
     """
-    if family == "portable":
-        # Round 12: the portable signature pipeline runs Arrow-batched
-        # (portable_minhash_bands_np — hashlib md5 + numpy minima,
-        # bit-identical to the declarative 32-transform + 16-band-md5
-        # expression; identity argument in its docstring, pinned by
-        # test_portable_minhash_np_bit_identical). The interpreted
-        # higher-order lambdas were the signature stage's entire cost
-        # (no codegen, no CSE — measured 1.65 s of q_c8's 2.5 s floor
-        # at sf0.1); tokenize stays Catalyst so split semantics are
-        # byte-identical.
-        from etl_spark_eks_spark.functions.text import (
-            portable_minhash_bands_np,
+
+    def banded(df):
+        payload = [c for c in df.columns if c not in ("doc_id", "bands")]
+        return df.select(
+            "doc_id",
+            *payload,
+            F.posexplode("bands").alias("band_idx", "band_key"),
         )
 
-        sigs = portable_minhash_bands_np(
-            widen(df), tokenize(F.col(text_col)), id_col, n_hashes, n_bands
-        )
-    else:
-        htoks = widen(df).select(
-            F.col(id_col).alias("doc_id"),
-            token_hashes(tokenize(F.col(text_col))).alias("htoks"),
-        )
-        sigs = htoks.select(
-            "doc_id",
-            minhash_band_hashes("htoks", n_hashes, n_bands).alias("bands"),
-        )
-    banded = sigs.select(
-        "doc_id", F.posexplode("bands").alias("band_idx", "band_hash")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # Persisted because the self-join consumes it twice and the two
-    # sides' pruned plans differ enough that no exchange reuse fires —
-    # without it the whole signature pipeline (the dominant cost) runs
-    # once per side. 16 longs+id per doc, orders smaller than the text.
-    # No explicit repartition here: banded is tiny relative to its pair
-    # output (rows = docs x n_bands), so Spark broadcasts one side and
-    # streams the other — and an explicit key-repartition is actively
-    # harmful (AQE coalesces the small exchange to ~1 partition, which
-    # then serializes the multi-10M-row join output AND the downstream
-    # distinct onto one core; measured 7s -> 45s at sf0.1). At cluster
-    # scale AQE picks a co-partitioned SMJ on the same keys by itself.
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-        )
-        .distinct()
+    cond = (F.col("a.band_idx") == F.col("b.band_idx")) & (
+        F.col("a.band_key") == F.col("b.band_key")
     )
+    if probe is None:
+        a = b = banded(sigs).localCheckpoint(eager=False)
+        cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
+    else:
+        a, b = F.broadcast(banded(probe)), banded(sigs)
+    pairs = a.alias("a").join(b.alias("b"), cond)
+    out = [F.col("a.doc_id").alias("id_1"), F.col("b.doc_id").alias("id_2")]
+    if verify is not None:
+        name, expr, bound = verify
+        pairs = pairs.filter(expr <= bound)
+        out.append(expr.alias(name))
+    return pairs.select(*out).distinct()
 
 
 def _c8_oracle() -> str:
@@ -722,89 +717,54 @@ def q_c8_minhash_bands(spark, sf_dir):
 
     The banding config comes from C118's planner table via
     select_lsh_config (r7 verdict task 6): the cheapest signature
-    clearing 0.9999 recall at J=0.8, which resolves to the same
-    (16 bands, 2 rows) = 32 hashes the operator always ran — now
-    sourced as data, so retuning the dedup threshold is a table
-    lookup, not a code change.
+    clearing 0.9999 recall at J=0.8, which resolves to (16 bands,
+    2 rows) = 32 hashes. The candidate probability at Jaccard s is
+    then 1-(1-s^2)^16 — >0.9999 at s=0.8, ~1-1e-9 at s=0.85. (16/8
+    proved too weak empirically: a 3.6-sigma-low agreement draw on a
+    fixture pair at exactly J=0.8 escaped it.) Retuning the dedup
+    threshold is a table lookup, not a code change.
 
-    Oracle (round 11, was rows-only): the official query runs the
+    Oracle (round 11, was rows-only): signatures use the
     engine-PORTABLE hash family ((a*h+b) mod 2^31-1 over md5 token
     hashes — functions/text.py) so the band table, hence the candidate
-    set, is bit-identical in DuckDB; the xxhash64 fast path stays
-    available via minhash_lsh_candidates(family="xxhash64") under the
-    same output contract and recall tests cover both."""
+    set, is bit-identical in DuckDB. They are computed Arrow-batched
+    (portable_minhash_bands_np, round 12 — bit-identical to the
+    declarative expression, pinned by
+    test_portable_minhash_np_bit_identical): the interpreted
+    higher-order lambdas were the signature stage's entire cost
+    (1.65 s of q_c8's 2.5 s floor at sf0.1). tokenize stays Catalyst
+    so split semantics are byte-identical. Candidates come from the
+    ``band_pairs`` self-join."""
     d = load_table(spark, sf_dir, "documents")
     n_bands, rows_per_band = select_lsh_config(spark)
-    return minhash_lsh_candidates(
-        d, "text", "doc_id", n_hashes=n_bands * rows_per_band,
-        n_bands=n_bands, family="portable",
+    sigs = portable_minhash_bands_np(
+        widen(d), tokenize(F.col("text")), "doc_id",
+        n_bands * rows_per_band, n_bands,
+    )
+    return band_pairs(sigs).select(
+        F.col("id_1").alias("doc_id_1"), F.col("id_2").alias("doc_id_2")
     )
 
 
-def simhash_near_dedup(
-    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 4,
-    family: str = "xxhash64",
-) -> DataFrame:
-    """SimHash near-dup: 32-bit signature per doc, candidates bucketed by
-    8-bit bands (4 bands; Hamming<=3 guarantees a shared band by
-    pigeonhole), verified by exact Hamming distance. ``family`` picks
-    the token-hash source: xxhash64 (fast path) or the md5-derived
-    portable family (DuckDB-expressible — the q_c9 oracle path)."""
-    if family == "portable":
-        from etl_spark_eks_spark.functions.text import (
-            portable_token_hashes,
-            simhash32_from_hashes,
-        )
-
-        sig = simhash32_from_hashes(
-            portable_token_hashes(tokenize(F.col(text_col)))
-        )
-    else:
-        sig = simhash32(tokenize(F.col(text_col)))
-    sh = widen(df).select(
-        F.col(id_col).alias("doc_id"),
-        sig.alias("sh"),
+def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """q_c9's signature frame ``(doc_id, bands, sh)``: a 32-bit SimHash
+    over the portable md5-derived token hashes (functions/text.py —
+    DuckDB-expressible, the q_c9 oracle path) and its four 8-bit bands,
+    low byte first. A pair within Hamming 3 shares a band by
+    pigeonhole; ``band_pairs``' verify does the exact Hamming test."""
+    sh = simhash32_from_hashes(
+        portable_token_hashes(tokenize(F.col(text_col)))
     )
-    banded = sh.select(
+    sigs = widen(df).select(F.col(id_col).alias("doc_id"), sh.alias("sh"))
+    return sigs.select(
         "doc_id",
+        F.array(
+            *[
+                F.shiftright(F.col("sh"), i * 8).bitwiseAND(F.lit(0xFF))
+                for i in range(4)
+            ]
+        ).alias("bands"),
         "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftright(F.col("sh"), i * 8)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("band_val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "sh", "band.band_idx", "band.band_val").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # Persisted: the self-join consumes both sides, and the SimHash
-    # fold (interpreted 32-wide zip per token) is the entire cost —
-    # computing it once instead of twice halves the operator.
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-            hamming64(F.col("a.sh"), F.col("b.sh")).alias("hamming"),
-        )
-        # hamming is a pure function of the pair, so every cross-band
-        # duplicate carries the same value: filtering BEFORE distinct is
-        # equivalent and shrinks the dedup shuffle ~10x at sf0.1.
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
     )
 
 
@@ -851,10 +811,17 @@ def q_c9_simhash_neardup(spark, sf_dir):
     Oracle (round 11, was rows-only): runs the portable md5-derived
     token-hash family (functions/text.py) — the +-1 bit votes, sign
     packing, banding, and Hamming verify are all integer-exact, so the
-    DuckDB mirror reproduces the signature table bit for bit. The
-    xxhash64 fast path remains via simhash_near_dedup(family=...)."""
+    DuckDB mirror reproduces the signature table bit for bit."""
     d = load_table(spark, sf_dir, "documents")
-    return simhash_near_dedup(d, "text", "doc_id", family="portable")
+    pairs = band_pairs(
+        simhash_signatures(d, "text", "doc_id"),
+        verify=("hamming", hamming64("a.sh", "b.sh"), 4),
+    )
+    return pairs.select(
+        F.col("id_1").alias("doc_id_1"),
+        F.col("id_2").alias("doc_id_2"),
+        "hamming",
+    )
 
 
 def connected_components(
@@ -905,17 +872,18 @@ def connected_components(
     never sees the pair-scale table: it starts on the contracted
     bridges (~2k rows at sf0.1) where every round is one job.
 
-    The per-round ``moves`` and ``g`` tables are persisted/
-    ``localCheckpoint``-ed: without lineage truncation the logical
-    plan EMBEDS the previous round's plan several times — exponential
-    tree growth that OOMs the driver just *printing* the plan by round
-    ~8 (``assign`` is exempt: its chain over persisted moves grows
-    linearly, so it resolves lazily in the consumer's single job,
-    costing zero per-round materialization jobs). ``g`` checkpoints
-    non-eagerly — its materialization rides along in the next round's
-    ``moves.count()`` job, one barrier per round. On a real cluster
-    use reliable ``checkpoint()`` (survives executor loss;
-    localCheckpoint trades that for speed).
+    The round-0 and per-round ``moves`` tables and the ``g`` tables
+    are ``localCheckpoint``-ed non-eagerly: without lineage truncation
+    the logical plan EMBEDS the previous round's plan several times —
+    exponential tree growth that OOMs the driver just *printing* the
+    plan by round ~8 (``assign`` is exempt: its chain over checkpointed
+    moves grows linearly, so it resolves lazily in the consumer's
+    single job, costing zero per-round materialization jobs). Each
+    ``moves`` table is filled by the ``moves.count()`` job that reads
+    it, and the previous ``g`` rides along in that job, so a round
+    pays one barrier and the returned chain leaves no CacheManager
+    entry. On a real cluster use reliable ``checkpoint()`` (survives
+    executor loss; localCheckpoint trades that for speed).
 
     The input ``edges`` plan executes up to THREE times (round-0 agg,
     bridge remap, node universe); callers whose pair plan is expensive
@@ -943,7 +911,7 @@ def connected_components(
         # assign: ORIGINAL node -> current label (a label is always a
         # node id in the same component, only ever decreasing). Built
         # LAZILY: each round appends one broadcast-join remap to the
-        # chain; with every `moves` table persisted the composed plan
+        # chain; with every `moves` table checkpointed the composed plan
         # grows linearly with rounds, so the whole label resolution
         # runs as one job inside the consumer's action.
         assign = (
@@ -960,7 +928,7 @@ def connected_components(
         moves = (
             e.groupBy(F.col("hi").alias("node"))
             .agg(F.min("lo").alias("m"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint(eager=False)
         )
         n_moves = moves.count()
         if n_moves == 0:
@@ -1094,17 +1062,15 @@ def connected_components(
             # only label-nodes that improve; if none can, assign is
             # the component-min fixpoint. (Nonempty g guarantees
             # nonempty moves: the larger endpoint of any edge moves.)
-            # persist + count = ONE job that materializes the round's
-            # moves AND (via g's deferred checkpoint below) the
-            # previous round's contraction — the loop pays one job
-            # barrier per round, not three. moves needs no lineage
-            # truncation of its own: its plan is one groupBy over the
-            # checkpointed g.
+            # Deferred checkpoint + count = ONE job that materializes
+            # the round's moves AND (via g's deferred checkpoint below)
+            # the previous round's contraction — the loop pays one job
+            # barrier per round, not three.
             moves = (
                 g.groupBy("node")
                 .agg(F.min("nbr").alias("m"))
                 .filter(F.col("m") < F.col("node"))
-                .persist(StorageLevel.MEMORY_AND_DISK)
+                .localCheckpoint(eager=False)
             )
             n_moves = moves.count()
             if n_moves == 0:
@@ -1826,11 +1792,12 @@ def containment_pairs(alldocs, t_thresh: float = 0.8):
     """,
 )
 def q_c73_signature_probe_neardup(spark, sf_dir):
-    """C73 (extension): incremental near-dup via the PERSISTED
+    """C73 (extension): incremental near-dup via a materialized
     signature index — the scale path C27's docstring promises: the
     standing corpus is represented ONLY by its MinHash band table
-    (16 longs + id per doc, built once, persisted), and an arriving
-    batch probes it — band equi-join for candidates, exact token-set
+    (16 longs + id per doc, built once, checkpointed), and an arriving
+    batch probes it — ``band_pairs``' bipartite band join (batch
+    broadcast) for candidates, exact token-set
     Jaccard >= 0.8 to verify, one row per duplicate batch doc with
     its match count, smallest matching corpus doc, and best Jaccard.
     C27 recomputes the blocked-Jaccard probe from corpus TEXT every
@@ -1849,8 +1816,8 @@ def q_c73_signature_probe_neardup(spark, sf_dir):
     hash oracle).
 
     Scale: the corpus never shuffles and is never re-read as text —
-    the index is bands + token-hash arrays (both persisted, both tiny
-    vs the corpus); the batch side broadcasts (batch-sized by
+    the index is bands + token-hash arrays (one checkpointed table,
+    tiny vs the corpus); the batch side broadcasts (batch-sized by
     construction: even a 60k-doc backfill batch is ~35 MB of band
     longs + token hashes); candidate volume is banded, never
     |batch|x|corpus|. The broadcast hint was A/B-measured against the
@@ -1879,28 +1846,17 @@ def q_c73_signature_probe_neardup(spark, sf_dir):
         htoks = widen(df).select(
             "doc_id", token_hashes(tokenize(F.col("text"))).alias("htoks")
         )
-        sigs = htoks.select(
+        # Read twice (the band join and the verify): checkpointed, and
+        # the first job of the caller's action fills it.
+        return htoks.select(
             "doc_id",
             "htoks",
             minhash_band_hashes("htoks", n_hashes, n_bands).alias("bands"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        bands = sigs.select(
-            "doc_id", F.posexplode("bands").alias("band_idx", "band_hash")
-        )
-        return sigs.select("doc_id", "htoks"), bands
+        ).localCheckpoint(eager=False)
 
-    c_toks, c_bands = index(corpus_txt)
-    b_toks, b_bands = index(batch_txt)
-
-    cand = (
-        F.broadcast(
-            b_bands.select(
-                F.col("doc_id").alias("b_id"), "band_idx", "band_hash"
-            )
-        )
-        .join(c_bands, ["band_idx", "band_hash"])
-        .select(F.col("b_id"), F.col("doc_id").alias("c_id"))
-        .distinct()
+    corpus, batch = index(corpus_txt), index(batch_txt)
+    cand = band_pairs(
+        corpus.select("doc_id", "bands"), batch.select("doc_id", "bands")
     )
     inter = F.size(F.array_intersect("b_htoks", "c_htoks"))
     union = F.size("b_htoks") + F.size("c_htoks") - inter
@@ -1908,25 +1864,25 @@ def q_c73_signature_probe_neardup(spark, sf_dir):
     verified = (
         cand.join(
             F.broadcast(
-                b_toks.select(
-                    F.col("doc_id").alias("b_id"),
+                batch.select(
+                    F.col("doc_id").alias("id_1"),
                     F.col("htoks").alias("b_htoks"),
                 )
             ),
-            "b_id",
+            "id_1",
         )
         .join(
-            c_toks.select(
-                F.col("doc_id").alias("c_id"), F.col("htoks").alias("c_htoks")
+            corpus.select(
+                F.col("doc_id").alias("id_2"), F.col("htoks").alias("c_htoks")
             ),
-            "c_id",
+            "id_2",
         )
-        .select("b_id", "c_id", j.alias("j"))
+        .select("id_1", "id_2", j.alias("j"))
         .filter(F.col("j") >= 0.8)
     )
-    return verified.groupBy(F.col("b_id").alias("doc_id")).agg(
+    return verified.groupBy(F.col("id_1").alias("doc_id")).agg(
         F.count("*").alias("n_matches"),
-        F.min("c_id").alias("match_doc_id"),
+        F.min("id_2").alias("match_doc_id"),
         F.round(F.max("j"), 6).alias("best_jaccard"),
     )
 
@@ -3510,7 +3466,7 @@ def q_c128_bitmap_prefilter_dedup(spark, sf_dir):
     """C128 (extension): INCREMENTAL exact dedup behind a SHIPPED
     BITMAP MEMBERSHIP INDEX — the missing rung between C27 (incremental
     dedup that joins every ingest batch against the full corpus) and
-    C73 (persisted signature index for near-dups). A Bloom filter with
+    C73 (checkpointed signature index for near-dups). A Bloom filter with
     k = 1 hash, built in PURE SQL: slot = xxhash64(content-hash) mod
     2^20, and the 2^20-bit presence array materializes as <= 16,384
     longs via bit_or(shiftleft(1L, slot & 63)) grouped by slot >> 6 —

@@ -24,8 +24,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.catalog import load_table, widen
-from etl_spark_eks_spark.functions.text import tokenize
+from etl_spark_eks_spark.functions.text import hamming64, tokenize
 from etl_spark_eks_spark.functions.local_relation import values_df
+from etl_spark_eks_spark.operators.dedup import band_pairs
 from etl_spark_eks_spark.registry import query
 
 DECODED_SCHEMA = (
@@ -198,17 +199,23 @@ def q_m3_media_shard_pack(spark, sf_dir):
     )
 
 
-def perceptual_hashes(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
-    """Binary payloads -> 128-bit perceptual hashes (two longs,
-    ``phash_hi``/``phash_lo``) via mapInPandas.
+def portable_perceptual_hashes(
+    df: DataFrame, binary_col: str, id_col: str
+) -> DataFrame:
+    """Binary payloads -> 120-bit perceptual hashes (two longs,
+    ``phash_hi``/``phash_lo``, 60 bits each).
 
     The hash here is the pHash CONTRACT, not a real image pHash (no
-    codecs in this environment): a SimHash over the payload's aligned
-    4-byte chunks — per chunk two independently-seeded splitmix64
-    mixes, per bit the majority vote across chunks. Payloads sharing
-    most content get small Hamming distance; unrelated payloads land
-    ~64 of 128 bits apart — the two properties the downstream
-    banding/verify machinery relies on.
+    codecs in this environment): a majority-vote SimHash over the
+    payload's aligned little-endian 4-byte words, where each word's
+    120 vote bits come from ONE md5 of its decimal string (hi = hex
+    chars 1-15, lo = chars 17-31 — the functions/text.py
+    portable-family contract), so the signatures are bit-identical in
+    DuckDB (uint64 wraparound arithmetic is not; md5 is). Payloads
+    sharing most content get small Hamming distance; unrelated
+    payloads land ~60 of 120 bits apart — the two properties the
+    downstream banding/verify relies on. On a real cluster, swap the
+    word hash for decode + DCT; nothing downstream changes.
 
     Two measured lessons are baked in:
     - A byte-value HISTOGRAM feature measured 20.5 s at sf0.1: every
@@ -219,73 +226,8 @@ def perceptual_hashes(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
     - A 64-bit signature with 16-bit bands hit a RANDOM-collision
       cliff in the 10x scale probe (slope 1.3, 0.6 s -> 7.9 s at 50k
       docs): expected accidental pairs grow ~n^2/2^band_bits per
-      band, so band entropy must scale with ~2*log2(n). 128 bits with
-      32-bit bands keeps the same pigeonhole guarantee class while
-      pushing the collision floor to n^2/2^32 — negligible until
-      ~10^6 docs per band domain, and the next rung (wider bands over
-      a wider signature) is the same change again.
-
-    On a real cluster, swap the chunk hash for decode + DCT inside the
-    SAME batch function; nothing downstream changes.
-    """
-    import numpy as np
-
-    M1 = np.uint64(0xBF58476D1CE4E5B9)
-    M2 = np.uint64(0x94D049BB133111EB)
-    SEED_HI = np.uint64(0x9E3779B97F4A7C15)
-
-    def _mix(x: "np.ndarray") -> "np.ndarray":
-        # splitmix64 finalizer, vectorized (uint64 wraps mod 2^64)
-        x = (x ^ (x >> np.uint64(30))) * M1
-        x = (x ^ (x >> np.uint64(27))) * M2
-        return x ^ (x >> np.uint64(31))
-
-    def _pack(bits: "np.ndarray") -> int:
-        packed = int(np.packbits(bits[::-1]).view(">u8")[0])
-        return packed - (1 << 64) if packed >= (1 << 63) else packed
-
-    def _phash128(payload: bytes) -> tuple[int, int]:
-        n4 = len(payload) // 4
-        if n4 == 0:
-            return 0, 0
-        w = np.frombuffer(payload[: n4 * 4], dtype="<u4").astype(np.uint64)
-        shifts = np.arange(64, dtype=np.uint64)
-        out = []
-        for seed in (np.uint64(0), SEED_HI):
-            h = _mix(w ^ seed)
-            ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-            out.append(_pack(ones * 2 > n4))
-        return out[0], out[1]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hashes = [_phash128(p) for p in pdf[binary_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "phash_hi": [h[0] for h in hashes],
-                    "phash_lo": [h[1] for h in hashes],
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        batches, "doc_id long, phash_hi long, phash_lo long"
-    )
-
-
-def portable_perceptual_hashes(
-    df: DataFrame, binary_col: str, id_col: str
-) -> DataFrame:
-    """Engine-portable variant of :func:`perceptual_hashes`: the same
-    majority-vote SimHash over aligned little-endian 4-byte words, but
-    each word's 120 vote bits come from ONE md5 of its decimal string
-    (hi = hex chars 1-15, lo = chars 17-31 — the functions/text.py
-    portable-family contract) instead of two splitmix64 mixes, so the
-    signatures are bit-identical in DuckDB (uint64 wraparound
-    arithmetic is not; md5 is). 2 x 60-bit signatures in place of
-    2 x 64: the banding becomes 4 x 30-bit bands — the same pigeonhole
-    guarantee (Hamming <= 3 shares a band) and effectively the same
-    collision floor (n^2/2^30).
+      band. 4 x 30-bit bands keep the pigeonhole guarantee (Hamming
+      <= 3 shares a band) with the collision floor at n^2/2^30.
 
     Shape: hex() the payload once, EXPLODE the word index (words are
     rows, not interpreted array folds — higher-order lambdas have no
@@ -295,8 +237,7 @@ def portable_perceptual_hashes(
     one row per doc, majority-pack. The only exchange carries
     (doc_id, hi, lo) longs — payload bytes never cross partitions —
     and the doc_id groupBy is map-side-combined. Docs with no full
-    word (len < 4) re-enter via the left join with phash 0, matching
-    _phash128's empty contract."""
+    word (len < 4) re-enter via the left join with phash 0."""
     n_bits = 60
     hx = F.hex(F.col(binary_col))
     n4 = (F.length(F.col(binary_col)) / 4).cast("int")
@@ -423,8 +364,7 @@ def portable_perceptual_hashes_np(
     column-for-column in tests/test_tier_c.py::
     test_portable_phash_np_bit_identical.
 
-    Scale: identical dataflow to the splitmix64 `perceptual_hashes`
-    (decode+hash once per payload, Arrow batches, per-task md5 memo
+    Scale: decode+hash once per payload (Arrow batches, per-task md5 memo
     across repeated words — guide §4.5's init-once applied to a
     cache); the declarative twin remains the oracle-shaped reference.
     """
@@ -551,6 +491,25 @@ def _m4_oracle() -> str:
     """
 
 
+def phash_signatures(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
+    """q_m4's signature frame ``(doc_id, bands, phash_hi, phash_lo)``:
+    the portable perceptual hash and its four 30-bit bands, band
+    i*2+j = bits [30j, 30j+30) of word i (hi, lo)."""
+    mask30 = F.lit((1 << 30) - 1).cast("long")
+    return portable_perceptual_hashes_np(df, binary_col, id_col).select(
+        "doc_id",
+        F.array(
+            *[
+                F.shiftright(c, 30 * j).bitwiseAND(mask30)
+                for c in ("phash_hi", "phash_lo")
+                for j in range(2)
+            ]
+        ).alias("bands"),
+        "phash_hi",
+        "phash_lo",
+    )
+
+
 @query("q_m4_media_phash_neardup", oracle=_m4_oracle())
 def q_m4_media_phash_neardup(spark, sf_dir):
     """M4 (extension): near-duplicate MEDIA detection — 120-bit
@@ -562,23 +521,21 @@ def q_m4_media_phash_neardup(spark, sf_dir):
     Invariants (identical payloads collapse, determinism, threshold
     bound) are asserted in tests/test_tier_c.py.
 
-    Oracle (round 11, was rows-only): the official query computes the
-    portable phash (one md5 per 4-byte word instead of the splitmix64
-    pair — uint64 wraparound is not DuckDB-expressible, md5 is), so
-    signatures, bands, and Hamming distances hash-match; the
-    splitmix64 mapInPandas fast path (perceptual_hashes) remains the
-    decode-plumbing demonstration under the same output contract.
-    Round 12: the portable signatures run through the Arrow-batched
-    twin (portable_perceptual_hashes_np — bit-identity argument in
-    its docstring, pinned by test_portable_phash_np_bit_identical);
-    the declarative explode-aggregate form cost ~2.5 s/run of DRIVER
-    plan analysis+codegen on its ~300-node tree at sf0.1, not
-    execution (profiler: 0.9 s of 3.9 s in jobs).
+    Oracle (round 11, was rows-only): the query computes the portable
+    phash (one md5 per 4-byte word — uint64 wraparound is not
+    DuckDB-expressible, md5 is), so signatures, bands, and Hamming
+    distances hash-match. Round 12: the signatures run through the
+    Arrow-batched twin (portable_perceptual_hashes_np — bit-identity
+    argument in its docstring, pinned by
+    test_portable_phash_np_bit_identical); the declarative
+    explode-aggregate form cost ~2.5 s/run of DRIVER plan
+    analysis+codegen on its ~300-node tree at sf0.1, not execution
+    (profiler: 0.9 s of 3.9 s in jobs).
 
     Scale: the expensive step (decode + hash) is one Arrow-batched
     pass — payload bytes never cross partitions; only 16 hash bytes
-    shuffle. The band self-join is bucketed (pairwise work inside
-    buckets only), the C8/C9 shape. Band ENTROPY is the scale knob the
+    shuffle. The ``band_pairs`` self-join is bucketed (pairwise work
+    inside buckets only). Band ENTROPY is the scale knob the
     10x probe exposed: 16-bit bands put accidental (not similar, just
     colliding) pairs at ~n^2/2^16 per band — measured slope 1.3,
     0.6 s -> 7.9 s at 50k docs; 32-bit bands push that floor to
@@ -587,48 +544,17 @@ def q_m4_media_phash_neardup(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
-    hashes = portable_perceptual_hashes_np(d, "payload", "doc_id")
-    mask30 = F.lit((1 << 30) - 1).cast("long")
-    band_exprs = []
-    for i, col in enumerate(("phash_hi", "phash_lo")):
-        for j in range(2):
-            band_exprs.append(
-                F.struct(
-                    F.lit(i * 2 + j).alias("band_idx"),
-                    F.shiftright(col, 30 * j)
-                    .bitwiseAND(mask30)
-                    .alias("band_val"),
-                )
-            )
-    bands = hashes.select(
-        "doc_id",
-        "phash_hi",
-        "phash_lo",
-        F.explode(F.array(*band_exprs)).alias("b"),
-    ).select("doc_id", "phash_hi", "phash_lo", "b.band_idx", "b.band_val")
-    from pyspark import StorageLevel
-
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
-    a, b = bands.alias("a"), bands.alias("b")
-    from etl_spark_eks_spark.functions.text import hamming64
-
-    hamming = hamming64(
-        F.col("a.phash_hi"), F.col("b.phash_hi")
-    ) + hamming64(F.col("a.phash_lo"), F.col("b.phash_lo"))
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .filter(hamming <= 12)
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
+    hamming = hamming64("a.phash_hi", "b.phash_hi") + hamming64(
+        "a.phash_lo", "b.phash_lo"
+    )
+    pairs = band_pairs(
+        phash_signatures(d, "payload", "doc_id"),
+        verify=("hamming", hamming, 12),
+    )
+    return pairs.select(
+        F.col("id_1").alias("doc_id_1"),
+        F.col("id_2").alias("doc_id_2"),
+        "hamming",
     )
 
 

@@ -63,20 +63,21 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
 def test_minhash_no_duplicated_signature_evaluation(spark, sf_dir):
     """Regression guard for the q_c8 plan pathology (20x slowdown): the
     MinHash band expression must appear in the EXECUTED plan a bounded
-    number of times — the banded table is persisted, so the signature
-    pipeline exists only in the cache-build subtree, not re-inlined
-    into scan-adjacent Filters by InferFiltersFromGenerate nor expanded
-    32x by element_at over an inline signature array. The tokenize
-    fragment (split on whitespace) is the marker: currently 2 copies
-    (the InMemoryRelation build plan rendered under each scan). A
-    duplicated plan is ~30x that count (and the old plan string was
-    700 KB). The executed plan is the right thing to measure: extended
-    mode re-prints 4 plan stages and over-counts persist boundaries."""
+    number of times — ``band_pairs`` localCheckpoints the banded table,
+    so both join sides read checkpointed-RDD scans and the signature
+    pipeline is not re-inlined into scan-adjacent Filters by
+    InferFiltersFromGenerate nor expanded 32x by element_at over an
+    inline signature array. The tokenize fragment (split on
+    whitespace) is the marker; a duplicated plan is ~30x the bound
+    (and the old plan string was 700 KB). The executed plan is the
+    right thing to measure: extended mode re-prints 4 plan stages and
+    over-counts materialization boundaries."""
     df = registry.QUERIES["q_c8_minhash_bands"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_tokenize = plan.count("split(text")
     assert n_tokenize <= 4, f"signature expression duplicated: {n_tokenize} copies"
     assert len(plan) < 100_000, f"plan blew up to {len(plan)} chars"
+    assert "ExistingRDD" in plan
 
 
 def test_prefix_jaccard_no_duplicated_signature_evaluation(spark, sf_dir):

@@ -1899,6 +1899,64 @@ def test_jaccard_near_dedup_matches_python_bruteforce(
         assert cache.isEmpty(), (len(frames), kw)
 
 
+band_tables = st.lists(
+    st.lists(st.integers(0, 3), min_size=3, max_size=3),
+    min_size=0,
+    max_size=10,
+)
+
+
+@given(rows=band_tables, probes=band_tables, bound=st.integers(0, 6))
+@_settings
+def test_band_pairs_matches_python_bruteforce(spark, rows, probes, bound):
+    """The band_pairs LSH kernel behind q_c8 / q_c9 / q_c73 / q_m4
+    fuzzed against a pure-Python brute force on RANDOM band arrays (3
+    bands over a 4-value key domain, so most pairs collide somewhere):
+    self-join with and without a payload verify, and a bipartite
+    probe. The corpus always holds a clone of its first row, so some
+    pair collides in every band and must still come out as ONE row;
+    an empty table must yield no pairs. No call may leave a
+    CacheManager entry behind."""
+    from etl_spark_eks_spark.operators.dedup import band_pairs
+
+    rows = rows + rows[:1]
+
+    def sigs(tables, base):
+        return spark.createDataFrame(
+            [(base + i, b, sum(b)) for i, b in enumerate(tables)],
+            "doc_id long, bands array<long>, w long",
+        )
+
+    def collide(x, y):
+        return any(p == q for p, q in zip(x, y))
+
+    ids = list(enumerate(rows))
+    self_pairs = {
+        (i, j) for i, x in ids for j, y in ids if i < j and collide(x, y)
+    }
+    dist = {(i, j): abs(sum(rows[i]) - sum(rows[j])) for i, j in self_pairs}
+    verified = {(i, j, d) for (i, j), d in dist.items() if d <= bound}
+    bipartite = {
+        (100 + p, i) for p, x in enumerate(probes) for i, y in ids
+        if collide(x, y)
+    }
+    corpus = sigs(rows, 0)
+    verify = ("d", F.abs(F.col("a.w") - F.col("b.w")), bound)
+    cases = [
+        (self_pairs, band_pairs(corpus)),
+        (verified, band_pairs(corpus, verify=verify)),
+        (bipartite, band_pairs(corpus, sigs(probes, 100))),
+        (set(), band_pairs(sigs([], 0))),
+    ]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for n, (expect, df) in enumerate(cases):
+        got = [tuple(r) for r in df.collect()]
+        assert len(got) == len(set(got)), (n, got)
+        assert set(got) == expect, (n, set(got) ^ expect)
+        assert cache.isEmpty(), n
+
+
 payloads = st.lists(
     st.binary(min_size=0, max_size=700), min_size=1, max_size=6
 )

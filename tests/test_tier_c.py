@@ -65,31 +65,36 @@ def test_minhash_candidates_superset_of_near_dups(spark, sf_dir):
     assert not missed, f"LSH missed true near-dups: {sorted(missed)[:5]}"
 
 
-def test_minhash_xxhash64_fast_arm_invariants(spark, sf_dir):
-    """C8 fast arm (r11 verdict task 3): the production xxhash64 family
-    the docstrings point users to at 100 TB must honor the SAME output
-    contract as the oracled portable family — deterministic, identical
-    docs collapse into candidate pairs, and true near-dups (J >= 0.85)
-    are never missed. Without this the fast arm is dead-untested code."""
-    from etl_spark_eks_spark.operators.dedup import minhash_lsh_candidates
+def test_minhash_band_pairs_invariants(spark, sf_dir):
+    """C8's production path — portable MinHash signatures through the
+    ``band_pairs`` self-join — on arbitrary frames: deterministic,
+    equal to q_c8 on the fixture, identical docs collapse into
+    candidate pairs, and true near-dups (J >= 0.85) are never missed."""
+    from etl_spark_eks_spark.functions.text import portable_minhash_bands_np
+    from etl_spark_eks_spark.operators.dedup import band_pairs
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     run = lambda df: {
-        (r["doc_id_1"], r["doc_id_2"])
-        for r in minhash_lsh_candidates(
-            df, "text", "doc_id", n_hashes=32, n_bands=16,
-            family="xxhash64",
+        tuple(r)
+        for r in band_pairs(
+            portable_minhash_bands_np(
+                df, tokenize(F.col("text")), "doc_id", 32, 16
+            )
         ).collect()
     }
     c1, c2 = run(d), run(d)
-    assert c1 == c2, "xxhash64 minhash arm must be deterministic"
+    assert c1 == c2, "minhash band pairs must be deterministic"
+    assert c1 == {
+        tuple(r)
+        for r in registry.QUERIES["q_c8_minhash_bands"](spark, sf_dir).collect()
+    }
     truth = {
         (r["d1"], r["d2"])
         for r in exact_jaccard_pairs(spark, sf_dir, 0.85).collect()
     }
     assert truth, "fixture should contain near-dup pairs"
     missed = truth - c1
-    assert not missed, f"fast arm missed true near-dups: {sorted(missed)[:5]}"
+    assert not missed, f"LSH missed true near-dups: {sorted(missed)[:5]}"
     # identical-docs collapse: every clone pair (id, id+N) must be a
     # candidate — an identical token multiset yields an identical
     # signature, hence shares every band bucket
@@ -103,22 +108,34 @@ def test_minhash_xxhash64_fast_arm_invariants(spark, sf_dir):
         assert (i, i + n) in cc, f"clone pair ({i},{i + n}) not a candidate"
 
 
-def test_simhash_xxhash64_fast_arm_invariants(spark, sf_dir):
-    """C9 fast arm (r11 verdict task 3): determinism, the Hamming
+def test_simhash_band_pairs_invariants(spark, sf_dir):
+    """C9's production path — portable SimHash signatures through the
+    ``band_pairs`` self-join with its Hamming verify — on arbitrary
+    frames: determinism, equality with q_c9 on the fixture, the Hamming
     threshold bound on every reported pair, and identical-docs collapse
-    to Hamming-0 pairs — the invariants test_media_phash_neardup_invariants
-    pins for the phash fast arm, applied to simhash_near_dedup."""
-    from etl_spark_eks_spark.operators.dedup import simhash_near_dedup
+    to Hamming-0 pairs."""
+    from etl_spark_eks_spark.functions.text import hamming64
+    from etl_spark_eks_spark.operators.dedup import (
+        band_pairs,
+        simhash_signatures,
+    )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     run = lambda df: {
-        (r["doc_id_1"], r["doc_id_2"]): r["hamming"]
-        for r in simhash_near_dedup(
-            df, "text", "doc_id", max_hamming=4, family="xxhash64",
+        (r["id_1"], r["id_2"]): r["hamming"]
+        for r in band_pairs(
+            simhash_signatures(df, "text", "doc_id"),
+            verify=("hamming", hamming64("a.sh", "b.sh"), 4),
         ).collect()
     }
     p1, p2 = run(d), run(d)
-    assert p1 == p2, "xxhash64 simhash arm must be deterministic"
+    assert p1 == p2, "simhash band pairs must be deterministic"
+    assert p1 == {
+        (r["doc_id_1"], r["doc_id_2"]): r["hamming"]
+        for r in registry.QUERIES["q_c9_simhash_neardup"](
+            spark, sf_dir
+        ).collect()
+    }
     for (d1, d2), h in p1.items():
         assert d1 < d2
         assert 0 <= h <= 4, f"pair ({d1},{d2}) violates Hamming bound: {h}"
@@ -170,12 +187,14 @@ def test_portable_hash32_width_contract(spark):
 
 def test_exact_dups_share_fingerprint_and_simhash(spark, sf_dir):
     """C12/C9: identical texts must collapse to identical fingerprints
-    and SimHash values (hash determinism). The fixture at sf0.001 has no
+    and (portable, q_c9's) SimHash values (hash determinism). The
+    fixture at sf0.001 has no
     exact dups, so clone every doc under a shifted id first."""
     from etl_spark_eks_spark.functions.text import (
         ordered_token_hashes,
+        portable_token_hashes,
         rolling_fingerprint,
-        simhash32,
+        simhash32_from_hashes,
     )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -188,7 +207,9 @@ def test_exact_dups_share_fingerprint_and_simhash(spark, sf_dir):
         "doc_id",
         "text",
         rolling_fingerprint("th", 3).alias("fingerprint"),
-        simhash32(tokenize("text")).alias("sh"),
+        simhash32_from_hashes(
+            portable_token_hashes(tokenize("text"))
+        ).alias("sh"),
     )
     bad = (
         fp.groupBy("text")
@@ -709,20 +730,23 @@ def test_zorder_layout_prunes_both_dimensions(spark, sf_dir):
 
 def test_media_phash_neardup_invariants(spark, sf_dir):
     """M4: identical payloads must collapse to identical perceptual
-    hashes (and so appear as Hamming-0 candidate pairs when cloned);
-    the operator is deterministic run to run; every reported pair
-    respects the Hamming threshold."""
+    hashes, and so to Hamming-0 pairs of the ``band_pairs`` self-join
+    when cloned; the hash is deterministic run to run; every reported
+    pair respects the Hamming threshold."""
     from pyspark.sql import functions as F
 
-    from etl_spark_eks_spark.operators.multimodal import perceptual_hashes
+    from etl_spark_eks_spark.functions.text import hamming64
+    from etl_spark_eks_spark.operators.dedup import band_pairs
+    from etl_spark_eks_spark.operators.multimodal import phash_signatures
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
-    h1 = {r["doc_id"]: (r["phash_hi"], r["phash_lo"])
-          for r in perceptual_hashes(d, "payload", "doc_id").collect()}
-    h2 = {r["doc_id"]: (r["phash_hi"], r["phash_lo"])
-          for r in perceptual_hashes(d, "payload", "doc_id").collect()}
+    hashes = lambda df: {
+        r["doc_id"]: (r["phash_hi"], r["phash_lo"])
+        for r in phash_signatures(df, "payload", "doc_id").collect()
+    }
+    h1, h2 = hashes(d), hashes(d)
     assert h1 == h2, "perceptual hash must be deterministic"
 
     rows = registry.QUERIES["q_m4_media_phash_neardup"](spark, sf_dir).collect()
@@ -735,10 +759,21 @@ def test_media_phash_neardup_invariants(spark, sf_dir):
     cloned = d.unionByName(
         d.withColumn("doc_id", F.col("doc_id") + F.lit(n))
     )
-    ch = {r["doc_id"]: (r["phash_hi"], r["phash_lo"])
-          for r in perceptual_hashes(cloned, "payload", "doc_id").collect()}
+    ch = hashes(cloned)
     for doc_id, ph in h1.items():
         assert ch[doc_id + n] == ph
+    hamming = hamming64("a.phash_hi", "b.phash_hi") + hamming64(
+        "a.phash_lo", "b.phash_lo"
+    )
+    pairs = {
+        (r["id_1"], r["id_2"]): r["hamming"]
+        for r in band_pairs(
+            phash_signatures(cloned, "payload", "doc_id"),
+            verify=("hamming", hamming, 12),
+        ).collect()
+    }
+    for doc_id in h1:
+        assert pairs.get((doc_id, doc_id + n)) == 0
 
 
 def test_portable_phash_np_bit_identical(spark, sf_dir):

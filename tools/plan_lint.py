@@ -148,16 +148,9 @@ ALLOW_SINGLE_PART = {
 # action would silently re-run the cached subtree per consumer).
 ALLOW_CACHE_RESIDUE = {
     "q_b117_cached_multi_action",  # the cache IS the demo: two aggregations read one cached projection
-    "q_c8_minhash_bands",          # banded MinHash signature table read by both sides of the band self-join
-    "q_c9_simhash_neardup",        # banded simhash table read by both sides of the band self-join
-    "q_c18_dedup_clusters",        # connected_components' per-round moves tables, read by the lazy label chain
-    "q_c58_cluster_canonicals",    # same connected_components moves tables as q_c18
-    "q_c127_semdedup",             # same connected_components moves tables as q_c18
-    "q_c73_signature_probe_neardup",  # corpus signature index (token hashes + bands) read by the band probe and the verify
     "q_c92_perplexity_buckets",    # per-doc table read by the bucket build, the n_l broadcast and the rank join
     "q_c101_source_divergence_matrix",  # contracted vocab tables read by the driver pulls and the final join
     "q_c102_substring_span_surgery",  # span table read by the two rewrite joins and the anti-join
-    "q_m4_media_phash_neardup",    # banded phash table read by both sides of the band self-join
 }
 # Streaming queries run real streams inside the builder; their plans are
 # micro-batch internals, not batch plans — lint the batch surface only.
