@@ -13,10 +13,7 @@ from etl_spark_eks_spark.functions.vector import (  # noqa: F401
     l2_normalize,
 )
 from etl_spark_eks_spark.functions.text import (  # noqa: F401
-    minhash_band_hashes,
-    minhash_signature,
     ordered_token_hashes,
-    rolling_fingerprint,
     shingle_hashes,
     shingles,
     token_hashes,

@@ -1,12 +1,15 @@
 """Text-analysis primitives for LLM-training-data pipelines: tokenize,
-shingles, MinHash signatures, SimHash, rolling-hash fingerprints,
-per-doc quality stats.
+shingles, token and shingle hashes, MinHash band hashes, SimHash,
+shingle fingerprints, per-doc quality stats.
 
-All pure Catalyst expressions (split/transform/aggregate/xxhash64) —
-per-row, shuffle-free, codegen-compiled. The hash family is
-``xxhash64(seed_tag || token)`` which is deterministic across runs,
-executors, and Spark versions (a requirement for incremental dedup at
-100 TB: yesterday's signatures must still be valid tomorrow).
+Catalyst expressions (split/transform/aggregate/hash) — per-row,
+shuffle-free — plus one Arrow-batched MinHash kernel. Two hash
+families: xxhash64 over tokens (JVM-only, for set and shingle
+identities whose values never reach a query's output) and the
+engine-portable md5 family below (for outputs an oracle must
+reproduce). Both are deterministic across runs, executors, and Spark
+versions (a requirement for incremental dedup at 100 TB: yesterday's
+signatures must still be valid tomorrow).
 """
 
 from __future__ import annotations
@@ -44,7 +47,7 @@ def ordered_token_hashes(tokens: Column | str) -> Column:
     """Tokens -> array<long> of xxhash64 values, ORDER PRESERVED (for
     shingling; use ``token_hashes`` for set semantics). Materialize this
     as a named column before feeding it to ``shingle_hashes`` — the
-    q_c8 plan-pathology rule (see ``minhash_band_hashes``): an inline
+    plan-shape rule of ``portable_minhash_band_hashes``: an inline
     expression would be textually re-expanded at every element_at
     reference."""
     return F.transform(_c(tokens), lambda t: F.xxhash64(t))
@@ -76,82 +79,6 @@ def token_hashes(tokens: Column | str) -> Column:
     primitive instead of re-reading (and re-allocating) the token
     string; set sizes are preserved up to a 2^-64 collision."""
     return F.array_distinct(F.transform(_c(tokens), lambda t: F.xxhash64(t)))
-
-
-def minhash_band_hashes(
-    token_hash_col: Column | str, n_hashes: int, n_bands: int
-) -> Column:
-    """LSH band hashes straight from a *materialized* token-hash column:
-    band b = xxhash64(minhash[b*r], .., minhash[b*r+r-1]) where
-    minhash[s] = min over tokens of xxhash64(s, token_hash).
-
-    Plan-shape contract (why this replaces the readable
-    ``lsh_bands(minhash_signature(tokenize(text)))`` composition): each
-    per-seed min appears EXACTLY ONCE in the expression tree, and the
-    argument must be a projected column, not an inline expression.
-    Composing from an inline signature array makes every
-    ``element_at(sig, i)`` duplicate the whole 32-min expression, and
-    Catalyst's InferFiltersFromGenerate then copies the duplicated tree
-    again below the explode — measured ~30x redundant tokenize+hash work
-    per row at sf0.1 (the plan string alone was 700 KB). Higher-order
-    lambdas are interpreted, not codegen'd, so common-subexpression
-    elimination never rescues the composed form. CollapseProject keeps
-    the token-hash projection intact because the alias is expensive and
-    referenced n_hashes times.
-    """
-    rows = n_hashes // n_bands
-    toks = _c(token_hash_col)
-
-    def mh(seed: int) -> Column:
-        return F.array_min(F.transform(toks, lambda h: F.xxhash64(F.lit(seed), h)))
-
-    return F.array(
-        *[
-            F.xxhash64(*[mh(b * rows + r) for r in range(rows)])
-            for b in range(n_bands)
-        ]
-    )
-
-
-def minhash_signature(tokens: Column | str, n_hashes: int = 16) -> Column:
-    """MinHash signature: per seed s, min over distinct tokens of
-    xxhash64('mh<s>|' || token) -> array<long> of length n_hashes.
-
-    Computed entirely per-row (array_min over a transform) — the classic
-    explode+groupBy formulation shuffles every token; this shuffles
-    nothing.
-
-    NB: the per-seed lambda comes from a factory — a ``lambda t, s=s``
-    default arg would be parsed by PySpark as a 2-arg (element, index)
-    lambda and silently bind the seed to the array index.
-    """
-    toks = F.array_distinct(_c(tokens))
-
-    def hasher(seed: int):
-        prefix = F.lit(f"mh{seed}|")
-        return lambda t: F.xxhash64(F.concat(prefix, t))
-
-    return F.array(*[F.array_min(F.transform(toks, hasher(s))) for s in range(n_hashes)])
-
-
-def lsh_bands(signature: Column | str, n_bands: int, rows_per_band: int) -> Column:
-    """Split a MinHash signature into band hashes -> array<long> of
-    length n_bands; docs sharing ANY band value are candidate pairs."""
-    sig = _c(signature)
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at(sig, b * rows_per_band + r + 1).cast("string")
-                        for r in range(rows_per_band)
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
-    )
 
 
 def simhash32_from_hashes(token_hash_col: Column | str) -> Column:
@@ -194,10 +121,10 @@ def simhash32_from_hashes(token_hash_col: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Engine-portable hash family (round 11). The xxhash64 family above is the
-# fast path (JVM intrinsic over 8-byte primitives) but is not expressible in
-# DuckDB, so operators whose OUTPUT is hash-family-dependent (MinHash bands,
-# SimHash signatures, shingle fingerprints) could never earn a hash oracle.
+# Engine-portable hash family (round 11). The xxhash64 family above is a JVM
+# intrinsic over 8-byte primitives but is not expressible in DuckDB, so
+# operators whose OUTPUT is hash-family-dependent (MinHash bands, SimHash
+# signatures, shingle fingerprints) use this family to earn a hash oracle.
 # This family extends the proven hash_bucket contract (operators/sampling.py):
 #   Spark  conv(substr(md5(x), 1, N), 16, 10)::BIGINT
 #   DuckDB ('0x' || substr(md5(x), 1, N))::BIGINT
@@ -210,8 +137,8 @@ def simhash32_from_hashes(token_hash_col: Column | str) -> Column:
 # 64-bit with only ~2^33 headroom. Any widening of portable_hash32 (e.g. 9
 # hex chars) overflows silently on Spark (non-ANSI wraps) while DuckDB
 # errors — divergent engines; test_portable_hash32_width_contract pins the
-# 32-bit width. Cost vs the fast path: one md5 per token instead of
-# one xxhash64, then integer ops per seed — same plan shape, same
+# 32-bit width. Cost vs xxhash64: one md5 per token instead of one
+# xxhash64, then integer ops per seed — same plan shape, same
 # shuffle-free per-row evaluation.
 
 MH_PRIME = 2147483647  # 2^31 - 1
@@ -265,9 +192,22 @@ def portable_minhash_band_hashes(
 ) -> Column:
     """Portable-family LSH band hashes: minhash[s] = min over token
     hashes of (a_s*h + b_s) mod P; band b = portable_hash64 of the
-    comma-joined row minima. Same plan-shape contract as
-    ``minhash_band_hashes`` (each per-seed min appears exactly once,
-    argument must be a materialized column)."""
+    comma-joined row minima. The declarative reference for
+    :func:`portable_minhash_bands_np`, which the queries run.
+
+    Plan-shape contract (why bands are built straight from token
+    hashes rather than by composing a signature array with a banding
+    step): each per-seed min appears EXACTLY ONCE in the expression
+    tree, and the argument must be a projected column, not an inline
+    expression. Composing from an inline signature array makes every
+    ``element_at(sig, i)`` duplicate the whole 32-min expression, and
+    Catalyst's InferFiltersFromGenerate then copies the duplicated tree
+    again below the explode — measured ~30x redundant tokenize+hash work
+    per row at sf0.1 (the plan string alone was 700 KB). Higher-order
+    lambdas are interpreted, not codegen'd, so common-subexpression
+    elimination never rescues the composed form. CollapseProject keeps
+    the token-hash projection intact because the alias is expensive and
+    referenced n_hashes times."""
     rows = n_hashes // n_bands
     toks = _c(token_hash_col)
 
@@ -428,9 +368,12 @@ def portable_shingle_hashes(token_hash_col: Column | str, k: int = 3) -> Column:
 def portable_rolling_fingerprint(
     token_hash_col: Column | str, k: int = 3
 ) -> Column:
-    """Portable-family document fingerprint (min shingle hash; short
-    docs fall back to hashing the comma-joined token-hash array) —
-    DuckDB-expressible analogue of ``rolling_fingerprint``."""
+    """Document fingerprint: min shingle hash over k-token shingles
+    (winnowing's min-sampling, window = whole doc), equal for exact
+    dups and stable under small suffix edits. Takes a MATERIALIZED
+    ordered portable token-hash column; docs shorter than k tokens
+    fall back to hashing the comma-joined token-hash array. Portable
+    family, so the DuckDB oracle reproduces it (q_c12)."""
     h = _c(token_hash_col)
     sh = portable_shingle_hashes(h, k)
     whole = portable_hash64(
@@ -442,20 +385,6 @@ def portable_rolling_fingerprint(
 def hamming64(a: Column | str, b: Column | str) -> Column:
     """Hamming distance between two 64-bit hashes (bit_count of XOR)."""
     return F.bit_count(_c(a).bitwiseXOR(_c(b)))
-
-
-def rolling_fingerprint(token_hash_col: Column | str, k: int = 3) -> Column:
-    """Document fingerprint: min rolling hash over k-token shingles
-    (winnowing's min-sampling, window = whole doc). Equal for exact
-    dups, stable under small suffix edits.
-
-    Takes a MATERIALIZED ordered token-hash column
-    (``ordered_token_hashes``) so the shingle stage reads k longs per
-    window instead of building k-token strings; docs shorter than k
-    tokens fall back to hashing the whole token-hash array."""
-    h = _c(token_hash_col)
-    sh = shingle_hashes(h, k)
-    return F.when(F.size(sh) > 0, F.array_min(sh)).otherwise(F.xxhash64(h))
 
 
 def token_stats(text: Column | str) -> dict[str, Column]:

@@ -23,7 +23,6 @@ from pyspark.storagelevel import StorageLevel
 from etl_spark_eks_spark.catalog import adaptive_width, load_table, widen
 from etl_spark_eks_spark.functions.text import (
     hamming64,
-    minhash_band_hashes,
     ordered_token_hashes,
     portable_minhash_bands_np,
     portable_token_hashes,
@@ -824,12 +823,19 @@ def q_c9_simhash_neardup(spark, sf_dir):
     )
 
 
+# connected_components' bounds: a contracted graph of at most
+# _CC_LOCAL_EDGES edges (~3 MB) is finished on the driver by union-find,
+# a larger one by the distributed loop, whose many small jobs run at
+# _CC_LOOP_PARTITIONS shuffle partitions (sized to the label table).
+_CC_LOCAL_EDGES = 200_000
+_CC_LOOP_PARTITIONS = 8
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str,
     dst_col: str,
     max_iter: int = 25,
-    loop_partitions: int | None = 8,
 ) -> DataFrame:
     """Connected components over an undirected edge list by min-label
     propagation WITH graph contraction: every node starts labeled with
@@ -890,17 +896,15 @@ def connected_components(
     should persist or localCheckpoint it first (q_c18/q_c58/q_c127
     do).
 
-    ``loop_partitions`` pins the shuffle width for the loop's many
+    ``_CC_LOOP_PARTITIONS`` pins the shuffle width for the loop's many
     small jobs (restored after): every round pays per-partition
     scheduling/commit overhead regardless of table size, the same
-    economics as streaming state partitions. Size it to the label
+    economics as streaming state partitions. It is sized to the label
     table (node count), not the corpus.
     """
     spark = edges.sparkSession
-    prev = None
-    if loop_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_CC_LOOP_PARTITIONS))
     try:
         # lo < hi normalization: a projection, never a materialized
         # symmetric copy. Accidental self-loops dropped here.
@@ -996,26 +1000,17 @@ def connected_components(
         # the loop still pays per-round plan compilation + a count job
         # until the fixpoint (~3 rounds, measured ~1.5 s of q_c18's
         # floor). When the contracted graph fits a driver-bounded cap
-        # (default 200k edges ≈ 3 MB; $SPARK_GRAFT_CC_LOCAL_EDGES —
-        # the same bounded-pull class as the k-row centroid collects),
-        # fetch it with ONE limit(cap+1) job and finish with
-        # union-find: the component-minimum labeling is the UNIQUE
-        # fixpoint the loop converges to, so the output is identical
-        # by construction (and covered by the q_c18/q_c58 full-
-        # fixpoint SQL oracles). Graphs past the cap — the adversarial
-        # long-chain regime the loop exists for — take the loop
-        # exactly as before; the gate costs them one limit-scan job.
-        import os as _os
-
-        # NOTE (ADVICE r12): for under-cap graphs the union-find below
-        # returns the TRUE component-min fixpoint, while the loop can
-        # return truncated (non-fixpoint) labels if a contracted chain
-        # outlives max_iter — so on such adversarial graphs the output
-        # legitimately varies with SPARK_GRAFT_CC_LOCAL_EDGES, and the
-        # local path is the more correct one. The loop logs a warning
-        # when it exhausts max_iter unconverged so the divergence is
-        # traceable.
-        cap = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "200000"))
+        # (_CC_LOCAL_EDGES — the same bounded-pull class as the k-row
+        # centroid collects), fetch it with ONE limit(cap+1) job and
+        # finish with union-find: the component-minimum labeling is
+        # the UNIQUE fixpoint the loop converges to, so the output is
+        # identical by construction (and covered by the q_c18/q_c58
+        # full-fixpoint SQL oracles). Graphs past the cap — the
+        # adversarial long-chain regime the loop exists for — take the
+        # loop exactly as before; the gate costs them one limit-scan
+        # job. The loop can return truncated (non-fixpoint) labels
+        # only if a contracted chain outlives max_iter, and then warns.
+        cap = _CC_LOCAL_EDGES
         head = g.limit(cap + 1).collect() if cap > 0 else None
         if head is not None and len(head) <= cap:
             parent: dict = {}
@@ -1117,13 +1112,11 @@ def connected_components(
             warnings.warn(
                 "connected_components hit max_iter "
                 f"({max_iter}) before convergence; labels may be a "
-                "non-fixpoint truncation (raise max_iter or "
-                "SPARK_GRAFT_CC_LOCAL_EDGES)",
+                "non-fixpoint truncation (raise max_iter)",
                 stacklevel=2,
             )
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return assign
 
 
@@ -1792,17 +1785,21 @@ def containment_pairs(alldocs, t_thresh: float = 0.8):
     """,
 )
 def q_c73_signature_probe_neardup(spark, sf_dir):
-    """C73 (extension): incremental near-dup via a materialized
-    signature index — the scale path C27's docstring promises: the
-    standing corpus is represented ONLY by its MinHash band table
-    (16 longs + id per doc, built once, checkpointed), and an arriving
-    batch probes it — ``band_pairs``' bipartite band join (batch
-    broadcast) for candidates, exact token-set
-    Jaccard >= 0.8 to verify, one row per duplicate batch doc with
+    """C73 (extension): incremental near-dup via a signature index —
+    the scale path C27's docstring promises: the standing corpus is
+    represented by its MinHash band table (q_c8's portable bands,
+    ``portable_minhash_bands_np``: 16 band keys + id per doc) and its
+    token-hash sets, and an arriving batch probes it —
+    ``band_pairs``' bipartite band join (batch broadcast) for
+    candidates, exact token-set Jaccard >= 0.8 over the xxhash64
+    token-hash sets to verify, one row per duplicate batch doc with
     its match count, smallest matching corpus doc, and best Jaccard.
     C27 recomputes the blocked-Jaccard probe from corpus TEXT every
-    ingest; this is the amortized form where daily batches reuse the
-    index and only the batch side is ever tokenized fresh.
+    ingest; this is the form where daily batches would reuse a stored
+    index and only the batch side is ever tokenized fresh. Here both
+    index columns are built in the query, each read once (the band
+    join reads the bands, the verify the token hashes), so nothing is
+    checkpointed.
 
     Batch = doc_id % 10 == 7 plus planted one-token-extended clones of
     corpus docs (% 50 == 0, offset +1,000,000) so the positive path is
@@ -1815,9 +1812,9 @@ def q_c73_signature_probe_neardup(spark, sf_dir):
     as C8's superset invariant, here strong enough to carry a full
     hash oracle).
 
-    Scale: the corpus never shuffles and is never re-read as text —
-    the index is bands + token-hash arrays (one checkpointed table,
-    tiny vs the corpus); the batch side broadcasts (batch-sized by
+    Scale: with a stored index the corpus never shuffles and is never
+    re-read as text — the index is bands + token-hash arrays, tiny vs
+    the corpus; the batch side broadcasts (batch-sized by
     construction: even a 60k-doc backfill batch is ~35 MB of band
     longs + token hashes); candidate volume is banded, never
     |batch|x|corpus|. The broadcast hint was A/B-measured against the
@@ -1842,41 +1839,32 @@ def q_c73_signature_probe_neardup(spark, sf_dir):
     n_bands, rows_per_band = select_lsh_config(spark)
     n_hashes = n_bands * rows_per_band
 
-    def index(df):
-        htoks = widen(df).select(
-            "doc_id", token_hashes(tokenize(F.col("text"))).alias("htoks")
-        )
-        # Read twice (the band join and the verify): checkpointed, and
-        # the first job of the caller's action fills it.
-        return htoks.select(
-            "doc_id",
-            "htoks",
-            minhash_band_hashes("htoks", n_hashes, n_bands).alias("bands"),
-        ).localCheckpoint(eager=False)
+    corpus, batch = widen(corpus_txt), widen(batch_txt)
 
-    corpus, batch = index(corpus_txt), index(batch_txt)
-    cand = band_pairs(
-        corpus.select("doc_id", "bands"), batch.select("doc_id", "bands")
-    )
+    def bands(df):
+        # Arrow-batched, so it takes adaptive_width's few partitions,
+        # not widen's full fan-out for interpreted expressions.
+        return portable_minhash_bands_np(
+            widen(df, adaptive_width(df)),
+            tokenize(F.col("text")),
+            "doc_id",
+            n_hashes,
+            n_bands,
+        )
+
+    def htoks(df, id_col, name):
+        return df.select(
+            F.col("doc_id").alias(id_col),
+            token_hashes(tokenize(F.col("text"))).alias(name),
+        )
+
+    cand = band_pairs(bands(corpus_txt), bands(batch_txt))
     inter = F.size(F.array_intersect("b_htoks", "c_htoks"))
     union = F.size("b_htoks") + F.size("c_htoks") - inter
     j = inter.cast("double") / union
     verified = (
-        cand.join(
-            F.broadcast(
-                batch.select(
-                    F.col("doc_id").alias("id_1"),
-                    F.col("htoks").alias("b_htoks"),
-                )
-            ),
-            "id_1",
-        )
-        .join(
-            corpus.select(
-                F.col("doc_id").alias("id_2"), F.col("htoks").alias("c_htoks")
-            ),
-            "id_2",
-        )
+        cand.join(F.broadcast(htoks(batch, "id_1", "b_htoks")), "id_1")
+        .join(htoks(corpus, "id_2", "c_htoks"), "id_2")
         .select("id_1", "id_2", j.alias("j"))
         .filter(F.col("j") >= 0.8)
     )

@@ -1,6 +1,15 @@
 """Similarity search over embedding columns (SURVEY §2 C3/C4 + ANN):
-brute-force cosine top-k as the verified baseline, LSH-bucketed ANN as
-the scale path, embedding column stats.
+brute-force cosine top-k as the verified baseline, an ANN ladder (LSH,
+IVF, PQ, random projection) as the scale path, k-means / PQ
+quantizers, embedding column stats.
+
+Shared kernels: every ANN rung is a candidate generator in front of
+one exact-cosine top-k refine (:func:`cosine_top_k`, whose ranking
+tail :func:`rank_top_k` the other per-query top-k's reuse); every
+choice of codes by inner product against a driver-held matrix is one
+scalar pandas UDF (:func:`ip_ranker`); every nearest-centroid
+assignment by squared L2 is one Arrow assigner (:func:`_assign_np`)
+under one Lloyd driver (:func:`lloyd`).
 
 100 TB design notes:
 - Queries are broadcast (tiny); the corpus is never shuffled for the
@@ -23,7 +32,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from etl_spark_eks_spark.catalog import load_table, widen
 from etl_spark_eks_spark.functions.exact import dsum
@@ -56,26 +64,102 @@ def _assign_width(df: DataFrame, per_part_bytes: int = 2 << 20) -> int:
     return adaptive_width(df, per_part_bytes)
 
 
+def rank_top_k(
+    scored: DataFrame, k: int, score: str = "sim", by: tuple[str, ...] = ()
+) -> DataFrame:
+    """The per-query ranking tail of every top-k here: ``rnk`` is
+    row_number over ``qid`` (and the ``by`` columns) ordered by
+    (``score`` desc, ``cid``), and only rows with ``rnk <= k`` stay.
+    The ``cid`` tiebreak is what the oracles' ``ORDER BY sim DESC,
+    cid`` mirrors."""
+    w = Window.partitionBy("qid", *by).orderBy(F.col(score).desc(), F.col("cid"))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
+
+
+def cosine_top_k(
+    probe: DataFrame, corpus: DataFrame, k: int, key: str | None = None
+) -> DataFrame:
+    """The exact-cosine top-k refine every rung of the ANN ladder ends
+    in (q_c3, q_c14, q_c17, q_c21, q_c39). The probe rows ``(qid, qe[,
+    key])`` are broadcast and joined to the corpus rows ``(cid, ce[,
+    key])`` on ``key``, or crossed with them when there is no key; each
+    pair gets the double-precision cosine of ``qe`` and ``ce``, and
+    :func:`rank_top_k` keeps the best ``k`` per query. Returns ``(qid,
+    cid, sim, rnk)``.
+
+    A rung is only its candidate generator, expressed as the key: none
+    for brute force, the hyperplane bucket (q_c14), the probed IVF cell
+    (q_c17), or the candidate ``cid`` itself for the rerank after an
+    approximate stage (q_c21, q_c39). The probe side is query-sized by
+    contract; the caller widens the corpus before any per-row key is
+    evaluated on it, and cosine runs map-side, so only (qid, cid, sim)
+    triples reach the per-query window."""
+    pairs = (
+        F.broadcast(probe).join(corpus, key)
+        if key
+        else F.broadcast(probe).crossJoin(corpus)
+    )
+    sim = cosine_similarity(F.col("qe"), F.col("ce"))
+    return rank_top_k(pairs.select("qid", "cid", sim.alias("sim")), k)
+
+
+def _probe(queries: DataFrame, *key: Column) -> DataFrame:
+    """``(vec_id, embedding)`` rows as the kernel's probe side."""
+    return queries.select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"), *key
+    )
+
+
+def _corpus(corpus: DataFrame, *key: Column) -> DataFrame:
+    """``(vec_id, embedding)`` rows as the kernel's corpus side."""
+    return corpus.select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"), *key
+    )
+
+
+def ip_ranker(mat, n: int, group_slices=None):
+    """Scalar pandas-UDF factory ranking a driver-held matrix by inner
+    product: ``array<float|double> -> array<int>``, per row the ``n``
+    codes (row indexes of ``mat``) with the largest ``x @ mat.T``, best
+    first. The sort is stable, so equal scores go to the smaller code,
+    as ``argmax`` and the oracles' ``ORDER BY d DESC, code`` do. With
+    ``group_slices`` each slice of the vector ranks against the same
+    slice of every row of ``mat``, and the per-slice top-n lists are
+    concatenated in slice order (PQ's per-subspace encode).
+
+    One factory serves IVF's nearest cell and probe cells (q_c17), the
+    full cell ranking of the probe planner (q_c148) and the PQ encode
+    (q_c21). It stays a scalar UDF: only the vector goes to Python and
+    back comes the small code array, while the other columns of the
+    row stay in the JVM. ``mat`` is model-sized and ships in the
+    closure."""
+    from pyspark.sql.functions import pandas_udf
+
+    mat = np.asarray(mat, dtype=np.float64)
+    slices = group_slices or [slice(None)]
+
+    @pandas_udf("array<int>")
+    def rank(col: pd.Series) -> pd.Series:
+        if col.empty:
+            return pd.Series([], dtype=object)
+        x = np.stack(col.to_numpy()).astype(np.float64)
+        top = [
+            np.argsort(-(x[:, s] @ mat[:, s].T), axis=1, kind="stable")[:, :n]
+            for s in slices
+        ]
+        return pd.Series(list(np.concatenate(top, axis=1).astype(np.int32)))
+
+    return rank
+
+
 def knn_cosine_bruteforce(
     queries: DataFrame, corpus: DataFrame, k: int = 5
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (broadcast queries x
-    map-side corpus scan -> per-query top-k window)."""
-    q = queries.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    c = widen(corpus).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    pairs = F.broadcast(q).crossJoin(c)
-    sim = cosine_similarity(F.col("qe"), F.col("ce"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", sim.alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "sim", "rnk")
-    )
+    """Exact top-k cosine neighbors per query: :func:`cosine_top_k`
+    with no key, every query against the whole widened corpus."""
+    return cosine_top_k(_probe(queries), _corpus(widen(corpus)), k)
 
 
 @query(
@@ -181,28 +265,14 @@ def _bucket_sql(vec_expr: str, n_bits: int = 4, dim: int = 64) -> str:
 def knn_cosine_ann(
     queries: DataFrame, corpus: DataFrame, k: int = 5, n_bits: int = 4, dim: int = 64
 ) -> DataFrame:
-    """ANN top-k: bucket corpus + queries by hyperplane signature, rank
-    only within the query's bucket (~2^-n_bits of the corpus). Recall vs
-    brute force is asserted in tests (same-bucket probability rises with
+    """ANN top-k by hyperplane LSH: :func:`cosine_top_k` keyed on the
+    ``n_bits`` hyperplane-sign bucket of both sides, so a query ranks
+    only its own bucket (~2^-n_bits of the corpus). Recall vs brute
+    force is asserted in tests (same-bucket probability rises with
     cosine similarity)."""
-    q = queries.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        hyperplane_signature(F.col("embedding"), n_bits, dim).alias("bucket"),
-    )
-    c = widen(corpus).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        hyperplane_signature(F.col("embedding"), n_bits, dim).alias("bucket"),
-    )
-    pairs = F.broadcast(q).join(c, "bucket")
-    sim = cosine_similarity(F.col("qe"), F.col("ce"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", sim.alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "sim", "rnk")
+    bucket = hyperplane_signature(F.col("embedding"), n_bits, dim).alias("bucket")
+    return cosine_top_k(
+        _probe(queries, bucket), _corpus(widen(corpus), bucket), k, "bucket"
     )
 
 
@@ -377,56 +447,27 @@ def knn_cosine_ivf(
 
     The quantizer is ``n_cells`` corpus vectors sampled deterministically
     by id — the IVF analogue of random k-means init, collected once on
-    the driver (a LIMIT-sized pull regardless of corpus size). Cell
-    assignment is a vectorized pandas UDF: the centroid matrix ships in
-    the UDF closure (a tiny model broadcast) and each Arrow batch does
-    one numpy ``argmax(M @ C.T)`` — this is the documented escape hatch
-    for math that Catalyst expressions only express as a huge interpreted
-    fold tree (the expression form cost ~12s of one-time codegen/analysis
-    plus ~4x slower per-row eval). The only shuffle is the equi-join on
-    cell id, which touches ~nprobe/n_cells of the corpus per query. At
-    cluster scale the cell id doubles as a write-partition key so probes
-    become partition-pruned scans."""
-    from pyspark.sql.functions import pandas_udf
-
+    the driver (a LIMIT-sized pull regardless of corpus size). Each
+    corpus vector's cell (top-1) and each query's probe cells
+    (top-``nprobe``) come from :func:`ip_ranker` over that matrix: one
+    numpy matmul per Arrow batch, the escape hatch for math Catalyst
+    only expresses as a huge interpreted fold tree (the expression form
+    cost ~12s of one-time codegen/analysis plus ~4x slower per-row
+    eval). :func:`cosine_top_k` then joins the exploded probe cells to
+    the corpus cells, the only shuffle, touching ~nprobe/n_cells of the
+    corpus per query. At cluster scale the cell id doubles as a
+    write-partition key so probes become partition-pruned scans."""
     sample = (
         corpus.orderBy("vec_id")
         .limit(n_cells)
         .select("embedding")
         .collect()
     )
-    cmat = np.array([r["embedding"] for r in sample], dtype=np.float64)
-
-    @pandas_udf("int")
-    def nearest_cell(col: pd.Series) -> pd.Series:
-        m = np.stack(col.to_numpy())
-        return pd.Series(np.argmax(m @ cmat.T, axis=1).astype("int32"))
-
-    @pandas_udf("array<int>")
-    def probe_cells(col: pd.Series) -> pd.Series:
-        m = np.stack(col.to_numpy())
-        order = np.argsort(-(m @ cmat.T), axis=1)[:, :nprobe]
-        return pd.Series(list(order.astype("int32")))
-
-    c = widen(corpus).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        nearest_cell("embedding").alias("cell"),
-    )
-    q = queries.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.explode(probe_cells("embedding")).alias("cell"),
-    )
-    pairs = F.broadcast(q).join(c, "cell")
-    sim = cosine_similarity(F.col("qe"), F.col("ce"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        pairs.select("qid", "cid", sim.alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "sim", "rnk")
-    )
+    cmat = [r["embedding"] for r in sample]
+    nearest, probes = ip_ranker(cmat, 1), ip_ranker(cmat, nprobe)
+    c = _corpus(widen(corpus), nearest("embedding")[0].alias("cell"))
+    q = _probe(queries, F.explode(probes("embedding")).alias("cell"))
+    return cosine_top_k(q, c, k, "cell")
 
 
 # Dot product of two float-array expressions, cast-to-double, as the
@@ -520,15 +561,17 @@ def knn_cosine_pq(
     m*n_codes doubles) and a candidate's approximate score is m table
     LOOKUPS — plain Catalyst `element_at` arithmetic, no vector math
     per pair, whole-stage codegen. The top-``rerank`` candidates per
-    query are then fetched back and re-scored with exact cosine.
+    query (:func:`rank_top_k` over the approximate score) are then
+    re-scored by :func:`cosine_top_k`, keyed on the candidate ``cid``.
 
     Codebooks are ``n_codes`` deterministic corpus samples per
-    sub-space (same init policy as the IVF quantizer): collected once
-    driver-side, shipped in the two pandas-UDF closures; encode and
-    table-build are one numpy matmul per Arrow batch. At cluster scale
-    the code table (id + m small ints) is the only thing the candidate
-    stage scans, and PQ composes with IVF cells (encode residuals per
-    cell) — documented, not needed at fixture scale.
+    sub-space (same init policy as the IVF quantizer), collected once
+    driver-side. The encode is :func:`ip_ranker` with one group slice
+    per sub-space (top-1 each), the table build one numpy matmul per
+    sub-space and Arrow batch. At cluster scale the code table (id + m
+    small ints) is the only thing the candidate stage scans, and PQ
+    composes with IVF cells (encode residuals per cell) — documented,
+    not needed at fixture scale.
 
     Candidate generation ranks by inner product (what ADC tables give);
     the exact-cosine rerank restores the metric — standard FAISS-style
@@ -539,25 +582,14 @@ def knn_cosine_pq(
         corpus.orderBy("vec_id").limit(n_codes).select("embedding").collect()
     )
     smat = np.array([r["embedding"] for r in sample], dtype=np.float64)
-    dim = smat.shape[1]
-    sub = dim // m
-    books = [smat[:, i * sub : (i + 1) * sub] for i in range(m)]
-
-    @pandas_udf("array<int>")
-    def encode(col: pd.Series) -> pd.Series:
-        mat = np.stack(col.to_numpy())
-        codes = [
-            np.argmax(mat[:, i * sub : (i + 1) * sub] @ books[i].T, axis=1)
-            for i in range(m)
-        ]
-        return pd.Series(list(np.stack(codes, axis=1).astype("int32")))
+    sub = smat.shape[1] // m
+    slices = [slice(i * sub, (i + 1) * sub) for i in range(m)]
+    encode = ip_ranker(smat, 1, slices)
 
     @pandas_udf("array<double>")
     def adc_table(col: pd.Series) -> pd.Series:
-        mat = np.stack(col.to_numpy())
-        tabs = [
-            mat[:, i * sub : (i + 1) * sub] @ books[i].T for i in range(m)
-        ]
+        x = np.stack(col.to_numpy())
+        tabs = [x[:, s] @ smat[:, s].T for s in slices]
         return pd.Series(list(np.concatenate(tabs, axis=1)))
 
     codes = widen(corpus).select(
@@ -572,27 +604,15 @@ def knn_cosine_pq(
             "tab", F.lit(i * n_codes + 1) + F.element_at("codes", i + 1)
         )
         approx = term if approx is None else approx + term
-    w_cand = Window.partitionBy("qid").orderBy(F.col("approx").desc(), "cid")
-    cand = (
+    cand = rank_top_k(
         F.broadcast(qtabs)
         .crossJoin(codes)
-        .select("qid", "cid", approx.alias("approx"))
-        .withColumn("rnk", F.row_number().over(w_cand))
-        .filter(F.col("rnk") <= rerank)
-        .select("qid", "cid")
-    )
-    qe = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
-    ce = corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    sim = cosine_similarity(F.col("qe"), F.col("ce"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        cand.join(F.broadcast(qe), "qid")
-        .join(ce, "cid")
-        .select("qid", "cid", sim.alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "sim", "rnk")
-    )
+        .select("qid", "cid", approx.alias("approx")),
+        rerank,
+        "approx",
+    ).select("qid", "cid")
+    probe = cand.join(F.broadcast(_probe(queries)), "qid")
+    return cosine_top_k(probe, _corpus(corpus), k, "cid")
 
 
 def _c21_oracle(m: int = 4, n_codes: int = 16, sub: int = 16,
@@ -1115,7 +1135,9 @@ def knn_cosine_random_projection(
     exact rerank): project every vector through one fixed seeded
     Gaussian matrix to ``rdim`` dims, rank candidates by cosine in the
     projected space (a 2.7x-narrower scan), then re-score the top
-    ``rerank`` per query with exact full-dimension cosine.
+    ``rerank`` per query with exact full-dimension cosine. Both stages
+    are :func:`cosine_top_k`: the coarse one unkeyed over the projected
+    vectors, the rerank keyed on the candidate ``cid``.
 
     This is the dimensionality-reduction rung of the ANN ladder — the
     preprocessing FAISS calls OPQ/PCA-then-search: C14 buckets by
@@ -1140,46 +1162,17 @@ def knn_cosine_random_projection(
         m = np.stack(col.to_numpy())
         return pd.Series(list((m @ R).astype("float32")))
 
-    c = widen(corpus).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        project("embedding").alias("cp"),
+    c = _corpus(widen(corpus), project("embedding").alias("cp"))
+    q = _probe(queries, project("embedding").alias("qp"))
+    coarse = cosine_top_k(
+        q.select("qid", F.col("qp").alias("qe")),
+        c.select("cid", F.col("cp").alias("ce")),
+        rerank,
     )
-    q = queries.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        project("embedding").alias("qp"),
+    probe = coarse.select("qid", "cid").join(
+        F.broadcast(q.select("qid", "qe")), "qid"
     )
-    coarse = (
-        F.broadcast(q.select("qid", "qp"))
-        .crossJoin(c.select("cid", "cp"))
-        .select(
-            "qid",
-            "cid",
-            cosine_similarity(F.col("qp"), F.col("cp")).alias("csim"),
-        )
-    )
-    w_c = Window.partitionBy("qid").orderBy(F.col("csim").desc(), F.col("cid"))
-    cands = (
-        coarse.withColumn("crnk", F.row_number().over(w_c))
-        .filter(F.col("crnk") <= rerank)
-        .select("qid", "cid")
-    )
-    exact = (
-        cands.join(F.broadcast(q.select("qid", "qe")), "qid")
-        .join(c.select("cid", "ce"), "cid")
-        .select(
-            "qid",
-            "cid",
-            cosine_similarity(F.col("qe"), F.col("ce")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "sim", "rnk")
-    )
+    return cosine_top_k(probe, c.select("cid", "ce"), k, "cid")
 
 
 def _c39_oracle(dim: int = 64, rdim: int = 24, rerank: int = 64,
@@ -1783,12 +1776,7 @@ def q_c89_knn_matmul(spark, sf_dir):
     local = emb.select("vec_id", "embedding").mapInPandas(
         batches, "qid long, cid long, sim_r double"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("sim_r").desc(), F.col("cid"))
-    return (
-        local.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "cid", "sim_r", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return rank_top_k(local, k, "sim_r")
 
 
 # ---------------------------------------------------------------------------
@@ -1884,15 +1872,11 @@ def q_c94_matryoshka_recall(spark, sf_dir):
     sim = cosine_similarity(
         F.slice(F.col("qe"), F.lit(1), d), F.slice(F.col("ce"), F.lit(1), d)
     )
-    w = Window.partitionBy("dim_budget", "qid").orderBy(
-        F.col("sim").desc(), F.col("cid")
-    )
-    top = (
-        pairs.select("dim_budget", "qid", "cid", sim.alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _MRL_K)
-        .select("dim_budget", "qid", "cid")
-    )
+    top = rank_top_k(
+        pairs.select("dim_budget", "qid", "cid", sim.alias("sim")),
+        _MRL_K,
+        by=("dim_budget",),
+    ).select("dim_budget", "qid", "cid")
     full_t = top.filter(d == _MRL_DIMS[-1]).select("qid", "cid")
     return (
         top.join(F.broadcast(full_t), ["qid", "cid"])
@@ -3147,30 +3131,21 @@ def q_c148_ivf_probe_policy_plan(spark, sf_dir):
     floor pinned in test_ann_oracle_decision_margins), so numpy
     argsort and the oracle's ROW_NUMBER agree at every rank.
 
-    Shape: ONE Arrow-batched pass computes each vector's full cell
-    ranking (n x 16 rows — the same per-vector fan-out C17's
-    assignment already pays, reused for every p at once instead of
-    16 separate probe simulations); occupancy is the rank-1 slice
-    re-aggregated, the per-vector cumulative window runs over 16
-    rows per vector, and everything after is 16-row. The worst-case
-    curve's global window runs over the 16-row occupancy table
-    (lint-allowlisted single-partition, by construction tiny). At
+    Shape: ONE pass of :func:`ip_ranker` (the inner-product ranker
+    behind C17's cell and probe choice, here with n = 16) computes
+    each vector's full cell ranking (n x 16 rows, reused for every p
+    at once instead of 16 separate probe simulations); occupancy is
+    the rank-1 slice re-aggregated, the per-vector cumulative window
+    runs over 16 rows per vector, and everything after is 16-row. The
+    worst-case curve's global window runs over the 16-row occupancy
+    table (lint-allowlisted single-partition, by construction tiny). At
     cluster scale the ranking pass is the map-side of the existing
     cell-assignment write; the planner table is a free by-product."""
-    from pyspark.sql.functions import pandas_udf
-
     emb = load_table(spark, sf_dir, "embeddings")
     sample = (
         emb.orderBy("vec_id").limit(16).select("embedding").collect()
     )
-    cmat = np.array([r["embedding"] for r in sample], dtype=np.float64)
-
-    @pandas_udf("array<int>")
-    def cell_ranking(col: pd.Series) -> pd.Series:
-        m = np.stack(col.to_numpy()).astype(np.float64)
-        order = np.argsort(-(m @ cmat.T), axis=1, kind="stable")
-        return pd.Series(list(order.astype("int32")))
-
+    cell_ranking = ip_ranker([r["embedding"] for r in sample], 16)
     ranked = (
         widen(emb)
         .select(

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from etl_spark_eks_spark.catalog import load_table, widen
 from etl_spark_eks_spark.functions.text import (
     ordered_token_hashes,
-    rolling_fingerprint,
     shingles,
     token_stats,
     tokenize,
@@ -292,9 +291,7 @@ def q_c12_fingerprint(spark, sf_dir):
 
     Oracle (round 11, was rows-only): runs the portable md5-derived
     family (functions/text.py portable_rolling_fingerprint) so the
-    fingerprints are bit-identical in DuckDB; the xxhash64
-    rolling_fingerprint stays as the fast path under the same
-    contract."""
+    fingerprints are bit-identical in DuckDB."""
     from etl_spark_eks_spark.functions.text import (
         portable_ordered_token_hashes,
         portable_rolling_fingerprint,

@@ -1779,16 +1779,22 @@ def test_connected_components_matches_union_find(spark, edges):
     duplicate edges, multi-component tangles, long chains. Labels must
     be exactly the component MINIMUM for every node that appears in the
     edge list (the min-label fixpoint contract, not just a partition
-    into the right groups)."""
-    from etl_spark_eks_spark.operators.dedup import connected_components
+    into the right groups). Both finishes are checked: the driver
+    union-find and, with its edge cap at 0, the distributed loop."""
+    from unittest import mock
+
+    from etl_spark_eks_spark.operators import dedup
 
     if not edges:
         return
     df = spark.createDataFrame(edges, "a long, b long")
-    got = {
-        r["node"]: r["label"]
-        for r in connected_components(df, "a", "b").collect()
-    }
+    runs = []
+    for cap in (dedup._CC_LOCAL_EDGES, 0):
+        with mock.patch.object(dedup, "_CC_LOCAL_EDGES", cap):
+            runs.append({
+                r["node"]: r["label"]
+                for r in dedup.connected_components(df, "a", "b").collect()
+            })
 
     parent: dict[int, int] = {}
 
@@ -1810,7 +1816,7 @@ def test_connected_components_matches_union_find(spark, edges):
         comp_min[r] = min(comp_min.get(r, n), n)
     for n in nodes:
         expect[n] = comp_min[find(n)]
-    assert got == expect
+    assert runs == [expect, expect]
 
 
 doc_texts = st.lists(

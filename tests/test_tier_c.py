@@ -186,14 +186,14 @@ def test_portable_hash32_width_contract(spark):
 
 
 def test_exact_dups_share_fingerprint_and_simhash(spark, sf_dir):
-    """C12/C9: identical texts must collapse to identical fingerprints
-    and (portable, q_c9's) SimHash values (hash determinism). The
-    fixture at sf0.001 has no
+    """C12/C9: identical texts must collapse to identical (portable,
+    q_c12's) fingerprints and (portable, q_c9's) SimHash values (hash
+    determinism). The fixture at sf0.001 has no
     exact dups, so clone every doc under a shifted id first."""
     from etl_spark_eks_spark.functions.text import (
-        ordered_token_hashes,
+        portable_ordered_token_hashes,
+        portable_rolling_fingerprint,
         portable_token_hashes,
-        rolling_fingerprint,
         simhash32_from_hashes,
     )
 
@@ -202,11 +202,11 @@ def test_exact_dups_share_fingerprint_and_simhash(spark, sf_dir):
         d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     )
     fp = cloned.withColumn(
-        "th", ordered_token_hashes(tokenize("text"))
+        "th", portable_ordered_token_hashes(tokenize("text"))
     ).select(
         "doc_id",
         "text",
-        rolling_fingerprint("th", 3).alias("fingerprint"),
+        portable_rolling_fingerprint("th", 3).alias("fingerprint"),
         simhash32_from_hashes(
             portable_token_hashes(tokenize("text"))
         ).alias("sh"),
@@ -357,19 +357,25 @@ def test_embedding_neardup_fixture_has_no_natural_pairs(spark, sf_dir):
 def test_connected_components_chain_clique_singleton(spark):
     """C18: min-label propagation must handle a chain (diameter > 1),
     a clique, and leave singletons out of the label table (they join
-    back as their own keeper in the query)."""
-    from etl_spark_eks_spark.operators.dedup import connected_components
+    back as their own keeper in the query). Run through both finishes:
+    the driver union-find and, with its edge cap at 0, the distributed
+    loop."""
+    from unittest import mock
+
+    from etl_spark_eks_spark.operators import dedup
 
     edges = spark.createDataFrame(
         # chain 1-2-3-4 (pairwise non-adjacent ends), clique 10-11-12
         [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (11, 12)],
         ["a", "b"],
     )
-    labels = {
-        r["node"]: r["label"]
-        for r in connected_components(edges, "a", "b").collect()
-    }
-    assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
+    for cap in (dedup._CC_LOCAL_EDGES, 0):
+        with mock.patch.object(dedup, "_CC_LOCAL_EDGES", cap):
+            labels = {
+                r["node"]: r["label"]
+                for r in dedup.connected_components(edges, "a", "b").collect()
+            }
+        assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}, cap
 
 
 def _kernel_pairs(sig, **kw):
@@ -2387,3 +2393,51 @@ def test_ann_oracle_decision_margins(spark, sf_dir):
             axis=1,
         )
         assert (s[:, -1] - s[:, -2]).min() > 1e-9
+
+
+def test_ip_ranker_types_ties_and_groups(spark):
+    """similarity.ip_ranker, the inner-product ranker behind q_c17,
+    q_c21 and q_c148: float and double array inputs rank alike, an
+    empty batch and a batch of one come back well-formed, equal scores
+    go to the smaller code (stable sort; 64 codes, past numpy's
+    insertion-sort cutoff, so an unstable sort reorders them), and
+    group slices give the per-slice argmax."""
+    import numpy as np
+    import pandas as pd
+
+    from etl_spark_eks_spark.operators.similarity import ip_ranker
+
+    rng = np.random.default_rng(7)
+    mat = rng.standard_normal((16, 8))
+    vecs = rng.standard_normal((6, 8)).astype(np.float32)
+    expect = np.argsort(
+        -(vecs.astype(np.float64) @ mat.T), axis=1, kind="stable"
+    )[:, :3]
+    rank3 = ip_ranker(mat, 3)
+    for etype in ("float", "double"):
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            f"id int, e array<{etype}>",
+        )
+        got = {
+            r["id"]: r["c"]
+            for r in df.select("id", rank3("e").alias("c")).collect()
+        }
+        assert got == {i: list(expect[i]) for i in range(len(vecs))}, etype
+        one = df.filter("id = 2").select(rank3("e").alias("c")).collect()
+        assert [r["c"] for r in one] == [list(expect[2])], etype
+        assert df.filter("id < 0").select(rank3("e")).collect() == [], etype
+    assert rank3.func(pd.Series([], dtype=object)).empty
+
+    ties = np.zeros((64, 2))
+    ties[::3, 0] = 1.0  # codes 0, 3, 6, ... all score 1 against e_0
+    got = ip_ranker(ties, 22).func(pd.Series([np.array([1.0, 0.0])]))[0]
+    assert list(got) == list(range(0, 64, 3))
+
+    slices = [slice(0, 4), slice(4, 8)]
+    x = vecs.astype(np.float64)
+    per_slice = np.stack(
+        [np.argmax(x[:, s] @ mat[:, s].T, axis=1) for s in slices], axis=1
+    )
+    got = ip_ranker(mat, 1, slices).func(pd.Series(list(vecs)))
+    assert np.array_equal(np.stack(got.to_numpy()), per_slice)
