@@ -339,9 +339,18 @@ def portable_minhash_bands_np(
             res["bands"] = out
             yield res
 
-    return df.select(
-        F.col(id_col).alias("doc_id"), tokens.alias("__toks")
-    ).mapInPandas(batches, "doc_id long, bands array<long>")
+    return (
+        df.select(F.col(id_col).alias("doc_id"), tokens.alias("__toks"))
+        .mapInPandas(batches, "doc_id long, bands array<long>")
+        .select("doc_id", with_band_count(F.col("bands"), n_bands))
+    )
+
+
+def with_band_count(bands: Column, n_bands: int) -> Column:
+    """A band-key array as the ``bands`` column of a signature frame:
+    its length rides in the field metadata ``n_bands``, where
+    ``operators.dedup.band_pairs`` reads it without a Spark job."""
+    return bands.alias("bands", metadata={"n_bands": n_bands})
 
 
 def portable_shingle_hashes(token_hash_col: Column | str, k: int = 3) -> Column:

@@ -34,14 +34,12 @@ from etl_spark_eks_spark.sources.parquet_io import (
     fixture_fingerprint as _fixture_fingerprint,
     fresh_scratch,
     is_staged as _staged,
+    land_parquet,
     mark_staged as _mark_staged,
+    read_back,
     scratch_path,
-    write_parquet,
+    sf_tag,
 )
-
-
-def _tag(sf_dir: str) -> str:
-    return sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
 
 
 @query(
@@ -89,7 +87,7 @@ def q_b61_persistent_catalog(spark, sf_dir):
     the layout decision that makes priority-sliced queries cheap forever
     after one write. The write itself pays one shuffle (partitionBy);
     like B60, that cost amortizes over every later query."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     name = f"wh_orders_{tag}"
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
@@ -140,21 +138,13 @@ def q_b62_schema_drift(spark, sf_dir):
     and reserve merge-on-read for landing zones, which is exactly the
     reference's crawler-vs-table split."""
     orders = load_table(spark, sf_dir, "orders")
-    prefix = fresh_scratch("q_b62", _tag(sf_dir), "landing")
-    write_parquet(
-        orders.filter(F.col("o_orderkey") % 2 == 0).select(
-            "o_orderkey", "o_totalprice"
-        ),
-        prefix,
-        mode="overwrite",
-    )
-    write_parquet(
-        orders.filter(F.col("o_orderkey") % 2 == 1).select(
-            "o_orderkey", "o_totalprice", "o_orderpriority"
-        ),
-        prefix,
-        mode="append",
-    )
+    prefix = fresh_scratch("q_b62", sf_tag(sf_dir), "landing")
+    orders.filter(F.col("o_orderkey") % 2 == 0).select(
+        "o_orderkey", "o_totalprice"
+    ).write.parquet(prefix)
+    orders.filter(F.col("o_orderkey") % 2 == 1).select(
+        "o_orderkey", "o_totalprice", "o_orderpriority"
+    ).write.mode("append").parquet(prefix)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(prefix)
@@ -191,26 +181,18 @@ def q_b67_dynamic_partition_pruning(spark, sf_dir):
     the dim filter's selectivity without the query author naming
     partitions. Works through the same catalog surface the reference
     exposes via Glue/Athena (reference addons.tf:299-365)."""
-    tag = _tag(sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    fact_path = scratch_path("q_b67", tag, "fact")
-    (
-        orders.write.mode("overwrite")
-        .partitionBy("o_orderpriority")
-        .parquet(fact_path)
+    fact = land_parquet(
+        orders, "q_b67", sf_dir, "fact", partition_by=["o_orderpriority"]
     )
-    dim_path = scratch_path("q_b67", tag, "dim")
-    write_parquet(
-        orders.select(
-            F.col("o_orderpriority").alias("pr")
-        ).distinct(),
-        dim_path,
-        mode="overwrite",
-    )
-    fact = spark.read.parquet(fact_path)
-    dim = spark.read.parquet(dim_path).filter(
+    dim = land_parquet(
+        orders.select(F.col("o_orderpriority").alias("pr")).distinct(),
+        "q_b67",
+        sf_dir,
+        "dim",
+    ).filter(
         F.col("pr").startswith("1-") | F.col("pr").startswith("2-")
     )
     return (
@@ -252,7 +234,7 @@ def q_b75_corrupt_file_scan(spark, sf_dir):
     import os
     import shutil
 
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     indir = fresh_scratch("q_b75", tag, "landing")
     os.makedirs(indir, exist_ok=True)
     good = load_table(spark, sf_dir, "events")
@@ -300,7 +282,7 @@ def q_b80_jsonl_source(spark, sf_dir):
     with JSONL read exactly once."""
     import os
 
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     landing = fresh_scratch("q_b80", tag, "landing")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "props"
@@ -359,7 +341,7 @@ def q_b89_csv_source(spark, sf_dir):
     flag aggregated with the data pass, never a second scan."""
     import os
 
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     landing = fresh_scratch("q_b89", tag, "landing")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -438,7 +420,7 @@ def q_b92_orc_source(spark, sf_dir):
     ingestion: CSV/JSONL/XML rows (B89/B80/B93) parse once into a
     columnar format; ORC-vs-parquet is a producer compatibility
     choice, not a plan change."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     landing = scratch_path("q_b92", tag, "orc")
     fp = _fixture_fingerprint(sf_dir, "orders")
     if not _staged(landing, fp):
@@ -482,7 +464,7 @@ def q_b93_xml_source(spark, sf_dir):
     so ingest parallelism comes from many files (the landing dir is
     written with the upstream partitioning preserved). Same
     parse-once-then-parquet contract as B80/B89."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     landing = scratch_path("q_b93", tag, "xml")
     fp = _fixture_fingerprint(sf_dir, "events")
     if not _staged(landing, fp):
@@ -621,7 +603,7 @@ def q_b111_text_source(spark, sf_dir):
     pass, parse-once-then-columnar. Same one-exchange aggregate as
     every landing audit here."""
     d = load_table(spark, sf_dir, "documents")
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     landing = scratch_path("q_b111", tag, "text")
     fp = _fixture_fingerprint(sf_dir, "documents")
     if not _staged(landing, fp):
@@ -682,7 +664,7 @@ def q_b112_binaryfile_source(spark, sf_dir):
     import os
 
     d = load_table(spark, sf_dir, "documents")
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     landing = scratch_path("q_b112", tag, "bin")
     fp = _fixture_fingerprint(sf_dir, "documents")
     if not _staged(landing, fp):
@@ -758,7 +740,7 @@ def q_b119_analyze_cbo_stats(spark, sf_dir):
     query (and incremental in real deployments — partition-level
     stats). The join output is aggregated to priority cardinality
     before returning."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     sess = spark.newSession()
     sess.conf.set("spark.sql.adaptive.enabled", "false")
     sess.conf.set("spark.sql.cbo.enabled", "true")
@@ -804,7 +786,7 @@ def cbo_join_plan(spark, sf_dir) -> str:
     import io
     from contextlib import redirect_stdout
 
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     # q_b119 must have run first in this session (tables + stats exist)
     sess = spark.newSession()
     sess.conf.set("spark.sql.adaptive.enabled", "false")
@@ -860,13 +842,13 @@ def q_b126_file_metadata(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
-    out = scratch_path(
-        "q_b126", sf_dir.strip("/").replace("/", "_"), "li_meta"
+    back = land_parquet(
+        li.repartition("l_returnflag"),
+        "q_b126",
+        sf_dir,
+        "li_meta",
+        partition_by=["l_returnflag"],
     )
-    li.repartition("l_returnflag").write.mode("overwrite").partitionBy(
-        "l_returnflag"
-    ).parquet(out)
-    back = spark.read.parquet(out)
     return (
         back.select(
             F.col("l_returnflag").cast("string").alias("l_returnflag"),
@@ -1043,7 +1025,7 @@ def q_b137_column_defaults(spark, sf_dir):
     The result is the final table contents, deterministic by
     construction; DROP IF EXISTS + fresh scratch keep reruns
     idempotent (B50's discipline)."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     name = f"wh_defaults_{tag}"
     src = f"orders_src_{tag}"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -1131,8 +1113,7 @@ def q_b144_dynamic_partition_overwrite(spark, sf_dir):
     pruning on later reads is unchanged. Option scoped to the write
     (no session conf bleed, q_b91's isolation rule satisfied for
     free)."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    tbl = fresh_scratch("q_b144", tag, "table")
+    tbl = fresh_scratch("q_b144", sf_tag(sf_dir), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
     )
@@ -1148,7 +1129,7 @@ def q_b144_dynamic_partition_overwrite(spark, sf_dir):
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("o_orderpriority").parquet(tbl)
     return (
-        spark.read.parquet(tbl)
+        read_back(spark, tbl, wave2.schema, ["o_orderpriority"])
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
@@ -1203,16 +1184,16 @@ def q_b145_ignore_missing_files(spark, sf_dir):
     import glob
     import os
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    tbl = fresh_scratch("q_b145", tag, "table")
+    tbl = fresh_scratch("q_b145", sf_tag(sf_dir), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
     )
     o.write.partitionBy("o_orderpriority").parquet(tbl)
-    schema = spark.read.parquet(tbl).schema
+    # The written data columns; o_orderpriority is typed from the
+    # directory names, as in parquet_io.read_back.
     reader = (
         spark.read.option("ignoreMissingFiles", "true")
-        .schema(schema)
+        .schema(o.drop("o_orderpriority").schema)
         .parquet(tbl)
     )
     for f in glob.glob(
@@ -1267,7 +1248,7 @@ def q_b152_insert_by_name(spark, sf_dir):
     under reordering — the three evolution hazards of text-SQL
     ingest. Scale: metastore insert into the warehouse table, same
     append path as B61's."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     tbl = f"wh_b152_orders_{tag}"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     o = load_table(spark, sf_dir, "orders")
@@ -1341,7 +1322,7 @@ if avro_available():
         engine's contract is parse-once into columnar (B89/B80/B93's
         path); this operator is the compatibility read that feeds
         that conversion."""
-        tag = _tag(sf_dir)
+        tag = sf_tag(sf_dir)
         landing = scratch_path("q_b153", tag, "avro")
         fp = _fixture_fingerprint(sf_dir, "orders")
         if not _staged(landing, fp):
@@ -1390,7 +1371,7 @@ def q_b167_multi_insert_fanout(spark, sf_dir):
     map-side; each sink is an independent parquet append. The plan
     contains a single relation read (the point), two InsertInto
     commands."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     t_hot, t_urg = f"b167_hot_{tag}", f"b167_urgent_{tag}"
     for t in (t_hot, t_urg):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -1464,7 +1445,7 @@ def q_b168_recover_partitions(spark, sf_dir):
     alternative (re-crawling content) is why Glue crawlers and MSCK
     exist. Partition pruning over the recovered table is pinned by
     B61's test."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     tbl = f"b168_ext_{tag}"
     loc = fresh_scratch("q_b168", tag, "extdir")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -1536,7 +1517,7 @@ def q_b173_compression_codec_audit(spark, sf_dir):
     is measured $/scan: zstd ~2x smaller than snappy at ~1.5x decode
     cost; this operator is the harness that makes the measurement a
     query."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     sep = F.lit("\x1f")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1566,7 +1547,7 @@ def q_b173_compression_codec_audit(spark, sf_dir):
                 "compression", codec
             ).parquet(path)
             _mark_staged(path, fp)
-        back = spark.read.parquet(path)
+        back = read_back(spark, path, o.schema)
         import os
 
         n_bytes = sum(
@@ -1619,7 +1600,7 @@ def q_b175_global_temp_view(spark, sf_dir):
     Scale: views are metadata — zero data cost at any scale; the
     operative production distinction is lifetime (session vs
     application) and the global_temp name prefix."""
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     gv, lv = f"b175_hot_{tag}", f"b175_local_{tag}"
     hot = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 200000

@@ -16,7 +16,7 @@ from etl_spark_eks_spark.catalog import TABLES, load_table, register_views
 from etl_spark_eks_spark.functions.exact import dsum
 from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.registry import query
-from etl_spark_eks_spark.sources.parquet_io import scratch_path, write_parquet
+from etl_spark_eks_spark.sources.parquet_io import land_parquet
 
 
 @query(
@@ -84,9 +84,9 @@ def q_b3_partitioned_write(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag"
     )
-    out = scratch_path("q_b3", sf_dir.strip("/").replace("/", "_"), "lineitem_part")
-    write_parquet(li, out, mode="overwrite", partition_by=["l_returnflag"])
-    back = spark.read.parquet(out).filter(F.col("l_returnflag") == "R")
+    back = land_parquet(
+        li, "q_b3", sf_dir, "lineitem_part", partition_by=["l_returnflag"]
+    ).filter(F.col("l_returnflag") == "R")
     # partition column round-trips as string; keep name + type explicit
     return back.withColumn("l_returnflag", F.col("l_returnflag").cast("string"))
 

@@ -338,9 +338,9 @@ def q_b60_bucketed_join(spark, sf_dir):
     never shuffling it again. Only the columns the join needs are
     bucketed (column pruning at materialization time).
     """
-    from etl_spark_eks_spark.sources.parquet_io import scratch_path
+    from etl_spark_eks_spark.sources.parquet_io import scratch_path, sf_tag
 
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
+    tag = sf_tag(sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )

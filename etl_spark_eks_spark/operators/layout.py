@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.catalog import load_table
 from etl_spark_eks_spark.registry import query
-from etl_spark_eks_spark.sources.parquet_io import fresh_scratch
+from etl_spark_eks_spark.sources.parquet_io import land_parquet
 
 _LAYOUT_FILES = 8
 
@@ -72,19 +72,14 @@ def q_c35_sorted_layout(spark, sf_dir):
     predicates first, key lookups second — the single-dimension
     ordering a Z-/Hilbert-curve generalizes when two predicates matter
     equally."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = fresh_scratch("q_c35", tag, "out")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_extendedprice"
     )
-    (
+    return land_parquet(
         li.repartitionByRange(_LAYOUT_FILES, "l_shipdate", "l_orderkey")
-        .sortWithinPartitions("l_shipdate", "l_orderkey")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return spark.read.parquet(out).select(
-        "l_orderkey", "l_linenumber", "l_shipdate", "l_extendedprice"
+        .sortWithinPartitions("l_shipdate", "l_orderkey"),
+        "q_c35",
+        sf_dir,
     )
 
 
@@ -144,8 +139,6 @@ def q_c74_zorder_layout(spark, sf_dir):
     property of the encoding, not of this plan."""
     from pyspark.sql import functions as F
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = fresh_scratch("q_c74", tag, "out")
     cols = ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
             "l_quantity"]
     li = load_table(spark, sf_dir, "lineitem").select(*cols)
@@ -162,15 +155,14 @@ def q_c74_zorder_layout(spark, sf_dir):
         F.col("s_hi") - F.col("s_lo") + 1
     )
     z = zvalue_column(F.floor(qa).cast("int"), F.floor(qb).cast("int"))
-    (
+    return land_parquet(
         q.withColumn("zval", z)
         .repartitionByRange(_LAYOUT_FILES, "zval")
         .sortWithinPartitions("zval")
-        .select(*cols)
-        .write.mode("overwrite")
-        .parquet(out)
+        .select(*cols),
+        "q_c74",
+        sf_dir,
     )
-    return spark.read.parquet(out).select(*cols)
 
 
 @query(
@@ -215,19 +207,16 @@ def q_b146_output_file_sizing(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = fresh_scratch("q_b146", tag, "out")
     parts, cap = 4, 5000
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_extendedprice"
     )
-    (
-        li.repartition(parts)
-        .sortWithinPartitions("l_shipdate")
-        .write.option("maxRecordsPerFile", cap)
-        .parquet(out)
-    )
-    rb = spark.read.parquet(out).select(
+    rb = land_parquet(
+        li.repartition(parts).sortWithinPartitions("l_shipdate"),
+        "q_b146",
+        sf_dir,
+        options={"maxRecordsPerFile": str(cap)},
+    ).select(
         "l_orderkey",
         "l_shipdate",
         "l_extendedprice",
@@ -322,8 +311,6 @@ def q_b176_rebalance_hint(spark, sf_dir):
     s3a committer tuning (spark-operator-taxi.yaml:17-31) assumes
     sanely-sized output objects; this is the operator that makes
     them sane."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = fresh_scratch("q_b176", tag, "out")
     # repartition(16) + localCheckpoint pins 16 MAP tasks under the
     # rebalance shuffle. Both are fixture crutches a cluster does not
     # need — but they are load-bearing here: (a) AQE's skew split
@@ -363,11 +350,11 @@ def q_b176_rebalance_hint(spark, sf_dir):
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        li.hint("rebalance", "heat").write.mode("overwrite").parquet(out)
+        back = land_parquet(li.hint("rebalance", "heat"), "q_b176", sf_dir)
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-    rb = spark.read.parquet(out).select(
+    rb = back.select(
         "l_extendedprice",
         "heat",
         F.col("_metadata.file_name").alias("fname"),

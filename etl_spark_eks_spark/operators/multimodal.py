@@ -24,7 +24,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.catalog import load_table, widen
-from etl_spark_eks_spark.functions.text import hamming64, tokenize
+from etl_spark_eks_spark.functions.text import (
+    hamming64,
+    tokenize,
+    with_band_count,
+)
 from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.operators.dedup import band_pairs
 from etl_spark_eks_spark.registry import query
@@ -498,13 +502,16 @@ def phash_signatures(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
     mask30 = F.lit((1 << 30) - 1).cast("long")
     return portable_perceptual_hashes_np(df, binary_col, id_col).select(
         "doc_id",
-        F.array(
-            *[
-                F.shiftright(c, 30 * j).bitwiseAND(mask30)
-                for c in ("phash_hi", "phash_lo")
-                for j in range(2)
-            ]
-        ).alias("bands"),
+        with_band_count(
+            F.array(
+                *[
+                    F.shiftright(c, 30 * j).bitwiseAND(mask30)
+                    for c in ("phash_hi", "phash_lo")
+                    for j in range(2)
+                ]
+            ),
+            4,
+        ),
         "phash_hi",
         "phash_lo",
     )

@@ -464,7 +464,12 @@ def knn_cosine_ivf(
         .collect()
     )
     cmat = [r["embedding"] for r in sample]
-    nearest, probes = ip_ranker(cmat, 1), ip_ranker(cmat, nprobe)
+    # Marked nondeterministic so the optimizer keeps the corpus ranker
+    # where it is written: otherwise the join's inferred isnotnull(cell)
+    # filter is pushed below widen's exchange, and the ranker runs a
+    # second time there, over the one unwidened scan partition.
+    nearest = ip_ranker(cmat, 1).asNondeterministic()
+    probes = ip_ranker(cmat, nprobe)
     c = _corpus(widen(corpus), nearest("embedding")[0].alias("cell"))
     q = _probe(queries, F.explode(probes("embedding")).alias("cell"))
     return cosine_top_k(q, c, k, "cell")

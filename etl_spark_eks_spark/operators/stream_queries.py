@@ -21,17 +21,13 @@ from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.registry import query
-from etl_spark_eks_spark.sources.parquet_io import fresh_scratch
+from etl_spark_eks_spark.sources.parquet_io import fresh_scratch, read_back, sf_tag
 from etl_spark_eks_spark.streaming.stream_ops import (
     events_stream,
     events_stream_batched,
     events_stream_time_ordered,
     run_available_now,
 )
-
-
-def _tag(sf_dir: str) -> str:
-    return sf_dir.strip("/").replace("/", "_")
 
 
 @query(
@@ -65,9 +61,6 @@ def q_b48_watermark_stream(spark, sf_dir):
     batch B45's answer under the seal filter). dsum keeps the streamed
     partial-agg order out of the double.
     """
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b48", tag, "sink")
-    ckpt = fresh_scratch("q_b48", tag, "ckpt")
     from etl_spark_eks_spark.functions.exact import dsum
 
     agg = (
@@ -85,8 +78,7 @@ def q_b48_watermark_stream(spark, sf_dir):
             "total_value",
         )
     )
-    run_available_now(agg, sink, ckpt)
-    return spark.read.parquet(sink)
+    return run_available_now(agg, "q_b48", sf_dir)
 
 
 @query(
@@ -112,9 +104,6 @@ def q_b49_stream_dedup(spark, sf_dir):
     eviction) stay covered by tests/test_streaming.py's invariants; the
     oracle pins the exactly-once OUTPUT contract.
     """
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b49", tag, "sink")
-    ckpt = fresh_scratch("q_b49", tag, "ckpt")
     doubled = (
         events_stream(spark, sf_dir)
         .withColumn("__dup", F.explode(F.array(F.lit(1), F.lit(2))))
@@ -127,8 +116,7 @@ def q_b49_stream_dedup(spark, sf_dir):
     # no_data_batch=False: dedup is a passthrough — every surviving row
     # emits on its own data batch; the trailing watermark-advance batch
     # only evicts state (A/B-proven output-identical at sf0.1).
-    run_available_now(deduped, sink, ckpt, no_data_batch=False)
-    return spark.read.parquet(sink)
+    return run_available_now(deduped, "q_b49", sf_dir, no_data_batch=False)
 
 
 @query(
@@ -156,10 +144,6 @@ def q_b56_stateful_user_stats(spark, sf_dir):
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b56", tag, "sink")
-    ckpt = fresh_scratch("q_b56", tag, "ckpt")
 
     def update(key, pdfs, state):
         n, tot = state.get if state.exists else (0, 0.0)
@@ -192,13 +176,12 @@ def q_b56_stateful_user_stats(spark, sf_dir):
     # no_data_batch=False: the pandas-state fold emits its updated
     # totals on each DATA batch; the trailing no-data batch only runs
     # timeout bookkeeping (A/B-proven output-identical at sf0.1).
-    run_available_now(running, sink, ckpt, state_partitions=8,
-                      no_data_batch=False)
+    back = run_available_now(running, "q_b56", sf_dir, state_partitions=8,
+                             no_data_batch=False)
     # Last emission per user = totals over the whole stream.
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.read.parquet(sink)
-        .withColumn("rn", F.row_number().over(w))
+        back.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             "user_id",
@@ -224,10 +207,6 @@ def q_b50_exactly_once_rerun(spark, sf_dir):
     'mostly idempotent, non-atomic', reference spark-operator-taxi.yaml:20)
     with checkpoint-based exactly-once.
     """
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b50", tag, "sink")
-    ckpt = fresh_scratch("q_b50", tag, "ckpt")
-
     def pipeline():
         return (
             events_stream(spark, sf_dir)
@@ -235,9 +214,9 @@ def q_b50_exactly_once_rerun(spark, sf_dir):
             .select("event_id", "ts", "user_id", "value")
         )
 
-    run_available_now(pipeline(), sink, ckpt)  # first run: processes all files
-    run_available_now(pipeline(), sink, ckpt)  # rerun: no-op (checkpoint)
-    return spark.read.parquet(sink)
+    run_available_now(pipeline(), "q_b50", sf_dir)  # processes all files
+    # rerun on the same checkpoint: a no-op
+    return run_available_now(pipeline(), "q_b50", sf_dir, resume=True)
 
 
 @query(
@@ -270,9 +249,6 @@ def q_b57_stream_stream_join(spark, sf_dir):
     Scale: join state is partitioned by user_id across the cluster;
     state size ~= events inside the watermark horizon, independent of
     stream length."""
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b57", tag, "sink")
-    ckpt = fresh_scratch("q_b57", tag, "ckpt")
     views = (
         events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -307,8 +283,7 @@ def q_b57_stream_stream_join(spark, sf_dir):
     # completes them; the trailing watermark-advance batch only evicts
     # state (A/B-proven output-identical at sf0.1). The OUTER variant
     # q_b74 must keep it — its NULL emissions need the final advance.
-    run_available_now(joined, sink, ckpt, no_data_batch=False)
-    return spark.read.parquet(sink)
+    return run_available_now(joined, "q_b57", sf_dir, no_data_batch=False)
 
 
 @query(
@@ -368,9 +343,6 @@ def q_b74_stream_outer_join(spark, sf_dir):
     Scale: state is partitioned by user_id and bounded by the watermark
     horizon on BOTH sides, exactly as B57; the outer variant adds no
     state — only the deferred NULL emission."""
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b74", tag, "sink")
-    ckpt = fresh_scratch("q_b74", tag, "ckpt")
     views = (
         events_stream_time_ordered(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -401,8 +373,7 @@ def q_b74_stream_outer_join(spark, sf_dir):
         ),
         "left_outer",
     ).select("user_id", "view_id", "view_ts", "purchase_id", "purchase_ts")
-    run_available_now(joined, sink, ckpt)
-    return spark.read.parquet(sink)
+    return run_available_now(joined, "q_b74", sf_dir)
 
 
 @query(
@@ -428,9 +399,6 @@ def q_b66_stream_static_join(spark, sf_dir):
     hash probe of the batch; state size zero. The dim must fit the
     broadcast threshold — for a 100 TB dim you'd pre-bucket both sides
     instead (B60's pattern)."""
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b66", tag, "sink")
-    ckpt = fresh_scratch("q_b66", tag, "ckpt")
     from etl_spark_eks_spark.catalog import load_table
 
     cust = load_table(spark, sf_dir, "customer").select(
@@ -442,8 +410,7 @@ def q_b66_stream_static_join(spark, sf_dir):
         .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "user_id", "value", "c_mktsegment")
     )
-    run_available_now(enriched, sink, ckpt)
-    return spark.read.parquet(sink)
+    return run_available_now(enriched, "q_b66", sf_dir)
 
 
 @query(
@@ -489,7 +456,7 @@ def q_b72_foreachbatch_upsert(spark, sf_dir):
     import os
     import shutil
 
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     state = fresh_scratch("q_b72", tag, "state")
     ckpt = fresh_scratch("q_b72", tag, "ckpt")
     os.makedirs(state, exist_ok=True)
@@ -510,7 +477,7 @@ def q_b72_foreachbatch_upsert(spark, sf_dir):
         merged = latest_per_key(batch_df)
         if os.path.exists(cur):
             merged = latest_per_key(
-                sp.read.parquet(cur).unionByName(merged)
+                read_back(sp, cur, batch_df.schema).unionByName(merged)
             )
         tmp = os.path.join(state, f"tmp_{batch_id}")
         merged.write.mode("overwrite").parquet(tmp)
@@ -539,7 +506,7 @@ def q_b72_foreachbatch_upsert(spark, sf_dir):
         q.awaitTermination()
     finally:
         spark.conf.set(ndkey, prev_nd)
-    return spark.read.parquet(cur).select(
+    return read_back(spark, cur, stream.schema).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("ts").alias("last_ts"),
@@ -685,9 +652,6 @@ def q_b98_stream_session_window(spark, sf_dir):
     to the horizon — the unbounded-session risk (a bot pinging every
     29 minutes forever) is a DATA property the gap parameter owns, not
     an engine leak."""
-    tag = _tag(sf_dir)
-    sink = fresh_scratch("q_b98", tag, "sink")
-    ckpt = fresh_scratch("q_b98", tag, "ckpt")
     from etl_spark_eks_spark.streaming.stream_ops import (
         events_stream_time_ordered,
     )
@@ -712,8 +676,7 @@ def q_b98_stream_session_window(spark, sf_dir):
             "total_value",
         )
     )
-    run_available_now(agg, sink, ckpt)
-    return spark.read.parquet(sink)
+    return run_available_now(agg, "q_b98", sf_dir)
 
 
 def tws_available() -> bool:
@@ -765,10 +728,6 @@ if tws_available():
             StatefulProcessorHandle,
         )
 
-        tag = _tag(sf_dir)
-        sink = fresh_scratch("q_b96", tag, "sink")
-        ckpt = fresh_scratch("q_b96", tag, "ckpt")
-
         class UserStats(StatefulProcessor):
             def init(self, handle: StatefulProcessorHandle) -> None:
                 self._agg = handle.getValueState("agg", "n bigint, tot double")
@@ -803,11 +762,10 @@ if tws_available():
                 timeMode="None",
             )
         )
-        run_available_now(running, sink, ckpt)
+        back = run_available_now(running, "q_b96", sf_dir)
         w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
         return (
-            spark.read.parquet(sink)
-            .withColumn("rn", F.row_number().over(w))
+            back.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(
                 "user_id",
@@ -936,7 +894,7 @@ def q_b118_stream_progress_metrics(spark, sf_dir):
         stream.writeStream.format("noop")
         .option(
             "checkpointLocation",
-            fresh_scratch("q_b118", sf_dir.strip("/").replace("/", "_"), "ckpt"),
+            fresh_scratch("q_b118", sf_tag(sf_dir), "ckpt"),
         )
         .trigger(availableNow=True)
         .start()
@@ -1064,11 +1022,9 @@ def q_b138_incremental_backlog(spark, sf_dir):
         normalize_event_time,
     )
 
-    tag = _tag(sf_dir)
+    tag = sf_tag(sf_dir)
     stage = fresh_scratch("q_b138", tag, "stage")
     land = fresh_scratch("q_b138", tag, "landing")
-    sink = fresh_scratch("q_b138", tag, "sink")
-    ckpt = fresh_scratch("q_b138", tag, "ckpt")
 
     raw = scan_table(spark, sf_dir, "events")
     raw.repartition(4).write.parquet(stage)
@@ -1080,6 +1036,7 @@ def q_b138_incremental_backlog(spark, sf_dir):
             shutil.copy(f, os.path.join(land, os.path.basename(f)))
 
     def run(run_id: int):
+        """Drain the landed files; run 2 resumes run 1's checkpoint."""
         stream = spark.readStream.schema(raw.schema).parquet(land)
         df = normalize_event_time(stream).select(
             "event_id",
@@ -1090,15 +1047,15 @@ def q_b138_incremental_backlog(spark, sf_dir):
         )
         # no_data_batch=False: stateless projection — every row emits on
         # its file's batch (A/B-proven output-identical at sf0.1).
-        run_available_now(df, sink, ckpt, no_data_batch=False)
+        return run_available_now(
+            df, "q_b138", sf_dir, no_data_batch=False, resume=run_id > 1
+        )
 
     deliver(files[:2])
     run(1)
     deliver(files[2:])
-    run(2)
-
     return (
-        spark.read.parquet(sink)
+        run(2)
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
@@ -1159,11 +1116,8 @@ def q_b143_multiplexed_stream_union(spark, sf_dir):
         normalize_event_time,
     )
 
-    tag = _tag(sf_dir)
-    west = fresh_scratch("q_b143", tag, "west")
-    east = fresh_scratch("q_b143", tag, "east")
-    sink = fresh_scratch("q_b143", tag, "sink")
-    ckpt = fresh_scratch("q_b143", tag, "ckpt")
+    west = fresh_scratch("q_b143", sf_tag(sf_dir), "west")
+    east = fresh_scratch("q_b143", sf_tag(sf_dir), "east")
 
     raw = scan_table(spark, sf_dir, "events")
     raw.where(F.col("user_id") % 2 == 0).write.parquet(west)
@@ -1184,10 +1138,8 @@ def q_b143_multiplexed_stream_union(spark, sf_dir):
     )
     # no_data_batch=False: stateless multiplex — rows emit on their
     # source batch (A/B-proven output-identical at sf0.1).
-    run_available_now(unioned, sink, ckpt, no_data_batch=False)
-
     return (
-        spark.read.parquet(sink)
+        run_available_now(unioned, "q_b143", sf_dir, no_data_batch=False)
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from etl_spark_eks_spark.catalog import load_table
 from etl_spark_eks_spark.functions.exact import dsum
 from etl_spark_eks_spark.registry import query
-from etl_spark_eks_spark.sources.parquet_io import scratch_path, write_parquet
+from etl_spark_eks_spark.sources.parquet_io import land_parquet
 
 # The reference stamps datetime.now() once per batch (pyspark-taxi-trip.py:40).
 # Fixed here so Spark and the DuckDB oracle see the same constant.
@@ -87,9 +87,7 @@ def q_a7_write_roundtrip(spark, sf_dir):
     """A7: overwrite parquet sink + read-back (the reference's sink,
     pyspark-taxi-trip.py:51, with committer semantics left to Spark)."""
     li = load_table(spark, sf_dir, "lineitem")
-    out = scratch_path("q_a7", sf_dir.strip("/").replace("/", "_"), "lineitem")
-    write_parquet(li, out, mode="overwrite", target_files=2)
-    return spark.read.parquet(out)
+    return land_parquet(li.repartition(2), "q_a7", sf_dir, "lineitem")
 
 
 @query(

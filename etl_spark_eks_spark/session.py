@@ -68,6 +68,13 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.legacy.allowUntypedScalaUDF": "false",
     # Streaming micro-batch: keep state store files local & small in tests.
     "spark.sql.streaming.stateStore.compression.codec": "lz4",
+    # Generated-class cache (static: set at session start). Spark's 100
+    # entries are fewer than one sql_star pass uses (86 after its cold
+    # pass), so the LRU evicted classes that the next pass recompiled,
+    # and the JIT compiled each new class again: 20-22 Janino compiles
+    # per warm pass at sf0.01 on local[4], and none at 2,000 entries. A
+    # class averages ~2.3 KB of bytecode, so 2,000 cost a few MB.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

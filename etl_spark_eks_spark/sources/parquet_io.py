@@ -11,32 +11,30 @@ Scale notes (100 TB):
   declarative (asserted in tests/test_plans.py).
 - ``partition_by`` gives directory partitioning so downstream reads prune
   whole partitions (static + dynamic partition pruning).
-- ``target_files`` controls output file count exactly like the reference's
-  ``repartition(2)``; at scale prefer AQE coalescing or a column-based
-  ``repartition(cols)`` so files align with downstream join/agg keys.
+- The caller sets the output file count on the frame, like the
+  reference's ``repartition(2)``; at scale prefer AQE coalescing or a
+  column-based ``repartition(cols)`` so files align with downstream
+  join/agg keys.
+- A query's own output lands in one place (:func:`land_parquet`, and
+  ``streaming.stream_ops.run_available_now`` for streams) and is read
+  back with the schema it was written with (:func:`read_back`), never
+  re-inferred from the files.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    target_files: int | None = None,
-    partition_by: list[str] | None = None,
-) -> None:
-    if target_files is not None:
-        df = df.repartition(target_files)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def sf_tag(sf_dir: str) -> str:
+    """A fixture dir as one path part and identifier suffix:
+    ``/data/sf0.01`` -> ``data_sf0_01``."""
+    return sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
 
 
 def scratch_path(*parts: str) -> str:
@@ -54,6 +52,44 @@ def fresh_scratch(*parts: str) -> str:
     path = scratch_path(*parts)
     shutil.rmtree(path, ignore_errors=True)
     return path
+
+
+def read_back(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    partition_by: Sequence[str] = (),
+) -> DataFrame:
+    """Read parquet the engine itself wrote at ``path`` with the schema it
+    was written with, as the reference's Glue table reads its sink with
+    a declared schema. An inferring ``spark.read.parquet`` would start a
+    Spark job to read the footers back. The partition columns are left
+    out of the given schema, so Spark types them from the directory
+    names exactly as an inferring read does, and puts them last."""
+    data = StructType([f for f in schema.fields if f.name not in partition_by])
+    return spark.read.schema(data).parquet(path)
+
+
+def land_parquet(
+    df: DataFrame,
+    key: str,
+    sf_dir: str,
+    name: str = "out",
+    partition_by: Sequence[str] = (),
+    options: dict[str, str] | None = None,
+) -> DataFrame:
+    """Write ``df`` into the fresh scratch dir for (key, fixture dir,
+    name) and return it read back with its written schema
+    (:func:`read_back`). The caller shapes the frame first (target file
+    count, range layout, sort); ``partition_by`` gives directory
+    partitioning and ``options`` are writer options such as
+    ``maxRecordsPerFile``."""
+    path = fresh_scratch(key, sf_tag(sf_dir), name)
+    writer = df.write.options(**(options or {}))
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return read_back(df.sparkSession, path, df.schema, partition_by)
 
 
 def fixture_fingerprint(sf_dir: str, table: str) -> str:

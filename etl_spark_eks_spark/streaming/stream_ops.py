@@ -16,6 +16,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.catalog import scan_table, table_path, table_schema
+from etl_spark_eks_spark.sources.parquet_io import (
+    fixture_fingerprint,
+    fresh_scratch,
+    is_staged,
+    mark_staged,
+    read_back,
+    scratch_path,
+    sf_tag,
+)
 
 
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -56,11 +65,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # File-stream sources need a DIRECTORY of arriving files; the fixture
     # is a single file, so stage a symlink into a scratch input dir
     # (mirrors the reference's S3 landing prefix the crawler watches).
-    from etl_spark_eks_spark.sources.parquet_io import scratch_path
-
-    indir = scratch_path(
-        "stream_in", sf_dir.strip("/").replace("/", "_"), "events", "_"
-    )[: -len("/_")]
+    indir = scratch_path("stream_in", sf_tag(sf_dir), "events", "_")[: -len("/_")]
     os.makedirs(indir, exist_ok=True)
     link = os.path.join(indir, "events.parquet")
     if not os.path.exists(link):
@@ -89,19 +94,10 @@ def events_stream_batched(
     measured value-identical on the oracles and invariant tests;
     q_b118 pins n_files=4 explicitly because its oracle recomputes
     the per-batch telemetry as ntile(4)."""
-    from etl_spark_eks_spark.sources.parquet_io import scratch_path
-
     raw_schema = table_schema(spark, sf_dir, "events")
-    tag = sf_dir.strip("/").replace("/", "_")
     indir = scratch_path(
-        "stream_in_multi", tag, f"events_n{n_files}", "_"
+        "stream_in_multi", sf_tag(sf_dir), f"events_n{n_files}", "_"
     )[: -len("/_")]
-    from etl_spark_eks_spark.sources.parquet_io import (
-        fixture_fingerprint,
-        is_staged,
-        mark_staged,
-    )
-
     fp = fixture_fingerprint(sf_dir, "events")
     if not is_staged(indir, fp):
         scan_table(spark, sf_dir, "events").repartition(n_files).write.mode(
@@ -135,18 +131,9 @@ def events_stream_time_ordered(
     import time
 
     raw_schema = table_schema(spark, sf_dir, "events")
-    tag = sf_dir.strip("/").replace("/", "_")
-    from etl_spark_eks_spark.sources.parquet_io import scratch_path
-
     indir = scratch_path(
-        "stream_in_ordered", tag, f"events_n{n_files}", "_"
+        "stream_in_ordered", sf_tag(sf_dir), f"events_n{n_files}", "_"
     )[: -len("/_")]
-    from etl_spark_eks_spark.sources.parquet_io import (
-        fixture_fingerprint,
-        is_staged,
-        mark_staged,
-    )
-
     fp = fixture_fingerprint(sf_dir, "events")
     if not is_staged(indir, fp):
         import glob
@@ -190,18 +177,24 @@ def events_stream_time_ordered(
 
 def run_available_now(
     df: DataFrame,
-    sink_dir: str,
-    checkpoint_dir: str,
+    key: str,
+    sf_dir: str,
     output_mode: str = "append",
     state_partitions: int | None = 2,
     no_data_batch: bool = True,
-) -> None:
+    resume: bool = False,
+) -> DataFrame:
     """Run a streaming DataFrame to a parquet sink until all currently-
-    available input is processed (Trigger.AvailableNow), then stop.
+    available input is processed (Trigger.AvailableNow), then stop, and
+    return the sink read back with the stream's schema
+    (``parquet_io.read_back``: no job re-infers it).
 
-    Rerunning with the same checkpoint is a no-op over already-committed
-    input — the exactly-once equivalent of the reference's at-least-once
-    SQS trigger + overwrite sink (SURVEY §3.1).
+    The sink and checkpoint are the scratch dirs ``sink`` and ``ckpt``
+    for (key, fixture dir), wiped first. ``resume=True`` keeps both and
+    continues the previous run's checkpoint instead: rerunning over
+    already-committed input is a no-op, and a rerun after new files
+    landed processes only those — the exactly-once equivalent of the
+    reference's at-least-once SQS trigger + overwrite sink (SURVEY §3.1).
 
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
     stream (restored after). Unlike batch, this count is FROZEN into the
@@ -234,6 +227,10 @@ def run_available_now(
     session. Callers that need full isolation should build ``df`` on
     ``spark.newSession()`` (own SQLConf, shared context) and pass
     ``state_partitions=None`` — the pattern q_b91 uses."""
+    sink_dir, checkpoint_dir = (
+        (scratch_path if resume else fresh_scratch)(key, sf_tag(sf_dir), d)
+        for d in ("sink", "ckpt")
+    )
     spark = df.sparkSession
     restore: dict[str, str] = {}
     if state_partitions is not None:
@@ -242,9 +239,9 @@ def run_available_now(
         )
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if not no_data_batch:
-        key = "spark.sql.streaming.noDataMicroBatches.enabled"
-        restore[key] = spark.conf.get(key)
-        spark.conf.set(key, "false")
+        nd = "spark.sql.streaming.noDataMicroBatches.enabled"
+        restore[nd] = spark.conf.get(nd)
+        spark.conf.set(nd, "false")
     try:
         q = (
             df.writeStream.format("parquet")
@@ -258,3 +255,4 @@ def run_available_now(
     finally:
         for k, v in restore.items():
             spark.conf.set(k, v)
+    return read_back(spark, sink_dir, df.schema)

@@ -1188,6 +1188,26 @@ def test_c27_probes_read_index_not_text(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_c17_ranks_each_corpus_row_once(spark, sf_dir):
+    """q_c17's corpus-side cell ranker runs once per corpus row, above
+    ``widen``'s round-robin exchange: the plan holds exactly two
+    ArrowEvalPython nodes (probe side and corpus side), the corpus one
+    directly over the exchange and none below it."""
+    df = registry.QUERIES["q_c17_knn_ivf"](spark, sf_dir)
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    arrow = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    assert len(arrow) == 2, "\n".join(lines)
+    (rr,) = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
+    assert rr - 1 in arrow, "\n".join(lines)
+    depth = len(lines[rr]) - len(lines[rr].lstrip(" :+-"))
+    below = []
+    for ln in lines[rr + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        below.append(ln)
+    assert not any("ArrowEvalPython" in ln for ln in below), "\n".join(lines)
+
+
 def _jobs_in_group(spark, group: str, body) -> int:
     """Number of Spark jobs ``body()`` starts, counted under a job group.
     Job events reach the status store asynchronously but in order, so a

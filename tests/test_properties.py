@@ -1906,7 +1906,7 @@ def test_jaccard_near_dedup_matches_python_bruteforce(
 
 
 band_tables = st.lists(
-    st.lists(st.integers(0, 3), min_size=3, max_size=3),
+    st.lists(st.one_of(st.none(), st.integers(0, 3)), min_size=3, max_size=3),
     min_size=0,
     max_size=10,
 )
@@ -1917,30 +1917,35 @@ band_tables = st.lists(
 def test_band_pairs_matches_python_bruteforce(spark, rows, probes, bound):
     """The band_pairs LSH kernel behind q_c8 / q_c9 / q_c73 / q_m4
     fuzzed against a pure-Python brute force on RANDOM band arrays (3
-    bands over a 4-value key domain, so most pairs collide somewhere):
-    self-join with and without a payload verify, and a bipartite
-    probe. The corpus always holds a clone of its first row, so some
-    pair collides in every band and must still come out as ONE row;
-    an empty table must yield no pairs. No call may leave a
-    CacheManager entry behind."""
+    bands over a 4-value key domain plus NULL, so most pairs collide
+    somewhere, often on several bands; a NULL key matches nothing):
+    self-join with and without a payload verify, a bipartite probe,
+    and a one-band table. The corpus always holds a clone of its
+    first row, so some pair collides in every band and must still come
+    out as ONE row; an empty table must yield no pairs. No call may
+    leave a CacheManager entry behind."""
     from etl_spark_eks_spark.operators.dedup import band_pairs
 
     rows = rows + rows[:1]
 
-    def sigs(tables, base):
+    def sigs(tables, base, n_bands=3):
         return spark.createDataFrame(
-            [(base + i, b, sum(b)) for i, b in enumerate(tables)],
+            [
+                (base + i, b[:n_bands], sum(k or 0 for k in b))
+                for i, b in enumerate(tables)
+            ],
             "doc_id long, bands array<long>, w long",
-        )
+        ).withMetadata("bands", {"n_bands": n_bands})
 
     def collide(x, y):
-        return any(p == q for p, q in zip(x, y))
+        return any(p == q and p is not None for p, q in zip(x, y))
 
     ids = list(enumerate(rows))
     self_pairs = {
         (i, j) for i, x in ids for j, y in ids if i < j and collide(x, y)
     }
-    dist = {(i, j): abs(sum(rows[i]) - sum(rows[j])) for i, j in self_pairs}
+    w = [sum(k or 0 for k in r) for r in rows]
+    dist = {(i, j): abs(w[i] - w[j]) for i, j in self_pairs}
     verified = {(i, j, d) for (i, j), d in dist.items() if d <= bound}
     bipartite = {
         (100 + p, i) for p, x in enumerate(probes) for i, y in ids
@@ -1953,6 +1958,11 @@ def test_band_pairs_matches_python_bruteforce(spark, rows, probes, bound):
         (verified, band_pairs(corpus, verify=verify)),
         (bipartite, band_pairs(corpus, sigs(probes, 100))),
         (set(), band_pairs(sigs([], 0))),
+        (
+            {(i, j) for i, x in ids for j, y in ids
+             if i < j and collide(x[:1], y[:1])},
+            band_pairs(sigs(rows, 0, n_bands=1)),
+        ),
     ]
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()

@@ -341,10 +341,10 @@ def test_incremental_backlog_run2_processes_only_delta(spark, sf_dir):
     import glob
     import os
 
-    from etl_spark_eks_spark.sources.parquet_io import scratch_path
+    from etl_spark_eks_spark.sources.parquet_io import scratch_path, sf_tag
 
     registry.QUERIES["q_b138_incremental_backlog"](spark, sf_dir)
-    tag = sf_dir.strip("/").replace("/", "_")
+    tag = sf_tag(sf_dir)
     stage = scratch_path("q_b138", tag, "stage")
     sink = scratch_path("q_b138", tag, "sink")
     files = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
@@ -380,9 +380,9 @@ def test_no_data_batch_optout_is_output_identical(spark, sf_dir, monkeypatch):
     from etl_spark_eks_spark.operators import stream_queries
     from etl_spark_eks_spark.streaming.stream_ops import run_available_now
 
-    def forced_on(df, sink_dir, checkpoint_dir, **kw):
+    def forced_on(df, key, sf_dir, **kw):
         kw["no_data_batch"] = True
-        return run_available_now(df, sink_dir, checkpoint_dir, **kw)
+        return run_available_now(df, key, sf_dir, **kw)
 
     for key in ("q_b49_stream_dedup", "q_b57_stream_stream_join"):
         fn = registry.QUERIES[key]

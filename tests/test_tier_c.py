@@ -696,11 +696,10 @@ def test_sorted_layout_zone_maps_disjoint(spark, sf_dir):
     at the cut point), so a zone-map scanner prunes exactly."""
     from etl_spark_eks_spark import registry
     from etl_spark_eks_spark.operators.layout import file_ranges
-    from etl_spark_eks_spark.sources.parquet_io import scratch_path
+    from etl_spark_eks_spark.sources.parquet_io import scratch_path, sf_tag
 
     registry.QUERIES["q_c35_sorted_layout"](spark, sf_dir).count()
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = scratch_path("q_c35", tag, "out")
+    out = scratch_path("q_c35", sf_tag(sf_dir), "out")
     ranges = file_ranges(out, "l_shipdate")
     assert len(ranges) > 1, "layout should produce multiple files"
     for (_, _, prev_max), (_, next_min, _) in zip(ranges, ranges[1:]):
@@ -717,11 +716,10 @@ def test_zorder_layout_prunes_both_dimensions(spark, sf_dir):
     can only ever prune on its own sort column (every file spans the
     full range of the other), which is exactly what this pins."""
     from etl_spark_eks_spark.operators.layout import file_ranges
-    from etl_spark_eks_spark.sources.parquet_io import scratch_path
+    from etl_spark_eks_spark.sources.parquet_io import scratch_path, sf_tag
 
     registry.QUERIES["q_c74_zorder_layout"](spark, sf_dir).count()
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = scratch_path("q_c74", tag, "out")
+    out = scratch_path("q_c74", sf_tag(sf_dir), "out")
     for col in ("l_partkey", "l_suppkey"):
         ranges = file_ranges(out, col)
         assert len(ranges) > 1, "layout should produce multiple files"
