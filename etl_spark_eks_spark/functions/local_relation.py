@@ -9,9 +9,9 @@ constant-folded at plan time, zero Python, zero scan (the q_c118 fix,
 round 8: 4.3 s -> 0.25 s for a query that IS such a grid).
 
 Use this for every small static/driver-built dimension that feeds a
-broadcast join. NOT for materializing collected results back to a
-DataFrame (``createDataFrame(df.collect(), df.schema)``) — those are
-one-shot by design and may carry types VALUES can't spell.
+broadcast join, and for rows a query collects on the driver and hands
+back: pass the collected frame's ``schema`` and the rows come back with
+it, nullability included, without a pickled round trip.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _lit(v) -> str:
@@ -41,6 +42,8 @@ def _lit(v) -> str:
         return repr(v) + "D"  # force DOUBLE literal, shortest round-trip repr
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, list):
+        return "array(" + ", ".join(_lit(x) for x in v) + ")"
     raise TypeError(f"values_df cannot spell {type(v).__name__} literals")
 
 
@@ -71,22 +74,33 @@ def _split_ddl(ddl: str) -> list[list[str]]:
     return cols
 
 
-def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
+def values_df(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
     """Local relation from ``rows`` (tuples) with the EXACT schema
-    ``ddl`` ("name type, ..."): every column is CAST so the result
-    schema matches what createDataFrame produced before the migration
-    (python int -> BIGINT etc.) and oracle schema hashes are unmoved.
+    ``schema``: every column is CAST so the result schema matches what
+    createDataFrame produced before the migration (python int -> BIGINT
+    etc.) and oracle schema hashes are unmoved. A DDL string ("name
+    type, ...") gives a column NOT NULL unless some row holds a NULL; a
+    ``StructType`` keeps each field's nullability, so a collected
+    frame's rows come back with the frame's own schema.
 
     An empty ``rows`` returns a typed EMPTY relation (``WHERE FALSE``
     over a one-row NULL VALUES) — the createDataFrame calls this helper
     replaced did the same, and callers that filter driver-collected
     telemetry down to zero rows (q_b118's numInputRows>0 filter) must
     get an empty result, not a crash."""
-    cols = _split_ddl(ddl)
+    if isinstance(schema, StructType):
+        cols = [
+            (f.name, f.dataType.simpleString(), f.nullable) for f in schema
+        ]
+    else:
+        cols = [(name, typ, False) for name, typ in _split_ddl(schema)]
     width = len(cols)
+    # A literal is NOT NULL; IF(TRUE, c, NULL) is the same value typed
+    # nullable (the optimizer folds it away).
     select = ", ".join(
-        f"CAST(c{i} AS {typ}) AS {name}"
-        for i, (name, typ) in enumerate(cols)
+        f"CAST({f'IF(TRUE, c{i}, NULL)' if nullable else f'c{i}'} AS {typ})"
+        f" AS {name}"
+        for i, (name, typ, nullable) in enumerate(cols)
     )
     anon = ", ".join(f"c{i}" for i in range(width))
     if not rows:

@@ -28,8 +28,10 @@ from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.catalog import load_table
 from etl_spark_eks_spark.functions.exact import dsum
+from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.operators.tier_a import INGEST_TS
 from etl_spark_eks_spark.registry import query
+from etl_spark_eks_spark.session import scoped
 from etl_spark_eks_spark.sources.parquet_io import (
     fixture_fingerprint as _fixture_fingerprint,
     fresh_scratch,
@@ -702,6 +704,18 @@ def q_b112_binaryfile_source(spark, sf_dir):
     )
 
 
+# q_b119's planner settings: the broadcast decision must come from the
+# catalog's statistics alone, so AQE is off and CBO on, and the
+# threshold sits well under the dim's analyzed size at every sf and far
+# under orders': stats, not defaults, must pick the build side.
+_CBO_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.cbo.enabled": "true",
+    "spark.sql.cbo.joinReorder.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": "1MB",
+}
+
+
 @query(
     "q_b119_analyze_cbo_stats",
     oracle="""
@@ -732,22 +746,18 @@ def q_b119_analyze_cbo_stats(spark, sf_dir):
     planning is what works BEFORE the first shuffle materializes —
     AQE only re-plans after).
 
-    Session discipline: the AQE/CBO overrides live on a CLONED session
-    (q_b91's isolation rule) so no concurrently-running query observes
-    them; the result is re-materialized onto the caller's session.
+    Session discipline: the AQE/CBO overrides live on a
+    ``session.scoped`` session, so no concurrently-running query
+    observes them. The rows are collected and returned through
+    ``values_df``, because the next call rewrites the two tables the
+    result reads.
 
     Scale: ANALYZE is one scan per table, amortized across every later
     query (and incremental in real deployments — partition-level
     stats). The join output is aggregated to priority cardinality
     before returning."""
     tag = sf_tag(sf_dir)
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.cbo.enabled", "true")
-    sess.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    # Well under the dim's analyzed size at every sf, far under orders':
-    # stats, not defaults, must pick the build side.
-    sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "1MB")
+    sess = scoped(spark, _CBO_CONF)
     fact = f"wh_cbo_orders_{tag}"
     dim = f"wh_cbo_customer_{tag}"
     load_table(sess, sf_dir, "orders").select(
@@ -777,7 +787,7 @@ def q_b119_analyze_cbo_stats(spark, sf_dir):
         ORDER BY o.o_orderpriority
         """
     )
-    return spark.createDataFrame(out.collect(), schema=out.schema)
+    return values_df(spark, out.collect(), out.schema)
 
 
 def cbo_join_plan(spark, sf_dir) -> str:
@@ -788,11 +798,7 @@ def cbo_join_plan(spark, sf_dir) -> str:
 
     tag = sf_tag(sf_dir)
     # q_b119 must have run first in this session (tables + stats exist)
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.cbo.enabled", "true")
-    sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "1MB")
-    df = sess.sql(
+    df = scoped(spark, _CBO_CONF).sql(
         f"""
         SELECT o.o_orderpriority, COUNT(*) AS n
         FROM wh_cbo_orders_{tag} o
@@ -1111,8 +1117,7 @@ def q_b144_dynamic_partition_overwrite(spark, sf_dir):
     cost is proportional to the CORRECTED slice, not the table; the
     directory-partitioned layout is exactly A7/B3's, so partition
     pruning on later reads is unchanged. Option scoped to the write
-    (no session conf bleed, q_b91's isolation rule satisfied for
-    free)."""
+    (no session conf at all, so no ``session.scoped`` needed)."""
     tbl = fresh_scratch("q_b144", sf_tag(sf_dir), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
@@ -1173,7 +1178,7 @@ def q_b145_ignore_missing_files(spark, sf_dir):
     partitioned by priority, the DataFrame DEFINED over the prefix
     (listing captured), then the 1-URGENT partition's data file
     deleted from under it before the action runs. The read option is
-    scoped to this reader (q_b91's isolation rule); the oracle is
+    scoped to this reader (no session conf); the oracle is
     simply the batch answer minus the vanished slice — which is the
     CONTRACT: skipped means cleanly absent, not partially read, not
     duplicated, not fatal.
@@ -1586,15 +1591,15 @@ def q_b173_compression_codec_audit(spark, sf_dir):
 def q_b175_global_temp_view(spark, sf_dir):
     """B175: TEMP VIEW lifecycle — the two scopes and the boundary
     between them, proven by construction: a regular TEMP VIEW lives
-    in ONE session's catalog (a cloned session must NOT see it — the
-    isolation every q_b91-style conf-cloning pattern silently relies
-    on), while a GLOBAL TEMP VIEW registers in the shared
-    `global_temp` database and IS visible to sibling sessions of the
+    in ONE session's catalog (a ``newSession()`` must NOT see it;
+    ``session.scoped`` clones the caller's views on purpose), while a
+    GLOBAL TEMP VIEW registers in the shared `global_temp` database
+    and IS visible to sibling sessions of the
     same SparkContext (how a notebook gateway or a multi-session
     driver shares a prepared frame without a metastore write). Both
     facts are checked at run time and pinned as oracle-TRUE booleans
     (the B19 self-verifying shape); the data columns come from
-    reading the global view FROM THE CLONED SESSION, so the hash
+    reading the global view FROM THE NEW SESSION, so the hash
     match itself certifies the cross-session read.
 
     Scale: views are metadata — zero data cost at any scale; the
@@ -1619,7 +1624,7 @@ def q_b175_global_temp_view(spark, sf_dir):
             .groupBy("o_orderpriority")
             .agg(F.count("*").cast("long").alias("n_orders"))
         )
-        rows = agg.collect()  # materialize in the CLONED session
+        rows = agg.collect()  # materialize in the NEW session
     finally:
         # Global temp views outlive the session (application lifetime,
         # the very property under test) — without the drop, the view
@@ -1629,7 +1634,7 @@ def q_b175_global_temp_view(spark, sf_dir):
         spark.catalog.dropGlobalTempView(gv)
         spark.catalog.dropTempView(lv)
     return (
-        spark.createDataFrame(rows, agg.schema)
+        values_df(spark, rows, agg.schema)
         .select(
             "o_orderpriority",
             "n_orders",

@@ -842,12 +842,10 @@ def q_c9_simhash_neardup(spark, sf_dir):
     )
 
 
-# connected_components' bounds: a contracted graph of at most
+# connected_components' bound: a contracted graph of at most
 # _CC_LOCAL_EDGES edges (~3 MB) is finished on the driver by union-find,
-# a larger one by the distributed loop, whose many small jobs run at
-# _CC_LOOP_PARTITIONS shuffle partitions (sized to the label table).
+# a larger one by the distributed loop.
 _CC_LOCAL_EDGES = 200_000
-_CC_LOOP_PARTITIONS = 8
 
 
 def connected_components(
@@ -915,227 +913,212 @@ def connected_components(
     should persist or localCheckpoint it first (q_c18/q_c58/q_c127
     do).
 
-    ``_CC_LOOP_PARTITIONS`` pins the shuffle width for the loop's many
-    small jobs (restored after): every round pays per-partition
-    scheduling/commit overhead regardless of table size, the same
-    economics as streaming state partitions. It is sized to the label
-    table (node count), not the corpus.
+    The loop pins no shuffle width: every exchange runs at the caller's
+    width and AQE coalesces the small round tables at runtime. A forced
+    9-round loop (a 12-node chain, local[4]) ran as fast at widths 5
+    and 200 as with the width fixed at 8, and the fixture queries
+    finish locally without looping.
     """
     spark = edges.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_CC_LOOP_PARTITIONS))
-    try:
-        # lo < hi normalization: a projection, never a materialized
-        # symmetric copy. Accidental self-loops dropped here.
-        e = edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
-        ).filter(F.col("lo") != F.col("hi"))
-        # assign: ORIGINAL node -> current label (a label is always a
-        # node id in the same component, only ever decreasing). Built
-        # LAZILY: each round appends one broadcast-join remap to the
-        # chain; with every `moves` table checkpointed the composed plan
-        # grows linearly with rounds, so the whole label resolution
-        # runs as one job inside the consumer's action.
-        assign = (
-            edges.select(
-                F.explode(
-                    F.array(F.col(src_col), F.col(dst_col))
-                ).alias("node")
-            )
-            .distinct()
-            .withColumn("label", F.col("node"))
+    # lo < hi normalization: a projection, never a materialized
+    # symmetric copy. Accidental self-loops dropped here.
+    e = edges.select(
+        F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
+        F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
+    ).filter(F.col("lo") != F.col("hi"))
+    # assign: ORIGINAL node -> current label (a label is always a
+    # node id in the same component, only ever decreasing). Built
+    # LAZILY: each round appends one broadcast-join remap to the
+    # chain; with every `moves` table checkpointed the composed plan
+    # grows linearly with rounds, so the whole label resolution
+    # runs as one job inside the consumer's action.
+    assign = (
+        edges.select(
+            F.explode(
+                F.array(F.col(src_col), F.col(dst_col))
+            ).alias("node")
         )
-        # FUSED ROUND 0 (see docstring): one map-side-combined agg
-        # over the pair list. m < node by construction (lo < hi).
+        .distinct()
+        .withColumn("label", F.col("node"))
+    )
+    # FUSED ROUND 0 (see docstring): one map-side-combined agg
+    # over the pair list. m < node by construction (lo < hi).
+    moves = (
+        e.groupBy(F.col("hi").alias("node"))
+        .agg(F.min("lo").alias("m"))
+        .localCheckpoint(eager=False)
+    )
+    n_moves = moves.count()
+    if n_moves == 0:
+        return assign
+    if n_moves <= 4_000_000:
+        # Pointer doubling: compose the move table with itself
+        # (twice) so chains v -> a -> b -> c collapse to direct
+        # pointers before the contraction — broadcast joins over a
+        # <= node-count table, fused into the consumers' jobs.
+        for _ in range(2):
+            x, y = moves.alias("x"), F.broadcast(moves.alias("y"))
+            moves = x.join(
+                y, F.col("x.m") == F.col("y.node"), "left"
+            ).select(
+                F.col("x.node").alias("node"),
+                F.coalesce("y.m", "x.m").alias("m"),
+            )
+        bmoves = F.broadcast(moves)
+    else:
+        # Node-scale move table: a forced broadcast is an executor
+        # OOM, not a speedup — skip doubling, let AQE pick sides.
+        bmoves = moves
+    assign = assign.join(
+        bmoves.withColumnRenamed("node", "label"), "label", "left"
+    ).select("node", F.coalesce("m", "label").alias("label"))
+    # g: symmetric edge list of the CONTRACTED graph, whose nodes
+    # are current labels. Invariant: (a, b) in g => components of
+    # a and b are connected in the input graph, and every input
+    # edge is represented by some g path — so CC(g) composed with
+    # assign is CC(input). Built by remapping the pair list
+    # through the round-0 moves, dropping self-loops BEFORE the
+    # symmetrizing explode + distinct so the dedup shuffle only
+    # carries surviving bridges.
+    g = (
+        e.join(bmoves.withColumnRenamed("node", "lo"), "lo", "left")
+        .select(F.coalesce("m", "lo").alias("a"), "hi")
+        .join(
+            bmoves.select(
+                F.col("node").alias("hi"), F.col("m").alias("m2")
+            ),
+            "hi",
+            "left",
+        )
+        .select("a", F.coalesce("m2", "hi").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("a").alias("node"), F.col("b").alias("nbr")
+                    ),
+                    F.struct(
+                        F.col("b").alias("node"), F.col("a").alias("nbr")
+                    ),
+                )
+            ).alias("s")
+        )
+        .select("s.node", "s.nbr")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    # BOUNDED LOCAL FINISH (round 12, optimization): after the
+    # round-0 contraction the graph is just the sparse bridges
+    # BETWEEN dup clumps (~2k rows at sf0.1 from 758k pairs), yet
+    # the loop still pays per-round plan compilation + a count job
+    # until the fixpoint (~3 rounds, measured ~1.5 s of q_c18's
+    # floor). When the contracted graph fits a driver-bounded cap
+    # (_CC_LOCAL_EDGES — the same bounded-pull class as the k-row
+    # centroid collects), fetch it with ONE limit(cap+1) job and
+    # finish with union-find: the component-minimum labeling is
+    # the UNIQUE fixpoint the loop converges to, so the output is
+    # identical by construction (and covered by the q_c18/q_c58
+    # full-fixpoint SQL oracles). Graphs past the cap — the
+    # adversarial long-chain regime the loop exists for — take the
+    # loop exactly as before; the gate costs them one limit-scan
+    # job. The loop can return truncated (non-fixpoint) labels
+    # only if a contracted chain outlives max_iter, and then warns.
+    cap = _CC_LOCAL_EDGES
+    head = g.limit(cap + 1).collect() if cap > 0 else None
+    if head is not None and len(head) <= cap:
+        parent: dict = {}
+
+        def find(x):
+            r = x
+            while parent.get(r, r) != r:
+                r = parent[r]
+            while parent.get(x, x) != x:
+                parent[x], x = r, parent[x]
+            return r
+
+        for row in head:
+            ra, rb = find(row[0]), find(row[1])
+            if ra != rb:
+                # attach the larger root under the smaller so every
+                # root IS its component minimum when unions finish
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        mrows = [
+            (n, find(n)) for n in list(parent) if find(n) != n
+        ]
+        if mrows:
+            ntype = g.schema["node"].dataType.simpleString()
+            mdf = values_df(spark, mrows, f"label {ntype}, m {ntype}")
+            assign = assign.join(
+                F.broadcast(mdf), "label", "left"
+            ).select("node", F.coalesce("m", "label").alias("label"))
+        return assign
+    converged = False
+    for _ in range(max_iter):
+        # Min-label pass on the contracted graph. `moves` holds
+        # only label-nodes that improve; if none can, assign is
+        # the component-min fixpoint. (Nonempty g guarantees
+        # nonempty moves: the larger endpoint of any edge moves.)
+        # Deferred checkpoint + count = ONE job that materializes
+        # the round's moves AND (via g's deferred checkpoint below)
+        # the previous round's contraction — the loop pays one job
+        # barrier per round, not three.
         moves = (
-            e.groupBy(F.col("hi").alias("node"))
-            .agg(F.min("lo").alias("m"))
+            g.groupBy("node")
+            .agg(F.min("nbr").alias("m"))
+            .filter(F.col("m") < F.col("node"))
             .localCheckpoint(eager=False)
         )
         n_moves = moves.count()
         if n_moves == 0:
-            return assign
-        if n_moves <= 4_000_000:
-            # Pointer doubling: compose the move table with itself
-            # (twice) so chains v -> a -> b -> c collapse to direct
-            # pointers before the contraction — broadcast joins over a
-            # <= node-count table, fused into the consumers' jobs.
-            for _ in range(2):
-                x, y = moves.alias("x"), F.broadcast(moves.alias("y"))
-                moves = x.join(
-                    y, F.col("x.m") == F.col("y.node"), "left"
-                ).select(
-                    F.col("x.node").alias("node"),
-                    F.coalesce("y.m", "x.m").alias("m"),
-                )
-            bmoves = F.broadcast(moves)
-        else:
-            # Node-scale move table: a forced broadcast is an executor
-            # OOM, not a speedup — skip doubling, let AQE pick sides.
-            bmoves = moves
+            converged = True
+            break
+        # Broadcast the remap table only when the count we already
+        # paid for says it fits (~16 bytes/row; 4M rows ≈ 64 MB).
+        # Round 1 on a huge dup graph can have node-scale moves —
+        # a forced hint there is an executor OOM, not a speedup;
+        # past the bound we let AQE pick the join side.
+        bmoves = F.broadcast(moves) if n_moves <= 4_000_000 else moves
         assign = assign.join(
             bmoves.withColumnRenamed("node", "label"), "label", "left"
         ).select("node", F.coalesce("m", "label").alias("label"))
-        # g: symmetric edge list of the CONTRACTED graph, whose nodes
-        # are current labels. Invariant: (a, b) in g => components of
-        # a and b are connected in the input graph, and every input
-        # edge is represented by some g path — so CC(g) composed with
-        # assign is CC(input). Built by remapping the pair list
-        # through the round-0 moves, dropping self-loops BEFORE the
-        # symmetrizing explode + distinct so the dedup shuffle only
-        # carries surviving bridges.
+        # Contract: remap both endpoints through the moves
+        # (size-gated broadcast above — no shuffle when it fits),
+        # drop self-loops BEFORE distinct so the dedup shuffle
+        # sees only the surviving bridge edges.
         g = (
-            e.join(bmoves.withColumnRenamed("node", "lo"), "lo", "left")
-            .select(F.coalesce("m", "lo").alias("a"), "hi")
+            g.join(bmoves, "node", "left")
+            .select(F.coalesce("m", "node").alias("node"), "nbr")
             .join(
                 bmoves.select(
-                    F.col("node").alias("hi"), F.col("m").alias("m2")
+                    F.col("node").alias("nbr"), F.col("m").alias("m2")
                 ),
-                "hi",
+                "nbr",
                 "left",
             )
-            .select("a", F.coalesce("m2", "hi").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a").alias("node"), F.col("b").alias("nbr")
-                        ),
-                        F.struct(
-                            F.col("b").alias("node"), F.col("a").alias("nbr")
-                        ),
-                    )
-                ).alias("s")
-            )
-            .select("s.node", "s.nbr")
+            .select("node", F.coalesce("m2", "nbr").alias("nbr"))
+            .filter(F.col("node") != F.col("nbr"))
             .distinct()
+            # Non-eager: lineage truncation is what matters (g
+            # self-references across rounds — exponential plan
+            # growth without it); materialization rides along in
+            # the NEXT round's moves.count() job.
             .localCheckpoint(eager=False)
         )
-        # BOUNDED LOCAL FINISH (round 12, optimization): after the
-        # round-0 contraction the graph is just the sparse bridges
-        # BETWEEN dup clumps (~2k rows at sf0.1 from 758k pairs), yet
-        # the loop still pays per-round plan compilation + a count job
-        # until the fixpoint (~3 rounds, measured ~1.5 s of q_c18's
-        # floor). When the contracted graph fits a driver-bounded cap
-        # (_CC_LOCAL_EDGES — the same bounded-pull class as the k-row
-        # centroid collects), fetch it with ONE limit(cap+1) job and
-        # finish with union-find: the component-minimum labeling is
-        # the UNIQUE fixpoint the loop converges to, so the output is
-        # identical by construction (and covered by the q_c18/q_c58
-        # full-fixpoint SQL oracles). Graphs past the cap — the
-        # adversarial long-chain regime the loop exists for — take the
-        # loop exactly as before; the gate costs them one limit-scan
-        # job. The loop can return truncated (non-fixpoint) labels
-        # only if a contracted chain outlives max_iter, and then warns.
-        cap = _CC_LOCAL_EDGES
-        head = g.limit(cap + 1).collect() if cap > 0 else None
-        if head is not None and len(head) <= cap:
-            parent: dict = {}
+    if not converged:
+        # ADVICE r12: a non-fixpoint return is legal here (bounded
+        # iteration) but must be traceable — the local-finish path
+        # above would have returned the true fixpoint instead.
+        import warnings
 
-            def find(x):
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:
-                    parent[x], x = r, parent[x]
-                return r
-
-            for row in head:
-                ra, rb = find(row[0]), find(row[1])
-                if ra != rb:
-                    # attach the larger root under the smaller so every
-                    # root IS its component minimum when unions finish
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            mrows = [
-                (n, find(n)) for n in list(parent) if find(n) != n
-            ]
-            if mrows:
-                from pyspark.sql.types import StructField, StructType
-
-                ntype = g.schema["node"].dataType
-                mdf = spark.createDataFrame(
-                    mrows,
-                    StructType(
-                        [
-                            StructField("label", ntype),
-                            StructField("m", ntype),
-                        ]
-                    ),
-                )
-                assign = assign.join(
-                    F.broadcast(mdf), "label", "left"
-                ).select("node", F.coalesce("m", "label").alias("label"))
-            return assign
-        converged = False
-        for _ in range(max_iter):
-            # Min-label pass on the contracted graph. `moves` holds
-            # only label-nodes that improve; if none can, assign is
-            # the component-min fixpoint. (Nonempty g guarantees
-            # nonempty moves: the larger endpoint of any edge moves.)
-            # Deferred checkpoint + count = ONE job that materializes
-            # the round's moves AND (via g's deferred checkpoint below)
-            # the previous round's contraction — the loop pays one job
-            # barrier per round, not three.
-            moves = (
-                g.groupBy("node")
-                .agg(F.min("nbr").alias("m"))
-                .filter(F.col("m") < F.col("node"))
-                .localCheckpoint(eager=False)
-            )
-            n_moves = moves.count()
-            if n_moves == 0:
-                converged = True
-                break
-            # Broadcast the remap table only when the count we already
-            # paid for says it fits (~16 bytes/row; 4M rows ≈ 64 MB).
-            # Round 1 on a huge dup graph can have node-scale moves —
-            # a forced hint there is an executor OOM, not a speedup;
-            # past the bound we let AQE pick the join side.
-            bmoves = F.broadcast(moves) if n_moves <= 4_000_000 else moves
-            assign = assign.join(
-                bmoves.withColumnRenamed("node", "label"), "label", "left"
-            ).select("node", F.coalesce("m", "label").alias("label"))
-            # Contract: remap both endpoints through the moves
-            # (size-gated broadcast above — no shuffle when it fits),
-            # drop self-loops BEFORE distinct so the dedup shuffle
-            # sees only the surviving bridge edges.
-            g = (
-                g.join(bmoves, "node", "left")
-                .select(F.coalesce("m", "node").alias("node"), "nbr")
-                .join(
-                    bmoves.select(
-                        F.col("node").alias("nbr"), F.col("m").alias("m2")
-                    ),
-                    "nbr",
-                    "left",
-                )
-                .select("node", F.coalesce("m2", "nbr").alias("nbr"))
-                .filter(F.col("node") != F.col("nbr"))
-                .distinct()
-                # Non-eager: lineage truncation is what matters (g
-                # self-references across rounds — exponential plan
-                # growth without it); materialization rides along in
-                # the NEXT round's moves.count() job.
-                .localCheckpoint(eager=False)
-            )
-        if not converged:
-            # ADVICE r12: a non-fixpoint return is legal here (bounded
-            # iteration) but must be traceable — the local-finish path
-            # above would have returned the true fixpoint instead.
-            import warnings
-
-            warnings.warn(
-                "connected_components hit max_iter "
-                f"({max_iter}) before convergence; labels may be a "
-                "non-fixpoint truncation (raise max_iter)",
-                stacklevel=2,
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        warnings.warn(
+            "connected_components hit max_iter "
+            f"({max_iter}) before convergence; labels may be a "
+            "non-fixpoint truncation (raise max_iter)",
+            stacklevel=2,
+        )
     return assign
 
 

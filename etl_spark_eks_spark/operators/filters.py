@@ -16,6 +16,7 @@ from etl_spark_eks_spark.catalog import TABLES, load_table, register_views
 from etl_spark_eks_spark.functions.exact import dsum
 from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.registry import query
+from etl_spark_eks_spark.session import scoped
 from etl_spark_eks_spark.sources.parquet_io import land_parquet
 
 
@@ -414,9 +415,9 @@ def q_b174_ansi_mode_contract(spark, sf_dir):
     corrupts data rather than nulling it, and the single strongest
     argument for ANSI-on in a lake; B122's try_* functions are the
     per-expression opt-back-in once ANSI is on). The outcomes are
-    collected by actually EVALUATING each expression under two cloned
-    sessions (q_b91's isolation rule — the base session's conf is
-    never touched) and pinned against a VALUES oracle: if an engine
+    collected by actually EVALUATING each expression under two
+    ``session.scoped`` sessions (the base session's conf is never
+    touched) and pinned against a VALUES oracle: if an engine
     upgrade changes any cell, the hash breaks and the migration note
     updates consciously, not silently.
 
@@ -438,8 +439,7 @@ def q_b174_ansi_mode_contract(spark, sf_dir):
     }
     rows = []
     for mode, flag in (("ansi", "true"), ("legacy", "false")):
-        sess = spark.newSession()
-        sess.conf.set("spark.sql.ansi.enabled", flag)
+        sess = scoped(spark, {"spark.sql.ansi.enabled": flag})
         for name, ex in exprs.items():
             try:
                 v = sess.sql(f"SELECT {ex} AS v").first()["v"]

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from etl_spark_eks_spark.catalog import load_table
 from etl_spark_eks_spark.functions.exact import dsum
 from etl_spark_eks_spark.registry import query
+from etl_spark_eks_spark.session import scoped
 
 
 def asof_join(
@@ -856,22 +857,21 @@ def q_b132_runtime_bloom_join(spark, sf_dir):
     100 TB it is the difference between shuffling the full fact table
     and shuffling the ~fraction that joins.
 
-    Broadcast is disabled and the bloom thresholds opened in a CLONED
-    session (config-scoped, the B91/B131 discipline) to force the
-    shuffle-join-with-bloom shape deterministically at fixture scale;
+    Broadcast is disabled and the bloom thresholds opened in a
+    ``session.scoped`` session to force the shuffle-join-with-bloom
+    shape deterministically at fixture scale;
     on a real cluster the optimizer makes the same choice from stats
     when the build side exceeds the broadcast budget. Plan-pinned in
     tests/test_plans.py (might_contain on the probe scan)."""
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sess.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "100MB",
-    )
-    sess.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold",
-        "0",
+    sess = scoped(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter."
+            "creationSideThreshold": "100MB",
+            "spark.sql.optimizer.runtime.bloomFilter."
+            "applicationSideScanSizeThreshold": "0",
+        },
     )
     li = load_table(sess, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity"
@@ -969,87 +969,6 @@ def q_b136_join_strategy_hints(spark, sf_dir):
     return out.orderBy("strategy", "c_mktsegment")
 
 
-def _b140_skewed_frames(spark, sf_dir):
-    """B140's scenario on a session tuned so AQE's skew-join rule can
-    fire at fixture scale: a 70%-hot join key (every user_id with
-    user_id % 10 < 7 collapses onto key -1) sort-merge-joined to its
-    key dim. Thresholds are scaled to the fixture's shuffle sizes the
-    same way a production job scales them to advisory partition size;
-    broadcast is disabled on BOTH the static and AQE paths so the
-    runtime skew split — not a broadcast rescue — is what handles the
-    hot key. Returns (session, joined-and-aggregated DataFrame); the
-    caller collects and, in tests, asserts `skew=true` on the
-    executed SortMergeJoin."""
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    # The join feeds a groupBy(grp) that reshuffles regardless, but the
-    # skew rule's extra-shuffle guard can't see that — force it (the
-    # documented knob for exactly this join-then-reaggregate shape).
-    sess.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    sess.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    sess.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sess.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
-    e = load_table(sess, sf_dir, "events")
-    # Thresholds scale with the fact (the fixture spans 100x across
-    # scale factors; production sets these as absolute knobs): aim the
-    # skew threshold at ~half the hot partition's compressed bytes
-    # (~70% of rows x ~6 B/row compressed) so the split yields a few
-    # advisory-sized slices at every sf instead of thousands of
-    # micro-tasks at sf0.1 or nothing at sf0.001.
-    n = e.count()
-    threshold = max(1024, int(0.7 * n * 6 / 2))
-    sess.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        str(threshold),
-    )
-    sess.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        str(max(512, threshold // 2)),
-    )
-    # The fixture is ONE parquet file = one map task; AQE splits a
-    # skewed reduce partition into contiguous MAPPER ranges, so with a
-    # single mapper there is nothing to split and the rule silently
-    # no-ops (verified empirically). The round-robin repartition
-    # stands in for the thousands of scan tasks a real table has.
-    fact = e.repartition(16).select(
-        F.when(F.col("user_id") % 10 < 7, F.lit(-1))
-        .otherwise(F.col("user_id"))
-        .alias("skew_key"),
-        "value",
-    )
-    # The dim is MATERIALIZED (k-sized key table, the dim-table
-    # stand-in) rather than derived lazily from the fact: a derived
-    # dim leaves its final HashAggregate between the join's Sort and
-    # the shuffle stage, and OptimizeSkewedJoin's pattern only fires
-    # on Sort-directly-over-shuffle children. The materialization is a
-    # JVM-side localCheckpoint of the distributed distinct — NOT a
-    # driver-side collect (distinct user_ids are unbounded in general;
-    # the lineage cut gives the same scan-shaped child without the
-    # keys ever leaving the executors).
-    dim = (
-        fact.select("skew_key")
-        .distinct()
-        .withColumn("grp", F.abs(F.col("skew_key")) % 5)
-        .localCheckpoint(eager=True)
-    )
-    out = (
-        fact.join(dim, "skew_key")
-        .groupBy("grp")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(38,6)")).cast("double"),
-                4,
-            ).alias("total_value"),
-        )
-        .orderBy("grp")
-    )
-    return sess, out
-
-
 @query(
     "q_b140_aqe_skew_join",
     oracle="""
@@ -1091,11 +1010,86 @@ def q_b140_aqe_skew_join(spark, sf_dir):
     the engine ships with AQE on (session.py) and this query only has
     to SHRINK thresholds to fixture scale, not turn anything on.
 
-    Confs are scoped to a cloned session (q_b91's isolation rule);
-    the 5-row rollup re-materializes onto the caller's session.
+    The session is tuned so AQE's skew-join rule can fire at fixture
+    scale: a 70%-hot join key (every user_id with user_id % 10 < 7
+    collapses onto key -1) sort-merge-joined to its key dim.
+    Thresholds are scaled to the fixture's shuffle sizes the same way a
+    production job scales them to advisory partition size; broadcast
+    is disabled on BOTH the static and AQE paths so the runtime skew
+    split — not a broadcast rescue — is what handles the hot key. The
+    settings live on a ``session.scoped`` session, and the rollup is
+    returned on it: it reads only the fixture and its own checkpoint.
     Money math: DECIMAL(38,6) accumulation, one edge round."""
-    sess, out = _b140_skewed_frames(spark, sf_dir)
-    return spark.createDataFrame(out.collect(), schema=out.schema)
+    # Thresholds scale with the fact (the fixture spans 100x across
+    # scale factors; production sets these as absolute knobs): aim the
+    # skew threshold at ~half the hot partition's compressed bytes
+    # (~70% of rows x ~6 B/row compressed) so the split yields a few
+    # advisory-sized slices at every sf instead of thousands of
+    # micro-tasks at sf0.1 or nothing at sf0.001. Counted on the
+    # caller's session, before the scoped one opens with them.
+    n = load_table(spark, sf_dir, "events").count()
+    threshold = max(1024, int(0.7 * n * 6 / 2))
+    sess = scoped(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            # The join feeds a groupBy(grp) that reshuffles regardless,
+            # but the skew rule's extra-shuffle guard can't see that —
+            # force it (the documented knob for exactly this
+            # join-then-reaggregate shape).
+            "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": (
+                str(threshold)
+            ),
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
+                max(512, threshold // 2)
+            ),
+        },
+    )
+    # The fixture is ONE parquet file = one map task; AQE splits a
+    # skewed reduce partition into contiguous MAPPER ranges, so with a
+    # single mapper there is nothing to split and the rule silently
+    # no-ops (verified empirically). The round-robin repartition
+    # stands in for the thousands of scan tasks a real table has.
+    fact = load_table(sess, sf_dir, "events").repartition(16).select(
+        F.when(F.col("user_id") % 10 < 7, F.lit(-1))
+        .otherwise(F.col("user_id"))
+        .alias("skew_key"),
+        "value",
+    )
+    # The dim is MATERIALIZED (k-sized key table, the dim-table
+    # stand-in) rather than derived lazily from the fact: a derived
+    # dim leaves its final HashAggregate between the join's Sort and
+    # the shuffle stage, and OptimizeSkewedJoin's pattern only fires
+    # on Sort-directly-over-shuffle children. The materialization is a
+    # JVM-side localCheckpoint of the distributed distinct — NOT a
+    # driver-side collect (distinct user_ids are unbounded in general;
+    # the lineage cut gives the same scan-shaped child without the
+    # keys ever leaving the executors).
+    dim = (
+        fact.select("skew_key")
+        .distinct()
+        .withColumn("grp", F.abs(F.col("skew_key")) % 5)
+        .localCheckpoint(eager=True)
+    )
+    return (
+        fact.join(dim, "skew_key")
+        .groupBy("grp")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(
+                F.sum(F.col("value").cast("decimal(38,6)")).cast("double"),
+                4,
+            ).alias("total_value"),
+        )
+        .orderBy("grp")
+    )
 
 
 @query(

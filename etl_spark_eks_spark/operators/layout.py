@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.catalog import load_table
 from etl_spark_eks_spark.registry import query
+from etl_spark_eks_spark.session import scoped
 from etl_spark_eks_spark.sources.parquet_io import land_parquet
 
 _LAYOUT_FILES = 8
@@ -311,6 +312,21 @@ def q_b176_rebalance_hint(spark, sf_dir):
     s3a committer tuning (spark-operator-taxi.yaml:17-31) assumes
     sanely-sized output objects; this is the operator that makes
     them sane."""
+    # The advisory size is derived from the row count, counted on the
+    # caller's session before the scoped one opens with it: ~12
+    # advisory-sized pieces of the whole dataset; ~40 B/row in shuffle
+    # format. max() keeps the floor sane at sf0.001.
+    n = load_table(spark, sf_dir, "lineitem").count()
+    sess = scoped(
+        spark,
+        {
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
+                max(16_384, n * 40 // 12)
+            ),
+            # default 1 MiB floor would re-merge everything at fixture scale
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1024",
+        },
+    )
     # repartition(16) + localCheckpoint pins 16 MAP tasks under the
     # rebalance shuffle. Both are fixture crutches a cluster does not
     # need — but they are load-bearing here: (a) AQE's skew split
@@ -323,7 +339,7 @@ def q_b176_rebalance_hint(spark, sf_dir):
     # redundant-before-shuffle (both observed; only a lineage cut
     # survives the optimizer).
     li = (
-        load_table(spark, sf_dir, "lineitem")
+        load_table(sess, sf_dir, "lineitem")
         .select(
             "l_orderkey",
             "l_extendedprice",
@@ -336,24 +352,8 @@ def q_b176_rebalance_hint(spark, sf_dir):
         .repartition(16)
         .localCheckpoint(eager=True)
     )
-    n = li.count()
     hot_rows = li.filter(F.col("heat") == "hot").count()
-    # ~12 advisory-sized pieces of the whole dataset; ~40 B/row in
-    # shuffle format. max() keeps the floor sane at sf0.001.
-    advisory = max(16_384, n * 40 // 12)
-    confs = {
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(advisory),
-        # default 1 MiB floor would re-merge everything at fixture scale
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1024",
-    }
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        back = land_parquet(li.hint("rebalance", "heat"), "q_b176", sf_dir)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+    back = land_parquet(li.hint("rebalance", "heat"), "q_b176", sf_dir)
     rb = back.select(
         "l_extendedprice",
         "heat",

@@ -1368,7 +1368,8 @@ def q_c44_coreset_medoids(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, cmat = kmeans_lloyd_with_centroids(emb, k=8, iters=3)
     cb = F.broadcast(
-        emb.sparkSession.createDataFrame(
+        values_df(
+            spark,
             [(c, [float(x) for x in row]) for c, row in enumerate(cmat)],
             "cluster int, cv array<double>",
         )

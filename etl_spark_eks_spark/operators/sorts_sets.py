@@ -8,8 +8,10 @@ set ops are expressed so partial aggregation happens before the shuffle.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_spark_eks_spark.catalog import load_table
+from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.registry import query
 
 
@@ -366,7 +368,10 @@ def q_b157_tablesample_repeatable(spark, sf_dir):
         and n_sample == s2.count()
     )
     frac_ok = 0.07 <= n_sample / max(n_total, 1) <= 0.13
-    return spark.createDataFrame(
+    return values_df(
+        spark,
         [(n_total, identical, frac_ok)],
-        "n_total long, samples_identical boolean, sample_frac_ok boolean",
+        StructType.fromDDL(
+            "n_total long, samples_identical boolean, sample_frac_ok boolean"
+        ),
     )

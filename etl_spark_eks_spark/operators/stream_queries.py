@@ -21,8 +21,11 @@ from pyspark.sql import functions as F
 
 from etl_spark_eks_spark.functions.local_relation import values_df
 from etl_spark_eks_spark.registry import query
+from etl_spark_eks_spark.session import scoped
 from etl_spark_eks_spark.sources.parquet_io import fresh_scratch, read_back, sf_tag
 from etl_spark_eks_spark.streaming.stream_ops import (
+    NO_DATA_BATCH_OFF,
+    STATE_CONF,
     events_stream,
     events_stream_batched,
     events_stream_time_ordered,
@@ -64,7 +67,7 @@ def q_b48_watermark_stream(spark, sf_dir):
     from etl_spark_eks_spark.functions.exact import dsum
 
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(scoped(spark, STATE_CONF), sf_dir)
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
@@ -104,8 +107,12 @@ def q_b49_stream_dedup(spark, sf_dir):
     eviction) stay covered by tests/test_streaming.py's invariants; the
     oracle pins the exactly-once OUTPUT contract.
     """
+    # NO_DATA_BATCH_OFF: dedup is a passthrough — every surviving row
+    # emits on its own data batch; the trailing watermark-advance batch
+    # only evicts state (A/B-proven output-identical at sf0.1).
+    sess = scoped(spark, {**STATE_CONF, **NO_DATA_BATCH_OFF})
     doubled = (
-        events_stream(spark, sf_dir)
+        events_stream(sess, sf_dir)
         .withColumn("__dup", F.explode(F.array(F.lit(1), F.lit(2))))
         .drop("__dup")
         .withWatermark("ts", "1 hour")
@@ -113,10 +120,7 @@ def q_b49_stream_dedup(spark, sf_dir):
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # no_data_batch=False: dedup is a passthrough — every surviving row
-    # emits on its own data batch; the trailing watermark-advance batch
-    # only evicts state (A/B-proven output-identical at sf0.1).
-    return run_available_now(deduped, "q_b49", sf_dir, no_data_batch=False)
+    return run_available_now(deduped, "q_b49", sf_dir)
 
 
 @query(
@@ -155,8 +159,20 @@ def q_b56_stateful_user_stats(spark, sf_dir):
             {"user_id": [key[0]], "n_events": [n], "total_value": [tot]}
         )
 
+    # Python-state streams invert the state-partition tradeoff: each
+    # partition's groups flow SEQUENTIALLY through one Python worker's
+    # state channel, so here partitions buy parallel workers rather
+    # than costing empty commits (measured r8 at sf0.1: 2 -> 3.95 s,
+    # 4 -> 2.57 s, 8 -> 2.23 s, 16 -> 2.51 s). JVM-state streams keep
+    # STATE_CONF's low width.
+    # NO_DATA_BATCH_OFF: the pandas-state fold emits its updated
+    # totals on each DATA batch; the trailing no-data batch only runs
+    # timeout bookkeeping (A/B-proven output-identical at sf0.1).
+    sess = scoped(
+        spark, {"spark.sql.shuffle.partitions": "8", **NO_DATA_BATCH_OFF}
+    )
     running = (
-        events_stream_batched(spark, sf_dir)
+        events_stream_batched(sess, sf_dir)
         .select("user_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -167,17 +183,7 @@ def q_b56_stateful_user_stats(spark, sf_dir):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    # Python-state streams invert the state-partition tradeoff: each
-    # partition's groups flow SEQUENTIALLY through one Python worker's
-    # state channel, so here partitions buy parallel workers rather
-    # than costing empty commits (measured r8 at sf0.1: 2 -> 3.95 s,
-    # 4 -> 2.57 s, 8 -> 2.23 s, 16 -> 2.51 s). JVM-state streams keep
-    # the low default (run_available_now docstring).
-    # no_data_batch=False: the pandas-state fold emits its updated
-    # totals on each DATA batch; the trailing no-data batch only runs
-    # timeout bookkeeping (A/B-proven output-identical at sf0.1).
-    back = run_available_now(running, "q_b56", sf_dir, state_partitions=8,
-                             no_data_batch=False)
+    back = run_available_now(running, "q_b56", sf_dir)
     # Last emission per user = totals over the whole stream.
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
@@ -207,9 +213,11 @@ def q_b50_exactly_once_rerun(spark, sf_dir):
     'mostly idempotent, non-atomic', reference spark-operator-taxi.yaml:20)
     with checkpoint-based exactly-once.
     """
+    sess = scoped(spark, STATE_CONF)
+
     def pipeline():
         return (
-            events_stream(spark, sf_dir)
+            events_stream(sess, sf_dir)
             .filter(F.col("event_type") == "purchase")
             .select("event_id", "ts", "user_id", "value")
         )
@@ -249,8 +257,13 @@ def q_b57_stream_stream_join(spark, sf_dir):
     Scale: join state is partitioned by user_id across the cluster;
     state size ~= events inside the watermark horizon, independent of
     stream length."""
+    # NO_DATA_BATCH_OFF: INNER matches emit on the data batch that
+    # completes them; the trailing watermark-advance batch only evicts
+    # state (A/B-proven output-identical at sf0.1). The OUTER variant
+    # q_b74 must keep it — its NULL emissions need the final advance.
+    sess = scoped(spark, {**STATE_CONF, **NO_DATA_BATCH_OFF})
     views = (
-        events_stream(spark, sf_dir)
+        events_stream(sess, sf_dir)
         .filter(F.col("event_type") == "view")
         .select(
             "user_id",
@@ -260,7 +273,7 @@ def q_b57_stream_stream_join(spark, sf_dir):
         .withWatermark("view_ts", "1 hour")
     )
     purchases = (
-        events_stream(spark, sf_dir)
+        events_stream(sess, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
@@ -279,11 +292,7 @@ def q_b57_stream_stream_join(spark, sf_dir):
         ),
         "inner",
     ).select("user_id", "view_id", "purchase_id", "view_ts", "purchase_ts")
-    # no_data_batch=False: INNER matches emit on the data batch that
-    # completes them; the trailing watermark-advance batch only evicts
-    # state (A/B-proven output-identical at sf0.1). The OUTER variant
-    # q_b74 must keep it — its NULL emissions need the final advance.
-    return run_available_now(joined, "q_b57", sf_dir, no_data_batch=False)
+    return run_available_now(joined, "q_b57", sf_dir)
 
 
 @query(
@@ -343,8 +352,9 @@ def q_b74_stream_outer_join(spark, sf_dir):
     Scale: state is partitioned by user_id and bounded by the watermark
     horizon on BOTH sides, exactly as B57; the outer variant adds no
     state — only the deferred NULL emission."""
+    sess = scoped(spark, STATE_CONF)
     views = (
-        events_stream_time_ordered(spark, sf_dir)
+        events_stream_time_ordered(sess, sf_dir)
         .filter(F.col("event_type") == "view")
         .select(
             "user_id",
@@ -354,7 +364,7 @@ def q_b74_stream_outer_join(spark, sf_dir):
         .withWatermark("view_ts", "1 hour")
     )
     purchases = (
-        events_stream_time_ordered(spark, sf_dir)
+        events_stream_time_ordered(sess, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
@@ -401,11 +411,12 @@ def q_b66_stream_static_join(spark, sf_dir):
     instead (B60's pattern)."""
     from etl_spark_eks_spark.catalog import load_table
 
-    cust = load_table(spark, sf_dir, "customer").select(
+    sess = scoped(spark, STATE_CONF)
+    cust = load_table(sess, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     enriched = (
-        events_stream(spark, sf_dir)
+        events_stream(sess, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "user_id", "value", "c_mktsegment")
@@ -487,25 +498,19 @@ def q_b72_foreachbatch_upsert(spark, sf_dir):
         os.rename(tmp, cur)
         shutil.rmtree(old, ignore_errors=True)
 
-    stream = events_stream_batched(spark, sf_dir).select(
-        "user_id", "event_id", "ts", "value"
-    )
     # The foreachBatch fold runs once per DATA batch; a trailing
     # no-data batch never reaches the sink function (A/B-proven
-    # output-identical at sf0.1). Set/restore on the shared session.
-    ndkey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nd = spark.conf.get(ndkey)
-    spark.conf.set(ndkey, "false")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(ndkey, prev_nd)
+    # output-identical at sf0.1).
+    stream = events_stream_batched(
+        scoped(spark, NO_DATA_BATCH_OFF), sf_dir
+    ).select("user_id", "event_id", "ts", "value")
+    q = (
+        stream.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return read_back(spark, cur, stream.schema).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -552,18 +557,12 @@ def q_b91_stream_complete_mode(spark, sf_dir):
         events_stream_batched,
     )
 
-    # Run the stream in a CLONED session (shared SparkContext, isolated
-    # SQLConf) so the state-partition override is scoped to this query
-    # and can never be observed by a concurrently-executing query on
-    # the caller's session — streaming reads shuffle.partitions from
-    # the session at query start, so per-query scoping requires a
-    # per-query session, not a set/restore around start().
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
-    # Update-mode emissions all happen on data batches; the trailing
+    # Complete-mode emissions all happen on data batches; the trailing
     # watermark-advance no-data batch adds nothing here (A/B-proven
-    # output-identical at sf0.1). Conf isolated to the cloned session.
-    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    # output-identical at sf0.1).
+    sess = scoped(
+        spark, {"spark.sql.shuffle.partitions": "8", **NO_DATA_BATCH_OFF}
+    )
     agg = (
         events_stream_batched(sess, sf_dir)
         .groupBy("event_type")
@@ -582,13 +581,9 @@ def q_b91_stream_complete_mode(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    # Materialize off the transient memory sink so the returned frame
-    # outlives the query and the cloned session (the driver collects
-    # later, via the CALLER's session).
-    return spark.createDataFrame(
-        sess.table("q_b91_complete").collect(),
-        schema=sess.table("q_b91_complete").schema,
-    )
+    # The view resolves now to this run's sink, which the frame keeps
+    # alive; a later run registers its own sink in its own session.
+    return sess.table("q_b91_complete")
 
 
 
@@ -659,7 +654,7 @@ def q_b98_stream_session_window(spark, sf_dir):
     from etl_spark_eks_spark.functions.exact import dsum
 
     agg = (
-        events_stream_time_ordered(spark, sf_dir)
+        events_stream_time_ordered(scoped(spark, STATE_CONF), sf_dir)
         .withWatermark("ts", "1 hour")
         .groupBy(
             "user_id", F.session_window("ts", "30 minutes").alias("w")
@@ -750,7 +745,7 @@ if tws_available():
                 pass
 
         running = (
-            events_stream_batched(spark, sf_dir)
+            events_stream_batched(scoped(spark, STATE_CONF), sf_dir)
             .select("user_id", "value")
             .groupBy("user_id")
             .transformWithStateInPandas(
@@ -808,12 +803,12 @@ def q_b110_stream_update_mode(spark, sf_dir):
     (append's silence until watermark close) — the right mode when
     the key space is large but each batch touches few keys. State
     store placement identical to B91/B56."""
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
     # Update-mode emissions all happen on data batches; the trailing
     # watermark-advance no-data batch adds nothing here (A/B-proven
-    # output-identical at sf0.1). Conf isolated to the cloned session.
-    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    # output-identical at sf0.1).
+    sess = scoped(
+        spark, {"spark.sql.shuffle.partitions": "8", **NO_DATA_BATCH_OFF}
+    )
     agg = (
         events_stream_batched(sess, sf_dir)
         .groupBy("event_type")
@@ -833,13 +828,13 @@ def q_b110_stream_update_mode(spark, sf_dir):
     )
     q.awaitTermination()
     w = Window.partitionBy("event_type").orderBy(F.col("n_events").desc())
-    final = (
+    # Read straight off this run's sink, as q_b91 does.
+    return (
         sess.table("q_b110_update")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("event_type", "n_events", "value_micros")
     )
-    return spark.createDataFrame(final.collect(), schema=final.schema)
 
 
 @query(
@@ -885,8 +880,7 @@ def q_b118_stream_progress_metrics(spark, sf_dir):
         events_stream_time_ordered,
     )
 
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
+    sess = scoped(spark, {"spark.sql.shuffle.partitions": "8"})
     # n_files pinned to 4: the oracle recomputes the telemetry as
     # ntile(4) — the replay width IS the contract here.
     stream = events_stream_time_ordered(sess, sf_dir, n_files=4)
@@ -930,8 +924,8 @@ def q_b131_rocksdb_state_store(spark, sf_dir):
     changelog checkpoints, which is what makes billions of streaming
     keys (the 100 TB dedup/session workloads, B49/B98's shapes)
     operable. Spark reads the provider class from the session conf at
-    QUERY start, so the swap is config-scoped to a cloned session —
-    same query semantics, different state engine, proven by the exact
+    QUERY start, so the swap is config-scoped to a ``session.scoped``
+    session — same query semantics, different state engine, proven by the exact
     batch oracle (B91's complete-mode discipline, keyed 5x16 to give
     the store a key population rather than 5 rows).
 
@@ -942,16 +936,19 @@ def q_b131_rocksdb_state_store(spark, sf_dir):
         events_stream_batched,
     )
 
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
-    sess.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     # Complete-mode re-emission happens per data batch; the no-data
     # batch adds nothing (A/B-proven output-identical at sf0.1).
-    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    sess = scoped(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            ),
+            **NO_DATA_BATCH_OFF,
+        },
+    )
     agg = (
         events_stream_batched(sess, sf_dir)
         .groupBy(
@@ -973,10 +970,7 @@ def q_b131_rocksdb_state_store(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    return spark.createDataFrame(
-        sess.table("q_b131_rocksdb").collect(),
-        schema=sess.table("q_b131_rocksdb").schema,
-    )
+    return sess.table("q_b131_rocksdb")  # this run's sink, as q_b91
 
 
 @query(
@@ -1035,9 +1029,13 @@ def q_b138_incremental_backlog(spark, sf_dir):
         for f in wave:
             shutil.copy(f, os.path.join(land, os.path.basename(f)))
 
+    # NO_DATA_BATCH_OFF: stateless projection — every row emits on its
+    # file's batch (A/B-proven output-identical at sf0.1).
+    sess = scoped(spark, {**STATE_CONF, **NO_DATA_BATCH_OFF})
+
     def run(run_id: int):
         """Drain the landed files; run 2 resumes run 1's checkpoint."""
-        stream = spark.readStream.schema(raw.schema).parquet(land)
+        stream = sess.readStream.schema(raw.schema).parquet(land)
         df = normalize_event_time(stream).select(
             "event_id",
             "event_type",
@@ -1045,11 +1043,7 @@ def q_b138_incremental_backlog(spark, sf_dir):
             "value",
             F.lit(run_id).alias("ingest_run"),
         )
-        # no_data_batch=False: stateless projection — every row emits on
-        # its file's batch (A/B-proven output-identical at sf0.1).
-        return run_available_now(
-            df, "q_b138", sf_dir, no_data_batch=False, resume=run_id > 1
-        )
+        return run_available_now(df, "q_b138", sf_dir, resume=run_id > 1)
 
     deliver(files[:2])
     run(1)
@@ -1123,8 +1117,12 @@ def q_b143_multiplexed_stream_union(spark, sf_dir):
     raw.where(F.col("user_id") % 2 == 0).write.parquet(west)
     raw.where(F.col("user_id") % 2 != 0).write.parquet(east)
 
+    # NO_DATA_BATCH_OFF: stateless multiplex — rows emit on their
+    # source batch (A/B-proven output-identical at sf0.1).
+    sess = scoped(spark, {**STATE_CONF, **NO_DATA_BATCH_OFF})
+
     def prefix_stream(path: str, region: str):
-        s = spark.readStream.schema(raw.schema).parquet(path)
+        s = sess.readStream.schema(raw.schema).parquet(path)
         return normalize_event_time(s).select(
             "event_id",
             "event_type",
@@ -1136,10 +1134,8 @@ def q_b143_multiplexed_stream_union(spark, sf_dir):
     unioned = prefix_stream(west, "west").unionByName(
         prefix_stream(east, "east")
     )
-    # no_data_batch=False: stateless multiplex — rows emit on their
-    # source batch (A/B-proven output-identical at sf0.1).
     return (
-        run_available_now(unioned, "q_b143", sf_dir, no_data_batch=False)
+        run_available_now(unioned, "q_b143", sf_dir)
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),

@@ -175,6 +175,28 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def scoped(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A session for one query's non-default SQL settings: ``spark``'s
+    effective runtime conf and temp views, with ``conf`` on top, in a
+    SQLConf of its own, so nothing set here is ever seen by ``spark``
+    or by a concurrent query on it (the reference scopes settings the
+    same way: one sparkConf per job, spark-operator-taxi.yaml:17-31).
+
+    This is the only way a query changes SQL settings. It clones the
+    JVM session (``cloneSession``, under 1 ms a call on local[2]),
+    wrapped the way PySpark wraps ``newSession``. ``newSession()``
+    would start from the SparkConf instead and drop whatever was set at
+    runtime (on a driver's plain session: the whole
+    ``apply_engine_conf`` profile); copying ``conf.getAll`` in Python
+    costs ~20 ms a call. SparkContext, catalog and cache stay shared. A
+    frame built on the returned session keeps its settings through the
+    caller's action."""
+    sess = spark.__class__(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in conf.items():
+        sess.conf.set(k, v)
+    return sess
+
+
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of the engine profile to an
     externally-created session (e.g. the driver's)."""

@@ -175,13 +175,35 @@ def events_stream_time_ordered(
     return normalize_event_time(stream)
 
 
+# State-store width for the fixture-scale streams (the shuffle width a
+# stream freezes into its checkpoint at first start). It is also the
+# state-store instance count and the sink's files per batch, so every
+# micro-batch pays it in state commits and fsyncs whatever the data
+# volume, and AQE does not coalesce stateful exchanges. A plain
+# 200-partition session spends 50x the data's share of each batch on
+# empty state commits; measured r7: 8 -> 4, r8: 4 -> 2, each cutting
+# the streaming bench cohort's fixed per-batch overhead with
+# value-identical results (state count never affects emissions, only
+# commit fan-out). At scale a deployment sizes it to cluster cores.
+STATE_CONF = {"spark.sql.shuffle.partitions": "2"}
+
+# Skips the trailing no-data micro-batch. That batch exists to advance
+# the watermark PAST the last data so append-mode operators can seal
+# and emit still-open windows/joins at end-of-input; queries whose
+# every emission happens ON a data batch (dedup passthrough, per-batch
+# update/changelog emitters, inner stream-stream matches, foreachBatch
+# folds) pay its ~0.5 s engine floor for nothing. Each query that
+# scopes this was A/B-proven output-identical at sf0.1 (r8 verdict
+# task 4); b48/b74/b98 MUST keep the batch — their sealed-window
+# emissions halve or vanish without the final advance.
+NO_DATA_BATCH_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+
+
 def run_available_now(
     df: DataFrame,
     key: str,
     sf_dir: str,
     output_mode: str = "append",
-    state_partitions: int | None = 2,
-    no_data_batch: bool = True,
     resume: bool = False,
 ) -> DataFrame:
     """Run a streaming DataFrame to a parquet sink until all currently-
@@ -196,63 +218,21 @@ def run_available_now(
     landed processes only those — the exactly-once equivalent of the
     reference's at-least-once SQS trigger + overwrite sink (SURVEY §3.1).
 
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    stream (restored after). Unlike batch, this count is FROZEN into the
-    checkpoint at first start and is also the state-store instance count
-    and sink files-per-batch — every micro-batch pays it in state
-    commits and fsyncs regardless of data volume, and AQE does not
-    coalesce stateful exchanges. Deployment knob: set it to cluster
-    cores at scale; the default 2 sizes fixture-scale streams (a plain
-    200-partition session spends 50x the data's share of each batch on
-    empty state commits; measured r7: 8 -> 4, r8: 4 -> 2, each cutting
-    the streaming bench cohort's fixed per-batch overhead with
-    value-identical results — state count never affects emissions,
-    only commit fan-out). None = leave the session value.
-
-    ``no_data_batch=False`` skips the trailing no-data micro-batch
-    (spark.sql.streaming.noDataMicroBatches.enabled, scoped to this
-    run). That batch exists to advance the watermark PAST the last
-    data so append-mode operators can seal and emit still-open
-    windows/joins at end-of-input — queries whose every emission
-    happens ON a data batch (dedup passthrough, per-batch
-    update/changelog emitters, inner stream-stream matches,
-    foreachBatch folds) pay its ~0.5 s engine floor for nothing.
-    Callers opting out were each A/B-proven output-identical at sf0.1
-    (r8 verdict task 4; b48/b74/b98 MUST keep it — their sealed-window
-    emissions halve or vanish without the final advance).
-
-    Concurrency note: the set/finally-restore brackets the caller's
-    SESSION conf, which is correct under the bench/driver's serial
-    execution but briefly visible to any concurrent query on the same
-    session. Callers that need full isolation should build ``df`` on
-    ``spark.newSession()`` (own SQLConf, shared context) and pass
-    ``state_partitions=None`` — the pattern q_b91 uses."""
+    The stream runs with the settings of the session ``df`` was built
+    on: callers build it on ``session.scoped(spark, STATE_CONF)``
+    (plus ``NO_DATA_BATCH_OFF`` where every emission is batch-driven),
+    and the read-back stays on that session."""
     sink_dir, checkpoint_dir = (
         (scratch_path if resume else fresh_scratch)(key, sf_tag(sf_dir), d)
         for d in ("sink", "ckpt")
     )
-    spark = df.sparkSession
-    restore: dict[str, str] = {}
-    if state_partitions is not None:
-        restore["spark.sql.shuffle.partitions"] = spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if not no_data_batch:
-        nd = "spark.sql.streaming.noDataMicroBatches.enabled"
-        restore[nd] = spark.conf.get(nd)
-        spark.conf.set(nd, "false")
-    try:
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        for k, v in restore.items():
-            spark.conf.set(k, v)
-    return read_back(spark, sink_dir, df.schema)
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", sink_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return read_back(df.sparkSession, sink_dir, df.schema)

@@ -608,8 +608,10 @@ def test_plan_lint_no_new_antipatterns(spark, sf_dir):
     Python, no SinglePartition exchange — except the explicitly
     allowlisted shapes whose docstrings own the justification
     (k-sized tails, 1-row stat tables, bucket-offset windows, the
-    declared theta/cross surface demos). A new operator that silently
-    plans an anti-pattern fails here with a pointer to the lint."""
+    declared theta/cross surface demos) — and no query, streaming ones
+    included, writes its caller's conf while it is built. A new
+    operator that silently plans an anti-pattern fails here with a
+    pointer to the lint."""
     import sys
     from pathlib import Path
 
@@ -939,9 +941,7 @@ def test_aqe_skew_join_splits_hot_partition(spark, sf_dir):
     whole conf recipe: thresholds scaled to fixture shuffle sizes,
     force flag for the join-then-reaggregate shape, and the
     multi-mapper fact (a single-mapper shuffle cannot be split)."""
-    from etl_spark_eks_spark.operators.joins import _b140_skewed_frames
-
-    sess, out = _b140_skewed_frames(spark, sf_dir)
+    out = registry.QUERIES["q_b140_aqe_skew_join"](spark, sf_dir)
     out.collect()
     plan = plan_of(out)
     final = plan.split("+- == Initial Plan ==")[0]

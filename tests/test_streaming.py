@@ -294,11 +294,12 @@ def test_update_mode_emissions_are_monotone_changelog(spark, sf_dir):
     equals the batch aggregate exactly."""
     from pyspark.sql import functions as F
 
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "4")
+    from etl_spark_eks_spark.session import scoped
     from etl_spark_eks_spark.streaming.stream_ops import (
         events_stream_batched,
     )
+
+    sess = scoped(spark, {"spark.sql.shuffle.partitions": "4"})
 
     agg = (
         events_stream_batched(sess, sf_dir)
@@ -372,7 +373,7 @@ def test_incremental_backlog_run2_processes_only_delta(spark, sf_dir):
 
 def test_no_data_batch_optout_is_output_identical(spark, sf_dir, monkeypatch):
     """The r8 no-data-batch opt-out contract, encoded: a query that
-    declared no_data_batch=False (emissions all batch-driven) must
+    scoped NO_DATA_BATCH_OFF (emissions all batch-driven) must
     produce IDENTICAL output when the trailing watermark-advance batch
     is forced back on. Representative: q_b49 (dedup passthrough) and
     q_b57 (inner stream-stream join — the outer variant q_b74 must NOT
@@ -381,7 +382,10 @@ def test_no_data_batch_optout_is_output_identical(spark, sf_dir, monkeypatch):
     from etl_spark_eks_spark.streaming.stream_ops import run_available_now
 
     def forced_on(df, key, sf_dir, **kw):
-        kw["no_data_batch"] = True
+        # df is built on the query's scoped session, not on `spark`
+        df.sparkSession.conf.set(
+            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+        )
         return run_available_now(df, key, sf_dir, **kw)
 
     for key in ("q_b49_stream_dedup", "q_b57_stream_stream_join"):

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Plan lint: walk EVERY registered query's physical plan and flag the
 three 100 TB anti-patterns mechanically, instead of auditing plans
-anecdotally, plus one session-hygiene check:
+anecdotally, plus two session-hygiene checks:
 
   1. cartesian   — CartesianProduct / BroadcastNestedLoopJoin (a join
                    that compares every pair; at scale this is the
@@ -13,6 +13,10 @@ anecdotally, plus one session-hygiene check:
   4. cache_residue — building the query (from a cleared cache) leaves
                    an entry in the session's CacheManager, which the
                    next query in a long-lived session inherits
+  5. conf_write  — building the query calls RuntimeConfig.set/unset on
+                   the CALLER's session (a query's settings belong on
+                   ``session.scoped``); no allowlist. Streaming queries
+                   are built for this check too.
 
 Each hit is either in the query's documented allowlist (the docstring
 owns the justification) or a lint FAILURE. tests/test_plans.py runs
@@ -26,7 +30,7 @@ from __future__ import annotations
 
 import io
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -153,7 +157,8 @@ ALLOW_CACHE_RESIDUE = {
     "q_c102_substring_span_surgery",  # span table read by the two rewrite joins and the anti-join
 }
 # Streaming queries run real streams inside the builder; their plans are
-# micro-batch internals, not batch plans — lint the batch surface only.
+# micro-batch internals, not batch plans — they are built for the
+# conf_write check only.
 SKIP = {
     "q_b48_watermark_stream", "q_b49_stream_dedup",
     "q_b50_exactly_once_rerun", "q_b56_stateful_user_stats",
@@ -162,6 +167,33 @@ SKIP = {
     "q_b91_stream_complete_mode", "q_b98_stream_session_window",
     "q_b110_stream_update_mode",
 }
+
+
+@contextmanager
+def _caller_conf_writes(spark):
+    """Record, as "set(key)"/"unset(key)", every RuntimeConfig write
+    aimed at ``spark``'s own conf while the block runs."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    own = spark._jsparkSession.conf()
+    hits: list[str] = []
+    saved = {name: getattr(RuntimeConfig, name) for name in ("set", "unset")}
+
+    def recording(name):
+        def write(self, key, *args, **kwargs):
+            if self._jconf.equals(own):
+                hits.append(f"{name}({key})")
+            return saved[name](self, key, *args, **kwargs)
+
+        return write
+
+    for name in saved:
+        setattr(RuntimeConfig, name, recording(name))
+    try:
+        yield hits
+    finally:
+        for name, fn in saved.items():
+            setattr(RuntimeConfig, name, fn)
 
 
 def lint(only=None) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
@@ -182,7 +214,7 @@ def lint(only=None) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
 
     cache = spark._jsparkSession.sharedState().cacheManager()
 
-    keys = [k for k in registry.QUERIES if k not in SKIP]
+    keys = list(registry.QUERIES)
     if only:
         keys = [k for k in keys if k in only]
     violations: dict[str, list[str]] = {}
@@ -192,7 +224,12 @@ def lint(only=None) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
     }
     for k in keys:
         spark.catalog.clearCache()
-        df = registry.QUERIES[k](spark, SF_DIR)
+        with _caller_conf_writes(spark) as writes:
+            df = registry.QUERIES[k](spark, SF_DIR)
+        if writes:
+            violations[k] = ["conf_write: " + ", ".join(writes)]
+        if k in SKIP:
+            continue
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
@@ -223,8 +260,8 @@ def lint(only=None) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
             else:
                 hits.append("cache_residue")
         if hits:
-            violations[k] = hits
-    linted = set(keys)
+            violations.setdefault(k, []).extend(hits)
+    linted = set(keys) - SKIP
     dead: dict[str, list[str]] = {}
     for pattern, allow in (
         ("cartesian", ALLOW_CARTESIAN),
