@@ -12,6 +12,17 @@ daemon forks inherits the guard.
 The guard skips the re-read while the archive's (size, mtime_ns, inode)
 are those it had when that importer last read it. A changed archive, or
 one that cannot be stat'ed, goes through the original method.
+
+``session.get_spark`` also turns on
+``spark.python.unix.domain.socket.enabled`` for the local masters that
+run this daemon. ``pyspark.daemon.manager()`` then listens on a Unix
+domain socket in ``spark.python.unix.domain.socket.dir`` (the workers
+see ``PYTHON_UNIX_DOMAIN_ENABLED=true``) instead of loopback TCP: over
+TCP each task waited ~40 ms on the JVM's side of the socket before its
+first Arrow batch arrived. This module needs no change for it. A task
+whose output the JVM stops reading early (``first()``, ``limit``) now
+ends with a ``BrokenPipeError`` traceback from the daemon on stderr,
+because the worker's last flush fails; the task's result is unaffected.
 """
 
 import os

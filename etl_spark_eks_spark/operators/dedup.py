@@ -17,7 +17,7 @@ Scale ladder (the 100 TB story):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from etl_spark_eks_spark.catalog import adaptive_width, load_table, widen
@@ -557,14 +557,7 @@ def q_c16_ngram_jaccard(spark, sf_dir):
     )
 
 
-# (bands, rows) per (recall_floor, at_jaccard) — memoized because the
-# planner table is corpus-free constant arithmetic: same inputs, same
-# winner, in every session. One 1-row collect per process, not per query.
-_LSH_CONFIG_MEMO: dict = {}
-
-
 def select_lsh_config(
-    spark: SparkSession,
     recall_floor: float = 0.9999,
     at_jaccard: float = 0.8,
 ) -> tuple[int, int]:
@@ -577,30 +570,23 @@ def select_lsh_config(
     too weak": (8,2) gives 0.999725 at J=0.8, under the 0.9999 floor;
     (16,2) gives 1-7.9e-8 at half the signature cost of (32,2)) —
     executed against the C118 design table as DATA instead of
-    hard-coding its conclusion (r7 verdict task 6). The collect is
-    1 row of parameter arithmetic, never corpus-sized."""
-    key = (recall_floor, at_jaccard)
-    if key not in _LSH_CONFIG_MEMO:
-        row = (
-            lsh_parameter_plan(spark)
-            .filter(
-                (F.col("jaccard") == at_jaccard)
-                & (F.col("p_candidate") >= recall_floor)
-            )
-            .orderBy("signature_size", "bands")
-            .select("bands", "rows_per_band")
-            .first()
+    hard-coding its conclusion (r7 verdict task 6). The pick runs on
+    the driver over ``_c118_grid()``, the same exact-arithmetic rows
+    q_c118's VALUES table is built from: under 1 ms, where the same
+    pick as a Spark query took 0.52-0.60 s as a fresh local[4]
+    session's first call."""
+    picks = [
+        (s, b, r)
+        for b, r, s, j, p, _t in _c118_grid()
+        if j == at_jaccard and p >= recall_floor
+    ]
+    if not picks:
+        raise ValueError(
+            f"no LSH config in the C118 grid reaches recall "
+            f"{recall_floor} at J={at_jaccard}"
         )
-        if row is None:
-            raise ValueError(
-                f"no LSH config in the C118 grid reaches recall "
-                f"{recall_floor} at J={at_jaccard}"
-            )
-        _LSH_CONFIG_MEMO[key] = (
-            int(row["bands"]),
-            int(row["rows_per_band"]),
-        )
-    return _LSH_CONFIG_MEMO[key]
+    _s, b, r = min(picks)
+    return b, r
 
 
 def band_pairs(
@@ -751,7 +737,7 @@ def q_c8_minhash_bands(spark, sf_dir):
     so split semantics are byte-identical. Candidates come from the
     ``band_pairs`` self-join."""
     d = load_table(spark, sf_dir, "documents")
-    n_bands, rows_per_band = select_lsh_config(spark)
+    n_bands, rows_per_band = select_lsh_config()
     sigs = portable_minhash_bands_np(
         widen(d), tokenize(F.col("text")), "doc_id",
         n_bands * rows_per_band, n_bands,
@@ -1847,7 +1833,7 @@ def q_c73_signature_probe_neardup(spark, sf_dir):
     )
     # Index width from C118's planner table (same selection as C8:
     # cheapest signature clearing 0.9999 recall at J=0.8 -> 16x2).
-    n_bands, rows_per_band = select_lsh_config(spark)
+    n_bands, rows_per_band = select_lsh_config()
     n_hashes = n_bands * rows_per_band
 
     corpus, batch = widen(corpus_txt), widen(batch_txt)
@@ -3234,12 +3220,8 @@ def q_c118_lsh_parameter_plan(spark, sf_dir):
     Scale: a k-row local relation; the VALUE is that downstream
     config (C8's band count, C73's index width) is selected FROM this
     table as data instead of hard-coded — select_lsh_config() runs
-    the pick, q_c8/q_c73 consume it."""
-    return lsh_parameter_plan(spark)
-
-
-def lsh_parameter_plan(spark: SparkSession) -> DataFrame:
-    """The C118 design table (shared with select_lsh_config).
+    the same pick over the same rows (_c118_grid) on the driver,
+    q_c8/q_c73 consume it.
 
     Built from SQL VALUES, not spark.createDataFrame(list): PySpark's
     createDataFrame routes local rows through a pickled Python RDD, so
@@ -3247,9 +3229,7 @@ def lsh_parameter_plan(spark: SparkSession) -> DataFrame:
     Python workers to deserialize 12 rows — measured 5.4 s warm for
     44 output rows (r8; the whole query is two such scans). VALUES is
     a JVM LocalRelation: constant-folded at plan time, no Python, no
-    scan — the cost profile the docstring always claimed. The values
-    are the exact-arithmetic literals from _c118_grid (shared with
-    the oracle), so no engine-side POW is in the compared path."""
+    scan — the cost profile the docstring always claimed."""
     return spark.sql(_C118_SELECT.format(body=_c118_values_body()))
 
 

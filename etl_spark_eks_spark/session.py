@@ -24,11 +24,42 @@ while the archive is unchanged. Other masters keep Spark's default
 daemon, because their executors may not have this package installed;
 a cluster that does install it sets the same conf through
 ``SPARK_GRAFT_EXTRA_CONF``.
+
+Local masters also move the executor <-> Python worker transport from
+loopback TCP to a Unix domain socket
+(``spark.python.unix.domain.socket.enabled``). Over TCP a Python task
+spent most of its run time waiting on the JVM's side of the socket
+before its first Arrow batch arrived: a trivial pandas UDF job of 4
+tasks (local[4], 4 vCPUs) summed 202-244 ms of task run time over TCP
+and 38-88 ms over the socket, with 11-20 ms of JVM CPU in both. PySpark
+names each socket ``.<uuid4>.sock`` (42 characters) inside
+``spark.python.unix.domain.socket.dir``, an AF_UNIX path holds at most
+107 bytes, and Spark refuses a directory of 61 or more characters. So
+the directory is chosen here (:func:`_socket_dir`) rather than left to
+Spark's ``java.io.tmpdir``, which a deep ``-Djava.io.tmpdir`` would
+push past the limit and fail every Python UDF. A cluster opts in
+through ``SPARK_GRAFT_EXTRA_CONF`` with both keys, as it does for the
+daemon.
+
+``spark.python.sql.dataFrameDebugging.enabled`` is off in
+:data:`ENGINE_CONF`. With it on, every ``Column`` method and ``F.col``
+captures the Python call site for the JVM (``getActiveSession``, a
+conf read, ``PySparkCurrentOrigin.set``/``clear`` and a stack walk):
+``col == col`` issued 37 py4j commands instead of 7 and took ~2.2 ms
+instead of ~0.7 ms (local[4], 4 vCPUs). What is lost is the "called
+from" line of an ``AnalysisException``, which for an engine query
+points into the engine anyway; error classes and messages are
+unchanged. The setting is static, and PySpark reads it once per
+process, from the active session, at the first decorated call.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -75,7 +106,31 @@ ENGINE_CONF: dict[str, str] = {
     # per warm pass at sf0.01 on local[4], and none at 2,000 entries. A
     # class averages ~2.3 KB of bytecode, so 2,000 cost a few MB.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # No Python call-site capture per Column op (module docstring).
+    # Static: it takes effect at session start, so apply_engine_conf
+    # cannot set it on a driver's running session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+# Spark rejects a spark.python.unix.domain.socket.dir of 61 or more
+# characters, which keeps "<dir>/.<uuid4>.sock" within the 107 bytes of
+# an AF_UNIX path.
+_SOCKET_DIR_MAX = 60
+
+
+@functools.cache
+def _socket_dir() -> str:
+    """This process's directory for the Python transport's Unix domain
+    sockets, ``<base>/sg-XXXXXXXX``: under its temp dir when that fits
+    Spark's limit, else under ``/tmp``. It is removed at exit: a driver
+    that exits without ``spark.stop()`` leaves its accumulator socket
+    behind."""
+    base = tempfile.gettempdir()
+    if len(os.fsencode(base)) + len("/sg-XXXXXXXX") > _SOCKET_DIR_MAX:
+        base = "/tmp"
+    path = tempfile.mkdtemp(prefix="sg-", dir=base)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def _derived_shuffle_partitions(cpus: int) -> int:
@@ -159,6 +214,9 @@ def get_spark(
         conf.update(extra_conf)
     if master.startswith("local"):
         conf.setdefault("spark.python.daemon.module", "etl_spark_eks_spark.daemon")
+        conf.setdefault("spark.python.unix.domain.socket.enabled", "true")
+        if "spark.python.unix.domain.socket.dir" not in conf:
+            conf["spark.python.unix.domain.socket.dir"] = _socket_dir()
         conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
             filter(None, (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")))
         )
@@ -190,8 +248,20 @@ def scoped(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     ``apply_engine_conf`` profile); copying ``conf.getAll`` in Python
     costs ~20 ms a call. SparkContext, catalog and cache stay shared. A
     frame built on the returned session keeps its settings through the
-    caller's action."""
-    sess = spark.__class__(spark.sparkContext, spark._jsparkSession.cloneSession())
+    caller's action.
+
+    A clone has its own ``StreamingQueryManager``, so the caller's
+    ``StreamingQueryListener``s are registered on it too: a stream the
+    query starts on the scoped session reaches them once per event
+    (each manager forwards only its own session's queries)."""
+    jsess = spark._jsparkSession
+    jclone = jsess.cloneSession()
+    listeners = jsess.streams().listListeners()
+    if listeners:
+        streams = jclone.streams()
+        for listener in listeners:
+            streams.addListener(listener)
+    sess = spark.__class__(spark.sparkContext, jclone)
     for k, v in conf.items():
         sess.conf.set(k, v)
     return sess

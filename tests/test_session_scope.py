@@ -78,3 +78,45 @@ def test_collected_result_outlives_table_rewrite(spark, sf_dir):
     finally:
         want = sorted(tuple(r) for r in q(spark, sf_dir).collect())
     assert want and got == want
+
+
+def test_scoped_streams_reach_the_callers_listeners(spark, sf_dir):
+    """A stream started on a scoped session reports every progress
+    event exactly once to a StreamingQueryListener on the caller
+    (a clone has its own StreamingQueryManager)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from etl_spark_eks_spark.streaming.stream_ops import events_stream_batched
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.seen = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.seen.append((str(event.progress.runId), event.progress.batchId))
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        sess = scoped(spark, {WIDTH: "2"})
+        q = (
+            events_stream_batched(sess, sf_dir)
+            .writeStream.format("noop")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    want = sorted((str(p.runId), p.batchId) for p in q.recentProgress)
+    assert want and sorted(listener.seen) == want

@@ -45,7 +45,35 @@ def test_lsh_config_selected_from_c118_plan(spark):
     the winner fails here before it can skew recall."""
     from etl_spark_eks_spark.operators.dedup import select_lsh_config
 
-    assert select_lsh_config(spark) == (16, 2)
+    assert select_lsh_config() == (16, 2)
+
+
+def test_driver_lsh_pick_equals_c118_table_pick(spark, sf_dir):
+    """select_lsh_config picks on the driver from _c118_grid(); for
+    every (recall_floor, at_jaccard) the grid holds, that pick must be
+    the one the same rule picks from q_c118's Spark table."""
+    from pyspark.sql import Window
+
+    from etl_spark_eks_spark.operators.dedup import _c118_grid, select_lsh_config
+
+    plan = registry.QUERIES["q_c118_lsh_parameter_plan"](spark, sf_dir)
+    cases = plan.select(
+        F.col("p_candidate").alias("floor"), F.col("jaccard").alias("at")
+    ).distinct()
+    first = Window.partitionBy("floor", "at").orderBy("signature_size", "bands")
+    table_picks = {
+        (r["floor"], r["at"]): (r["bands"], r["rows_per_band"])
+        for r in cases.join(
+            plan, (F.col("jaccard") == F.col("at")) & (F.col("p_candidate") >= F.col("floor"))
+        )
+        .withColumn("rn", F.row_number().over(first))
+        .filter("rn = 1")
+        .collect()
+    }
+    assert len(table_picks) > 1
+    assert set(table_picks) == {(p, j) for _b, _r, _s, j, p, _t in _c118_grid()}
+    for (floor, at), pick in table_picks.items():
+        assert select_lsh_config(floor, at) == pick, (floor, at)
 
 
 def test_minhash_candidates_superset_of_near_dups(spark, sf_dir):

@@ -5,7 +5,8 @@ Runs selected registered queries exactly like bench.py (same session
 profile, same noop-sink action, catalog cleared between queries), but
 AFTER each run pulls the Spark UI REST API to decompose wall time into
 the individual JOBS the query submitted — names, durations, task
-counts, task run seconds and the JVM CPU seconds within them — and
+counts, task run seconds, the JVM CPU seconds within them and the
+rest (``wait_s``: Python-worker time and waiting) — and
 optionally writes `explain("formatted")` to plans/<tag>/<key>_<when>.txt.
 
 This answers the question BENCH_DETAIL cannot: when a 4-second query
@@ -112,7 +113,8 @@ def main() -> int:
                 # Task time per stage, summed over its attempts:
                 # executorRunTime (ms) is the tasks' wall time,
                 # executorCpuTime (ns) only the JVM's share of it, so a
-                # Python stage's worker time shows as run_s - cpu_s. A
+                # Python stage's worker time, and any wait on the
+                # Python transport, shows as wait_s = run_s - cpu_s. A
                 # reused shuffle stage keeps its id in later jobs, where
                 # it is skipped; it counts for the first job that lists it.
                 stage_time: dict[int, list[float]] = {}
@@ -146,13 +148,16 @@ def main() -> int:
                         ).total_seconds()
                     except (KeyError, ValueError):
                         dur = None
+                    run_s = sum(r for r, _ in ran)
+                    cpu_s = sum(c for _, c in ran)
                     job_rows.append(
                         {
                             "job": j["jobId"],
                             "sec": dur,
                             "tasks": j.get("numTasks"),
-                            "run_s": round(sum(r for r, _ in ran), 3),
-                            "cpu_s": round(sum(c for _, c in ran), 3),
+                            "run_s": round(run_s, 3),
+                            "cpu_s": round(cpu_s, 3),
+                            "wait_s": round(run_s - cpu_s, 3),
                             "desc": (j.get("description") or j.get("name", ""))[
                                 :100
                             ],
